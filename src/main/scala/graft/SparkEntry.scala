@@ -82,8 +82,7 @@ object SparkEntry {
     * synthetic page — exercises plist decode, HTML rewrite, outlinks. */
   def entry(spark: SparkSession): DataFrame = {
     GraftFunctions.register(spark)
-    val wiki = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
-      "/root/reference/webarchive/sample_data/Wikipedia.webarchive"))
+    val wiki = Fixtures.wikipediaArchive()
     val synth = SyntheticCorpus.htmlOf(42L, 7L, 1000L).getBytes("UTF-8")
     val df = spark.createDataFrame(Seq(
       ("https://en.wikipedia.org/wiki/Main_Page", wiki),
@@ -325,8 +324,7 @@ object SparkEntry {
     // ---- crawl / extraction operators -----------------------------------------
     "extract_html_parity" -> ((s, d) => {
       GraftFunctions.register(s)
-      val wiki = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
-        "/root/reference/webarchive/sample_data/Wikipedia.webarchive"))
+      val wiki = Fixtures.wikipediaArchive()
       s.createDataFrame(Seq(("https://en.wikipedia.org/wiki/Main_Page", wiki)))
         .toDF("url", "html")
         .select(col("url"),
@@ -356,8 +354,7 @@ object SparkEntry {
 
     "extract_files_manifest" -> ((s, d) => {
       GraftFunctions.register(s)
-      val wiki = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
-        "/root/reference/webarchive/sample_data/Wikipedia.webarchive"))
+      val wiki = Fixtures.wikipediaArchive()
       s.createDataFrame(Seq(("https://en.wikipedia.org/wiki/Main_Page", wiki)))
         .toDF("url", "html")
         .select(explode(GraftFunctions.extract_files(col("html"), lit("page.html"))).as("f"))
@@ -366,8 +363,7 @@ object SparkEntry {
     }),
     "mime_classes" -> ((s, d) => {
       GraftFunctions.register(s)
-      val wiki = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
-        "/root/reference/webarchive/sample_data/Wikipedia.webarchive"))
+      val wiki = Fixtures.wikipediaArchive()
       s.createDataFrame(Seq(("https://en.wikipedia.org/wiki/Main_Page", wiki)))
         .toDF("url", "html")
         .select(explode(GraftFunctions.parse_webarchive(col("html")).getField("subresources")).as("r"))
@@ -463,8 +459,7 @@ object SparkEntry {
       // (sorted relpath:sha256 lines) — deterministic across partitionings
       // because names derive from urls and bytes from seeded content.
       import java.nio.file.{Files, Paths}
-      val wiki = Files.readAllBytes(Paths.get(
-        "/root/reference/webarchive/sample_data/Wikipedia.webarchive"))
+      val wiki = Fixtures.wikipediaArchive()
       val synth = (0L until 20L).map(i =>
         (SyntheticCorpus.urlOf(42L, i), SyntheticCorpus.htmlOf(42L, i, 100L).getBytes("UTF-8")))
       val rows: Seq[(String, Array[Byte])] =

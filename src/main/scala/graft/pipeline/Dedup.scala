@@ -52,28 +52,13 @@ object Dedup {
 
   /** MinHash signatures as (id, sig array<long>): ONE expression pass per
     * document — no shingle rows materialize or shuffle, no per-seed
-    * aggregate columns. Hash-exact vs [[minhashSignaturesAgg]]
-    * (differential-tested), so LSH buckets are unchanged. */
+    * aggregate columns. Hash-exact vs the explode + aggregate formulation
+    * kept in test scope (differential-tested), so LSH buckets are
+    * unchanged. */
   def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
                         shingleK: Int, numHashes: Int): DataFrame =
     df.select(col(idCol).as("id"),
       bridge(graft.sql.MinhashSigsExpr(bridge(col(textCol)), shingleK, numHashes)).as("sig"))
-
-  /** The explode + hash-aggregate formulation (map-side combine, one
-    * shuffle keyed by id). Kept as the differential reference for
-    * [[minhashSignatures]]; same results, ~5x the cost. */
-  private[pipeline] def minhashSignaturesAgg(df: DataFrame, idCol: String, textCol: String,
-                                             shingleK: Int, numHashes: Int): DataFrame = {
-    val exploded = df.select(col(idCol).as("id"),
-        explode(array_distinct(shingles(col(textCol), shingleK))).as("s"))
-      .select(col("id"), xxhash64(col("s")).as("h"))
-    val seeds = (0 until numHashes).map(i => 0x9E3779B97F4A7C15L * (i + 1))
-    val aggs = seeds.zipWithIndex.map { case (s, i) =>
-      min(xxhash64(col("h").bitwiseXOR(lit(s)))).as(s"m$i")
-    }
-    exploded.groupBy(col("id")).agg(aggs.head, aggs.tail: _*)
-      .select(col("id"), array((0 until numHashes).map(i => col(s"m$i")): _*).as("sig"))
-  }
 
   /** Candidate near-dup pairs via banded MinHash LSH.
     * numHashes = bands * rowsPerBand. Output: (id_a, id_b) with id_a<id_b,
@@ -134,28 +119,12 @@ object Dedup {
 
   /** 64-bit SimHash signatures as (id, sig): ONE expression pass per
     * document (term-frequency-weighted bit votes over token hashes).
-    * Hash-exact vs [[simhashSignaturesAgg]] for non-empty documents; an
-    * all-whitespace document gets sig 0 here (the aggregate formulation
-    * dropped it — no token rows to group). */
+    * Hash-exact vs the explode + 64-vote aggregate formulation kept in test
+    * scope for non-empty documents; an all-whitespace document gets sig 0
+    * here (the aggregate formulation drops it — no token rows to group). */
   def simhashSignatures(df: DataFrame, idCol: String, textCol: String): DataFrame =
     df.select(col(idCol).as("id"),
       bridge(graft.sql.SimhashSigExpr(bridge(col(textCol)))).as("sig"))
-
-  /** Explode + 64-vote aggregate formulation, kept as the differential
-    * reference for [[simhashSignatures]]. */
-  private[pipeline] def simhashSignaturesAgg(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val exploded = df.select(col(idCol).as("id"),
-        explode(regexp_extract_all(lower(col(textCol)), lit("\\S+"), lit(0))).as("t"))
-      .select(col("id"), xxhash64(col("t")).as("h"))
-    val aggs = (0 until 64).map { b =>
-      sum(when(col("h").bitwiseAND(lit(1L << b)) =!= 0L, 1L).otherwise(-1L)).as(s"v$b")
-    }
-    val votes = exploded.groupBy(col("id")).agg(aggs.head, aggs.tail: _*)
-    val sig = (0 until 64).map { b =>
-      when(col(s"v$b") > 0, lit(1L << b)).otherwise(0L)
-    }.reduce((a, c) => a.bitwiseOR(c))
-    votes.select(col("id"), sig.as("sig"))
-  }
 
   /** SimHash near-dup pairs with hamming distance <= maxHamming, found by
     * banding the 64-bit signature into (maxHamming+1) chunks (pigeonhole:
@@ -163,28 +132,20 @@ object Dedup {
     *
     * Zero-token documents (sig 0 — every empty/whitespace-only doc) are
     * filtered before banding: on a blank-heavy web corpus they would all
-    * collide in every band at hamming 0 and emit N(N-1)/2 pairs (ADVICE
-    * r2). This restores the drop semantics of the aggregate formulation.
+    * collide in every band at hamming 0 and emit N(N-1)/2 pairs. This
+    * restores the drop semantics of the aggregate formulation.
     *
     * Hot (band,bucket) groups — 16-bit band buckets do NOT survive 10^10
-    * rows (VERDICT r2 #3) — are sub-blocked: see [[simhashCandidatePairs]]. */
+    * rows — are sub-banded: see [[simhashCandidatePairs]]. */
   def simhashNearDups(df: DataFrame, idCol: String, textCol: String,
                       maxHamming: Int = 3,
                       hotBucketThreshold: Int = 4096): DataFrame = {
     val sigs = simhashSignatures(df, idCol, textCol).filter(col("sig") =!= 0L)
-    // a (band,bucket) group holds at most one row per input doc, so with
-    // <= threshold docs NO bucket can be hot: skip the histogram pass
-    // entirely (VERDICT r3 #4 — it doubled the sandbox-scale driver cost
-    // paying for a blowup that cannot happen). limit(k+1).count() bounds
-    // the probe at k+1 rows even for derived (non-parquet) inputs, where a
-    // full count() would recompute the whole upstream lineage.
-    val probeRows = math.min(hotBucketThreshold.toLong + 1, Int.MaxValue).toInt
-    val canBeHot = df.limit(probeRows).count() > hotBucketThreshold
-    // hamming filter BEFORE the pair distinct (guide §2.3 — shuffle fewer
-    // bytes): a random band collision almost always fails the <=k check,
-    // so filtering first drops most candidate rows before they shuffle;
-    // filter-then-distinct == distinct-then-filter for a row-wise predicate
-    simhashCandidatePairs(sigs, maxHamming, hotBucketThreshold, canBeHot)
+    // hamming filter BEFORE the pair distinct: a random band collision
+    // almost always fails the <=k check, so filtering first drops most
+    // candidate rows before they shuffle; filter-then-distinct ==
+    // distinct-then-filter for a row-wise predicate
+    simhashCandidatePairs(sigs, maxHamming, hotBucketThreshold)
       .select(col("id_a"), col("id_b"),
         bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).as("hamming"))
       .filter(col("hamming") <= maxHamming)
@@ -192,7 +153,8 @@ object Dedup {
   }
 
   /** Candidate pairs from banded simhash signatures, with BOUNDED bucket
-    * blowup. sigs: (id: long/any, sig: long).
+    * blowup. sigs: (id: long/any, sig: long). Pairs sharing several band
+    * buckets (or sub-buckets) appear once per shared key.
     *
     * Buckets with more than `hotBucketThreshold` members are refined by
     * sub-banding the REMAINING 48 bits (the signature with the matched
@@ -207,287 +169,138 @@ object Dedup {
     * refinement level bounds the (band,bucket,sub,subbucket) key space at
     * 2^16 * (k+1)^2 * 2^12 ~ 4.3e9 keys for k=3 — enough for the 10^10-row
     * design point (deeper recursion is the same construction if ever
-    * needed). Costs one extra aggregation over the banded rows (8 bytes
-    * per row, map-side combined) to find hot buckets; the cold path is
-    * byte-identical to the unbounded plan. */
+    * needed). Cold buckets keep one fixed (sub, subbucket), so their pairs
+    * are exactly the plain banded self-join's. */
   def simhashCandidatePairs(sigs: DataFrame, maxHamming: Int,
-                            hotBucketThreshold: Int,
-                            checkHot: Boolean = true): DataFrame = {
+                            hotBucketThreshold: Int): DataFrame = {
+    val nBands = maxHamming + 1
+    val subBits = math.max(1, (64 - 64 / nBands) / nBands)
+    val banded = simhashBanded(sigs, maxHamming)
+    val subBuckets = (0 until nBands).map { j =>
+      shiftrightunsigned(col("rem"), j * subBits).bitwiseAND(lit((1L << subBits) - 1))
+    }
+    val rows = withHotGroups(banded, hotBucketThreshold)
+      .select(col("id"), col("sig"), col("band"), col("bucket"),
+        posexplode(when(col("n").isNotNull, array(subBuckets: _*)).otherwise(array(lit(0L)))))
+      .toDF("id", "sig", "band", "bucket", "sub", "subbucket")
+      // both self-join sides then read this one shuffle, so the signatures
+      // and the histogram are computed once, not once per side
+      .repartition(col("band"), col("bucket"), col("sub"), col("subbucket"))
+    rows.toDF("id_a", "sig_a", "band", "bucket", "sub", "subbucket")
+      .join(rows.toDF("id_b", "sig_b", "band", "bucket", "sub", "subbucket"),
+            Seq("band", "bucket", "sub", "subbucket"))
+      .filter(col("id_a") < col("id_b"))
+      .select("id_a", "id_b", "sig_a", "sig_b")
+  }
+
+  /** (id, sig, band, bucket, rem): one row per simhash band. `bucket` is
+    * the band's 64/(maxHamming+1) bits; `rem` is the signature with them
+    * compacted out, where the <=maxHamming differing bits of any true
+    * within-bucket pair live. */
+  private def simhashBanded(sigs: DataFrame, maxHamming: Int): DataFrame = {
     val nBands = maxHamming + 1
     val bandBits = 64 / nBands
-    val remBits = 64 - bandBits
-    val subBits = math.max(1, remBits / nBands)
     val bandStructs = (0 until nBands).map { b =>
       val bucket = shiftrightunsigned(col("sig"), b * bandBits)
         .bitwiseAND(lit((1L << bandBits) - 1))
-      // the signature with band b's bits compacted out: the <=maxHamming
-      // differing bits of any true within-bucket pair live here
       val low = if (b == 0) lit(0L)
                 else col("sig").bitwiseAND(lit((1L << (b * bandBits)) - 1))
       val high = if (b == nBands - 1) lit(0L)
                  else shiftleft(shiftrightunsigned(col("sig"), (b + 1) * bandBits), b * bandBits)
       struct(bucket.as("bucket"), low.bitwiseOR(high).as("rem"))
     }
-    val bandedRaw = sigs.select(col("id"), col("sig"), posexplode(array(bandStructs: _*)))
+    sigs.select(col("id"), col("sig"), posexplode(array(bandStructs: _*)))
       .select(col("id"), col("sig"), col("pos").as("band"),
               col("col.bucket").as("bucket"), col("col.rem").as("rem"))
-    // checkHot=false: the caller proved no bucket can exceed the threshold
-    // (e.g. fewer input rows than the threshold) — candidate generation is
-    // the plain banded self-join, no histogram, no persist
-    if (!checkHot) {
-      val cold = bandedRaw.select("id", "sig", "band", "bucket")
-      return cold.toDF("id_a", "sig_a", "band", "bucket")
-        .join(cold.toDF("id_b", "sig_b", "band", "bucket"), Seq("band", "bucket"))
-        .filter(col("id_a") < col("id_b"))
-        .select("id_a", "id_b", "sig_a", "sig_b")
-    }
-    // the banded frame feeds the histogram, the hot-key join and two
-    // self-join sides: persist it so they share one signature computation
-    // (disk-backed; freed by the context cleaner once unreferenced)
-    val banded = bandedRaw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val hotKeys = banded.groupBy(col("band"), col("bucket"))
-      .agg(count(lit(1)).as("__n")).filter(col("__n") > hotBucketThreshold)
-      .select(col("band"), col("bucket"), lit(true).as("__hot"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // histogram-driven plan branch: when the histogram proves NO bucket is
-    // hot (the common diverse-corpus regime), the mark join and the whole
-    // sub-banding machinery would run as 4-5 empty-input stages — skip
-    // them outright. hotKeys is tiny (one row per hot group) and persisted,
-    // so the probe and the mark join share one histogram pass.
-    if (hotKeys.isEmpty) {
-      val cold = banded.select("id", "sig", "band", "bucket")
-      return cold.toDF("id_a", "sig_a", "band", "bucket")
-        .join(cold.toDF("id_b", "sig_b", "band", "bucket"), Seq("band", "bucket"))
-        .filter(col("id_a") < col("id_b"))
-        .select("id_a", "id_b", "sig_a", "sig_b")
-    }
-    val marked = banded.join(hotKeys, Seq("band", "bucket"), "left")
-    val cold = marked.filter(col("__hot").isNull).select("id", "sig", "band", "bucket")
-    val coldPairs = cold.toDF("id_a", "sig_a", "band", "bucket")
-      .join(cold.toDF("id_b", "sig_b", "band", "bucket"), Seq("band", "bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b", "sig_a", "sig_b")
-    val subStructs = (0 until nBands).map { j =>
-      shiftrightunsigned(col("rem"), j * subBits).bitwiseAND(lit((1L << subBits) - 1))
-    }
-    val hotBanded = marked.filter(col("__hot").isNotNull)
-      .select(col("id"), col("sig"), col("band"), col("bucket"),
-              posexplode(array(subStructs: _*)))
-      .toDF("id", "sig", "band", "bucket", "sub", "subbucket")
-    val hotPairs = hotBanded.toDF("id_a", "sig_a", "band", "bucket", "sub", "subbucket")
-      .join(hotBanded.toDF("id_b", "sig_b", "band", "bucket", "sub", "subbucket"),
-            Seq("band", "bucket", "sub", "subbucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b", "sig_a", "sig_b")
-    coldPairs.unionByName(hotPairs)
+  }
+
+  /** (band, bucket, n): rows per LSH band bucket. */
+  private def bandHistogram(banded: DataFrame): DataFrame =
+    banded.groupBy(col("band"), col("bucket")).agg(count(lit(1)).as("n"))
+
+  /** `banded` plus column n: its group's size when the group holds more
+    * than `threshold` rows, else null. The histogram is joined in, never
+    * collected, so the plan has no driver-side branch. */
+  private def withHotGroups(banded: DataFrame, threshold: Int): DataFrame =
+    banded.join(bandHistogram(banded).filter(col("n") > threshold),
+      Seq("band", "bucket"), "left")
+
+  private def hotStats(banded: DataFrame, threshold: Int): (Long, Long) = {
+    val r = bandHistogram(banded).agg(
+      sum(when(col("n") > threshold, 1L).otherwise(0L)), max(col("n"))).collect()(0)
+    (if (r.isNullAt(0)) 0L else r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
   }
 
   /** Diagnostic: (hot (band,bucket) groups, max group size) of the simhash
     * band histogram at the given threshold — the SAME banding as
-    * [[simhashCandidatePairs]] (bucket = 16-bit band slice of the
-    * signature, zero-sig rows dropped like [[simhashNearDups]]). The bench
-    * records this next to the dedup timing as evidence that the hot-bucket
-    * sub-banding fired NATURALLY (non-zero hot groups), not just under
-    * forced spec thresholds. */
+    * [[simhashNearDups]]. The bench records this next to the dedup timing
+    * as evidence that the hot-bucket sub-banding fired NATURALLY (non-zero
+    * hot groups), not just under forced spec thresholds. */
   def simhashHotStats(df: DataFrame, idCol: String, textCol: String,
                       maxHamming: Int = 3,
-                      hotBucketThreshold: Int = 4096): (Long, Long) = {
-    val sigs = simhashSignatures(df, idCol, textCol).filter(col("sig") =!= 0L)
-    val nBands = maxHamming + 1
-    val bandBits = 64 / nBands
-    val bandCols = (0 until nBands).map { b =>
-      shiftrightunsigned(col("sig"), b * bandBits).bitwiseAND(lit((1L << bandBits) - 1))
-    }
-    val hist = sigs.select(posexplode(array(bandCols: _*)))
-      .toDF("band", "bucket")
-      .groupBy("band", "bucket").agg(count(lit(1)).as("n"))
-    val r = hist.agg(
-      sum(when(col("n") > hotBucketThreshold, 1L).otherwise(0L)).as("hot"),
-      max(col("n")).as("mx")).collect()(0)
-    (if (r.isNullAt(0)) 0L else r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-  }
+                      hotBucketThreshold: Int = 4096): (Long, Long) =
+    hotStats(simhashBanded(simhashSignatures(df, idCol, textCol).filter(col("sig") =!= 0L),
+      maxHamming), hotBucketThreshold)
 
   /** Diagnostic twin of [[simhashHotStats]] for the embedding LSH banding
-    * (same per-band signature seeds as [[embeddingNearDups]]). */
+    * of [[embeddingNearDups]]. */
   def embeddingHotStats(df: DataFrame, idCol: String, vecCol: String,
                         bands: Int = 8, planesPerBand: Int = 4,
                         dim: Int = 64, seed: Long = 42L,
-                        hotBucketThreshold: Int = 4096): (Long, Long) = {
+                        hotBucketThreshold: Int = 4096): (Long, Long) =
+    hotStats(embeddingBanded(df, idCol, vecCol, bands, planesPerBand, dim, seed),
+      hotBucketThreshold)
+
+  /** (id, v, band, bucket): one row per LSH band, each with its own
+    * `planesPerBand` seeded hyperplanes. Null vectors have no bucket and
+    * are dropped. */
+  private def embeddingBanded(df: DataFrame, idCol: String, vecCol: String, bands: Int,
+                              planesPerBand: Int, dim: Int, seed: Long): DataFrame = {
     val bandCols = (0 until bands).map { b =>
       Similarity.hyperplaneSignature(col(vecCol), planesPerBand, dim,
         seed + 0x51ED2701L * (b + 1))
     }
-    val hist = df.select(posexplode(array(bandCols: _*)))
-      .toDF("band", "bucket")
-      .groupBy("band", "bucket").agg(count(lit(1)).as("n"))
-    val r = hist.agg(
-      sum(when(col("n") > hotBucketThreshold, 1L).otherwise(0L)).as("hot"),
-      max(col("n")).as("mx")).collect()(0)
-    (if (r.isNullAt(0)) 0L else r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+    df.select(col(idCol).as("id"), col(vecCol).as("v"), posexplode(array(bandCols: _*)))
+      .toDF("id", "v", "band", "bucket")
+      .filter(col("bucket").isNotNull)
   }
+
+  /** Extra hyperplane sign bits that split a hot embedding band bucket. */
+  private val RefinePlanes = 8
 
   /** Embedding cosine near-dup via MULTI-BAND random-hyperplane LSH:
     * `bands` independent signatures of `planesPerBand` sign bits each; a
-    * pair is a candidate if it collides in ANY band (posexplode + band
-    * bucket join, the same shape as MinHash banding). A single wide
+    * pair is a candidate if it collides in ANY band. A single wide
     * signature requires ALL bits to agree — P(all planes)^1 — so recall
     * collapses near the threshold; banding lifts it to
-    * 1-(1-p^planesPerBand)^bands while each band join stays a cheap
-    * equality shuffle. Candidates are exact-cosine verified. */
+    * 1-(1-p^planesPerBand)^bands. Candidates are exact-cosine verified.
+    *
+    * The vectors ride the banding explode, and every (band,bucket) group
+    * is verified group-locally ([[groupLocalVerify]]): pairs are in-task
+    * compute and only survivors (cosine >= threshold) leave the task.
+    *
+    * Hot groups (more than `hotBucketThreshold` rows) are split by 8 extra
+    * hyperplane sign bits (an independent seed no band uses): a 16-bit
+    * band over 10^10 rows averages ~1.5e5 rows per bucket even unskewed.
+    * Unlike simhash sub-banding this is NOT recall-free: a true pair inside
+    * a hot bucket must also agree on the refinement planes — P(agree) =
+    * (1 - theta/pi)^8, e.g. ~0.96 at cosine 0.99 — but the pair is still
+    * found through any of its OTHER colliding bands, so the end-to-end
+    * recall loss is bounded by (1 - p^k) on the (rare) all-bands-hot case.
+    * Cold groups are verified whole. */
   def embeddingNearDups(df: DataFrame, idCol: String, vecCol: String,
                         threshold: Double = 0.95, bands: Int = 8,
                         planesPerBand: Int = 4,
                         dim: Int = 64, seed: Long = 42L,
-                        hotBucketThreshold: Int = 4096,
-                        refinePlanes: Int = 8,
-                        localVerifyThreshold: Int = 64): DataFrame = {
-    val bandCols = (0 until bands).map { b =>
-      // distinct planes per band: seed offset by band index
-      Similarity.hyperplaneSignature(col(vecCol), planesPerBand, dim,
-        seed + 0x51ED2701L * (b + 1))
-    }
-    // band join + pair-dedup on (id_a, id_b) ONLY — the distinct's shuffle
-    // key is two longs, never the embedding arrays; vectors re-attach to
-    // the (small) surviving candidate set by two hash joins
-    val bandedRaw = df.select(col(idCol).as("id"),
-      posexplode(array(bandCols: _*))).toDF("id", "band", "bucket")
-    val v = df.select(col(idCol).as("id"), col(vecCol).as("v"))
-    // a (band,bucket) group holds at most one row per input doc: with
-    // <= threshold docs no bucket can be hot — skip the histogram pass and
-    // the refinement machinery (VERDICT r3 #4; limit(k+1).count() bounds
-    // the probe even for derived inputs)
-    val probeRows = math.min(hotBucketThreshold.toLong + 1, Int.MaxValue).toInt
-    if (df.limit(probeRows).count() <= hotBucketThreshold) {
-      val pairs = bandedRaw.toDF("id_a", "band", "bucket")
-        .join(bandedRaw.toDF("id_b", "band", "bucket"), Seq("band", "bucket"))
-        .filter(col("id_a") < col("id_b"))
-        .select("id_a", "id_b").distinct()
-      return pairs
-        .join(v.toDF("id_a", "v_a"), Seq("id_a"))
-        .join(v.toDF("id_b", "v_b"), Seq("id_b"))
-        .withColumn("cosine", Similarity.cosine(col("v_a"), col("v_b")))
-        .filter(col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
-    }
-    // histogram + hot-key join + cold self-join sides share one banded
-    // computation (disk-backed; freed by the context cleaner)
-    val banded = bandedRaw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def sparsePlan(): DataFrame = {
-      val pairs = banded.toDF("id_a", "band", "bucket")
-        .join(banded.toDF("id_b", "band", "bucket"), Seq("band", "bucket"))
-        .filter(col("id_a") < col("id_b"))
-        .select("id_a", "id_b").distinct()
-      pairs
-        .join(v.toDF("id_a", "v_a"), Seq("id_a"))
-        .join(v.toDF("id_b", "v_b"), Seq("id_b"))
-        .withColumn("cosine", Similarity.cosine(col("v_a"), col("v_b")))
-        .filter(col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
-    }
-    // Hot (band,bucket) groups are refined with `refinePlanes` EXTRA
-    // hyperplane sign bits (an independent seed no band uses): a 16-bit
-    // band over 10^10 rows averages ~1.5e5 rows per bucket even unskewed,
-    // and the within-bucket equality join would emit ~10^10 pairs per band
-    // (VERDICT r2 #3). Unlike simhash sub-banding this is NOT recall-free:
-    // a true pair inside a hot bucket must also agree on the refinement
-    // planes — P(agree) = (1 - theta/pi)^refinePlanes, e.g. ~0.96 at
-    // cosine 0.99 with 8 planes — but the pair is still found through any
-    // of its OTHER colliding bands, so the end-to-end recall loss is
-    // bounded by (1 - p^k) on the (rare) all-bands-hot case. Cold buckets
-    // are byte-identical to the unbounded plan.
-    // THREE-TIER verify plan, picked per (band,bucket) group from the
-    // histogram (r5; the r4 two-tier plan left "warm" groups hovering just
-    // under the hot threshold on the join path, where a 4k-row group
-    // already emits ~8M pair rows through a distinct + two vector
-    // re-attach joins — ~90M shuffled pairs at the natural-fire bench):
-    //  - SPARSE (n <= localVerifyThreshold): the r2 join shape — pair
-    //    dedup on two longs, vectors re-attached to the candidate set.
-    //    Optimal when groups are small, the normal web regime.
-    //  - WARM (localVerifyThreshold < n <= hotBucketThreshold): verify
-    //    GROUP-LOCALLY — the group's vectors ride the (linear) banding
-    //    shuffle once, pairs are pure in-task compute, only survivors
-    //    (cosine >= threshold) leave the task. No pair ever shuffles.
-    //  - HOT (n > hotBucketThreshold): refine with extra hyperplane bits,
-    //    then group-local verify inside (band,bucket,refine).
-    // The Scala cosine kernel replicates Similarity.cosine's exact IEEE op
-    // order (differential-pinned in PipelineSpec), so survivors from any
-    // tier are bit-identical and the final distinct dedups across tiers.
-    // A group materializes only its ROWS (linear); pair iterators are lazy.
-    // the per-group histogram is tiny (one row per >threshold group) and
-    // drives a DRIVER-SIDE plan branch: its 3-scalar summary tells us
-    // which tiers are actually populated, so empty tiers (the cold
-    // self-join chain when everything is hot, or the whole warm/hot
-    // machinery on a diverse corpus) never enter the plan as 4-6
-    // empty-input stages. The persisted sizes frame is then reused by the
-    // mark join, so the histogram still runs once.
-    val sizes = banded.groupBy(col("band"), col("bucket"))
-      .agg(count(lit(1)).as("__n")).filter(col("__n") > localVerifyThreshold)
-      .select(col("band"), col("bucket"), col("__n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val st = sizes.agg(count(lit(1)).as("g"), sum(col("__n")).as("rows"),
-      max(col("__n")).as("mx"), min(col("__n")).as("mn")).collect()(0)
-    val (bigGroups, bigRows, maxGroup, minGroup) =
-      (st.getLong(0), if (st.isNullAt(1)) 0L else st.getLong(1),
-       if (st.isNullAt(2)) 0L else st.getLong(2),
-       if (st.isNullAt(3)) 0L else st.getLong(3))
-    if (bigGroups == 0L) return sparsePlan() // every group sparse: the r2 join shape
-    val coldEmpty = bigRows == banded.count() // cached count: no recompute
-    val anyHot = maxGroup > hotBucketThreshold
-    val anyWarm = minGroup <= hotBucketThreshold
-    val marked = banded.join(sizes, Seq("band", "bucket"), "left")
-    val coldVerified = if (coldEmpty) None else Some {
-      val cold = marked.filter(col("__n").isNull).select("id", "band", "bucket")
-      val coldPairs = cold.toDF("id_a", "band", "bucket")
-        .join(cold.toDF("id_b", "band", "bucket"), Seq("band", "bucket"))
-        .filter(col("id_a") < col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-      coldPairs
-        .join(v.toDF("id_a", "v_a"), Seq("id_a"))
-        .join(v.toDF("id_b", "v_b"), Seq("id_b"))
-        .withColumn("cosine", Similarity.cosine(col("v_a"), col("v_b")))
-        .filter(col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
-    }
-    val refineSeed = seed ^ 0x6A09E667F3BCC909L
-    val warmHot = if (coldEmpty) {
-      // EVERY banded row lands in a group-local tier, so the vectors can
-      // ride the banding explode directly (one corpus pass) instead of
-      // re-attaching by an id join against the banded cache — guide §8:
-      // move the heavy bytes once, decide with the (tiny, persisted)
-      // histogram. Same rows: band signatures and the refine signature
-      // are pure expressions of the vector.
-      val rows = df.select(col(idCol).as("id"), col(vecCol).as("v"),
-          posexplode(array(bandCols: _*)))
-        .toDF("id", "v", "band", "bucket")
-        .join(sizes, Seq("band", "bucket"))
-      val refineCol =
-        if (!anyHot) lit(0L)
-        else when(col("__n") > hotBucketThreshold,
-          Similarity.hyperplaneSignature(col("v"), refinePlanes, dim, refineSeed))
-          .otherwise(lit(0L))
-      rows.select(col("id"), col("v"), col("band"), col("bucket"),
-        refineCol.as("refine"))
-    } else {
-      val warmRows = marked.filter(col("__n").isNotNull && col("__n") <= hotBucketThreshold)
-        .select("id", "band", "bucket")
-        .join(v, Seq("id"))
-        .select(col("id"), col("v"), col("band"), col("bucket"), lit(0L).as("refine"))
-      val hotRows = if (!anyHot) None else Some(
-        marked.filter(col("__n") > hotBucketThreshold)
-          .select("id", "band", "bucket")
-          .join(v, Seq("id"))
-          .withColumn("refine",
-            Similarity.hyperplaneSignature(col("v"), refinePlanes, dim, refineSeed))
-          .select("id", "v", "band", "bucket", "refine"))
-      (anyWarm, anyHot) match {
-        case (true, false) => warmRows
-        case (false, true) => hotRows.get
-        case _             => warmRows.unionByName(hotRows.get)
-      }
-    }
-    val localVerified = groupLocalVerify(warmHot, threshold)
-    coldVerified.map(_.unionByName(localVerified)).getOrElse(localVerified).distinct()
+                        hotBucketThreshold: Int = 4096): DataFrame = {
+    val banded = embeddingBanded(df, idCol, vecCol, bands, planesPerBand, dim, seed)
+    val refine = Similarity.hyperplaneSignature(col("v"), RefinePlanes, dim,
+      seed ^ 0x6A09E667F3BCC909L)
+    val rows = withHotGroups(banded, hotBucketThreshold)
+      .select(col("id"), col("v"), col("band"), col("bucket"),
+        when(col("n").isNotNull, refine).otherwise(lit(0L)).as("refine"))
+    // a pair sharing several groups survives once per group
+    groupLocalVerify(rows, threshold).distinct()
   }
 
   /** SQL-`<`-compatible ordering for id values (long/int/string cover the
@@ -540,11 +353,10 @@ object Dedup {
     * (id_a, id_b, cosine) for same-group pairs with cosine >= threshold,
     * id_a < id_b. Input columns: (id, v, band, bucket, refine). A
     * double-typed vector column is read as doubles and verified with the
-    * double kernel (bit-matching Similarity.cosine on array<double>) —
-    * the float-only getSeq cast crashed warm/hot groups on double
-    * embeddings (r5 advisory). */
+    * double kernel (bit-matching Similarity.cosine on array<double>).
+    * A group materializes only its ROWS (linear); the pair iterator is
+    * lazy. */
   private def groupLocalVerify(rows: DataFrame, threshold: Double): DataFrame = {
-    val spark = rows.sparkSession
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val idType = rows.schema("id").dataType
@@ -556,8 +368,8 @@ object Dedup {
       StructField("id_a", idType), StructField("id_b", idType),
       StructField("cosine", DoubleType)))
     // group key as a primitive tuple, not a concatenated string: the key
-    // is built once per banded row, so the string alloc+hash showed up at
-    // the natural-fire bench scale
+    // is built once per banded row, so a string alloc+hash shows up in
+    // the profile at bench scale
     implicit val keyEnc = org.apache.spark.sql.Encoders.tuple(
       org.apache.spark.sql.Encoders.scalaInt,
       org.apache.spark.sql.Encoders.scalaLong,

@@ -125,20 +125,12 @@ object Similarity {
     * aggregate) walks Catalyst's interpreted eval per element — ~100x
     * slower for planes*dim multiply-adds. Bit math is identical
     * (sequential double fold, float->double per element), so signatures —
-    * and every LSH bucket/oracle downstream — are unchanged. */
+    * and every LSH bucket/oracle downstream — are unchanged; the HOF
+    * formulation is kept in test scope as the differential reference. */
   def hyperplaneSignature(vec: Column, planes: Int, dim: Int, seed: Long): Column =
     org.apache.spark.sql.GraftColumnBridge.column(
       HyperplaneSigExpr(org.apache.spark.sql.GraftColumnBridge.expression(vec),
         planes, dim, seed))
-
-  /** Reference (HOF-column) formulation, kept for the differential spec. */
-  private[pipeline] def hyperplaneSignatureHof(vec: Column, planes: Int, dim: Int, seed: Long): Column = {
-    val bits = (0 until planes).map { p =>
-      val plane = array((0 until dim).map(i => lit(planeComponent(p, i, seed))): _*)
-      when(dot(vec, plane) >= 0, lit(1L << p)).otherwise(0L)
-    }
-    bits.reduce((a, b) => a.bitwiseOR(b))
-  }
 
   /** Brute-force cosine top-k for one query vector. Deterministic
     * tie-break on id. Plan: scan -> project cosine -> TakeOrdered(k). */

@@ -8,7 +8,11 @@ import java.security.MessageDigest
   * the extracted tree against the reference-generated golden manifest. */
 class ExtractCliSpec extends AnyFunSuite {
 
-  private val wiki = "/root/reference/webarchive/sample_data/Wikipedia.webarchive"
+  private lazy val wiki: String = {
+    val p = Files.createTempFile("wikipedia", ".webarchive")
+    Files.write(p, Fixtures.wikipediaArchive())
+    p.toString
+  }
 
   private def sha256(b: Array[Byte]): String =
     MessageDigest.getInstance("SHA-256").digest(b).map("%02x".format(_)).mkString

@@ -87,31 +87,30 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(scanned <= 8, s"probe must read <= nProbe cell dirs, scanned=$scanned")
   }
 
-  test("dedup cold path (checkHot=false) carries no histogram aggregate") {
-    import spark.implicits._
-    val sigs = (1 to 50).map(i => (i.toLong, i.toLong * 7919)).toDF("id", "sig")
-    val cold = graft.pipeline.Dedup
-      .simhashCandidatePairs(sigs, maxHamming = 3, hotBucketThreshold = 1 << 20,
-        checkHot = false)
-      .queryExecution.executedPlan.toString
-    // the guarded plan has a count-per-(band,bucket) HashAggregate feeding
-    // a __hot join; the proven-cold plan must be the bare banded self-join
-    assert(!cold.contains("HashAggregate"), s"cold path grew an aggregate:\n${cold.take(600)}")
-    assert(!cold.contains("__hot"), "cold path must not join against hot keys")
-    // r6: the guarded path probes the (persisted) histogram on the driver
-    // and drops the hot machinery when NO bucket is hot — this corpus has
-    // none, so its plan must equal the bare self-join shape too
-    val guardedCold = graft.pipeline.Dedup
-      .simhashCandidatePairs(sigs, maxHamming = 3, hotBucketThreshold = 1 << 20)
-      .queryExecution.executedPlan.toString
-    assert(!guardedCold.contains("__hot"),
-      "guarded path must prune the hot machinery when the histogram proves no bucket hot")
-    // ... and keep it when a bucket IS hot (64 identical signatures over
-    // threshold 16 make every band bucket hot)
-    val hotSigs = (1 to 64).map(i => (i.toLong, 0x1234L)).toDF("id", "sig")
-    val guardedHot = graft.pipeline.Dedup
-      .simhashCandidatePairs(hotSigs, maxHamming = 3, hotBucketThreshold = 16)
-      .queryExecution.executedPlan.toString
-    assert(guardedHot.contains("__hot"), "guarded path lost its hot-key machinery")
+  test("simhash and embedding dedup plans: one histogram aggregate, no cached scan") {
+    import org.apache.spark.sql.functions._
+    import graft.pipeline.Dedup
+    // hot band buckets (threshold 4 over 200 rows), so the sub-banding and
+    // refinement run; the histogram is joined into the plan, never
+    // persisted or probed on the driver, and its count aggregate runs once
+    // (the simhash self-join's second side reuses the first side's shuffle)
+    val docs = spark.range(0, 200).select(col("id").as("doc_id"),
+      concat_ws(" ", lit("a b c d e f g h"), (col("id") % 7).cast("string")).as("text"))
+    val vecs = spark.range(0, 200).select(col("id").as("vec_id"),
+      transform(array((0 until 8).map(i => lit(i.toFloat)): _*),
+        (x, i) => sin(x + (col("id") % 5).cast("float") * 0.001f + i).cast("float")).as("embedding"))
+    for ((name, df) <- Seq(
+        "simhash" -> Dedup.simhashNearDups(docs, "doc_id", "text", hotBucketThreshold = 4),
+        "embedding" -> Dedup.embeddingNearDups(vecs, "vec_id", "embedding", threshold = 0.99,
+          dim = 8, hotBucketThreshold = 4))) {
+      assert(df.collect().nonEmpty, s"$name found no pairs")
+      val plan = df.queryExecution.executedPlan.toString
+      val finalPlan = plan.take(plan.indexOf("== Initial Plan =="))
+      assert(finalPlan.contains("isFinalPlan=true") && !finalPlan.contains("InMemoryTableScan"),
+        s"$name reads a cached frame:\n$finalPlan")
+      val histograms = "keys=\\[band#\\d+, bucket#\\d+L?\\], functions=\\[count\\(1\\)\\]".r
+        .findAllIn(finalPlan).size
+      assert(histograms == 1, s"$name has $histograms histogram aggregates:\n$finalPlan")
+    }
   }
 }

@@ -61,7 +61,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // minhash: expression == explode+agg, per id, all 24 minima
     val fast = Dedup.minhashSignatures(df, "doc_id", "text", 3, 24)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    val ref = Dedup.minhashSignaturesAgg(df, "doc_id", "text", 3, 24)
+    val ref = ReferenceFormulations.minhashSignaturesAgg(df, "doc_id", "text", 3, 24)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(ref.keySet.subsetOf(fast.keySet))
     for ((id, sig) <- ref) assert(fast(id) == sig, s"minhash sig mismatch doc $id")
@@ -69,7 +69,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // token-less docs; the expression gives them sig 0)
     val fastSim = Dedup.simhashSignatures(df, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val refSim = Dedup.simhashSignaturesAgg(df, "doc_id", "text")
+    val refSim = ReferenceFormulations.simhashSignaturesAgg(df, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     for ((id, sig) <- refSim) assert(fastSim(id) == sig, s"simhash sig mismatch doc $id")
     assert(fastSim(4L) == 0L && fastSim(5L) == 0L, "token-less docs -> sig 0")
@@ -81,7 +81,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
         Similarity.hyperplaneSignature(col("embedding"), 12, dim, 42L).as("s"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val refH = vecs.select(col("vec_id"),
-        Similarity.hyperplaneSignatureHof(col("embedding"), 12, dim, 42L).as("s"))
+        ReferenceFormulations.hyperplaneSignatureHof(col("embedding"), 12, dim, 42L).as("s"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(fastH == refH, "hyperplane signature mismatch vs HOF formulation")
   }
@@ -537,7 +537,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // recall-lossless claim vs the unbounded cold plan at the same corpus
     val sigs = Dedup.simhashSignatures(docs, "doc_id", "text").filter(col("sig") =!= 0L)
     val viaCold = Dedup.simhashCandidatePairs(sigs, maxHamming = 3,
-        hotBucketThreshold = Int.MaxValue, checkHot = false)
+        hotBucketThreshold = Int.MaxValue)
       .select(col("id_a"), col("id_b"),
         bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).as("hamming"))
       .distinct().filter(col("hamming") <= 3)
@@ -558,23 +558,6 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val expect = (0 until 8).map(j => (j.toLong, 70000L + j)).toSet
     assert(expect.subsetOf(found),
       s"planted near-identical pairs must survive the hot-bucket refinement: missing ${expect -- found}")
-  }
-
-  test("simhash candidate generation: checkHot=false (histogram skipped) == unbounded plan") {
-    import spark.implicits._
-    // when the caller proves no bucket can be hot, the histogram-free plan
-    // must produce the identical candidate set
-    val sigs = (1 to 300).map { i =>
-      (i.toLong, (i % 17).toLong | ((i % 5).toLong << 20) | ((i % 3).toLong << 40))
-    }.toDF("id", "sig")
-    def collectPairs(df: org.apache.spark.sql.DataFrame) =
-      df.select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val skipped = collectPairs(
-      Dedup.simhashCandidatePairs(sigs, maxHamming = 3, hotBucketThreshold = 1 << 20,
-        checkHot = false))
-    val guarded = collectPairs(
-      Dedup.simhashCandidatePairs(sigs, maxHamming = 3, hotBucketThreshold = 1 << 20))
-    assert(skipped == guarded && skipped.nonEmpty)
   }
 
   test("simhash near-dups: zero-token documents never pair (blank-heavy corpora)") {
@@ -613,24 +596,70 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val twins = (1 to 120).filter(_ % 10 == 0).map { i =>
       (1000L + i, vec(i).zipWithIndex.map { case (x, j) => x * (1.0 + 0.001 * (j % 5 - 2)) }.toSeq)
     }
-    val df = (baseRows ++ twins).toDF("vec_id", "embedding")
-    def found(localT: Int, hotT: Int) = Dedup.embeddingNearDups(df, "vec_id", "embedding",
-        threshold = 0.999, bands = 8, planesPerBand = 4, dim = dim,
-        hotBucketThreshold = hotT, localVerifyThreshold = localT)
+    val nullId = 5000L
+    val df = (baseRows ++ twins :+ ((nullId, null: Seq[Double]))).toDF("vec_id", "embedding")
+    // brute-force reference: every pair, Similarity.cosine over array<double>
+    val ref = df.toDF("id_a", "v_a").crossJoin(df.toDF("id_b", "v_b"))
+      .filter(col("id_a") < col("id_b"))
+      .select(col("id_a"), col("id_b"), Similarity.cosine(col("v_a"), col("v_b")).as("cosine"))
+      .filter(col("cosine") >= 0.999)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    // sparse reference: every group below the local threshold -> pure SQL
-    // join tier (Similarity.cosine over array<double>)
-    val sparse = found(Int.MaxValue, Int.MaxValue)
-    // warm: every >1-row group goes through groupLocalVerify on DOUBLE
-    // vectors (pre-fix: ClassCastException); same candidates, bit-equal
-    // cosines -> identical output
-    val warm = found(1, df.count().toInt - 1)
-    assert(warm == sparse, s"double-vector warm tier diverged: ${warm.size} vs ${sparse.size}")
+    def found(hotT: Int) = Dedup.embeddingNearDups(df, "vec_id", "embedding",
+        threshold = 0.999, bands = 8, planesPerBand = 4, dim = dim,
+        hotBucketThreshold = hotT)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    // every group verified whole on DOUBLE vectors: same pairs, bit-equal
+    // cosines as the SQL expression
+    val cold = found(Int.MaxValue)
+    assert(cold == ref, s"double-vector verify diverged: ${cold.size} vs ${ref.size}")
     // hot: refinement planes + group-local verify on double vectors
-    val hot = found(1, 2)
+    val hot = found(2)
     val planted = (1 to 120).filter(_ % 10 == 0).map(i => (i.toLong, 1000L + i)).toSet
     val hotPairs = hot.map(t => (t._1, t._2))
-    assert(planted.subsetOf(hotPairs),
-      s"double-vector hot tier lost planted pairs: ${planted -- hotPairs}")
+    assert(hot.subsetOf(ref) && planted.subsetOf(hotPairs),
+      s"double-vector hot groups lost planted pairs: ${planted -- hotPairs}")
+    assert(!(cold ++ hot).exists(p => p._1 == nullId || p._2 == nullId),
+      "a null embedding must never pair")
+  }
+
+  test("simhash and embedding near-dups: no Spark job before the action, no cache left after it") {
+    import spark.implicits._
+    // hot band buckets (threshold 4 over 200 rows): the whole plan,
+    // sub-banding and refinement included, must be built without a job
+    val text = spark.range(0, 200).select(col("id").as("doc_id"),
+      concat_ws(" ", lit(base), (col("id") % 7).cast("string")).as("text"))
+    val vecs = spark.range(0, 200).select(col("id").as("vec_id"),
+      transform(array((0 until 8).map(i => lit(i.toFloat)): _*),
+        (x, i) => sin(x + (col("id") % 5).cast("float") * 0.001f + i).cast("float")).as("embedding"))
+    val sc = spark.sparkContext
+    val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        descriptions.add(String.valueOf(
+          Option(e.properties).map(_.getProperty("spark.job.description")).orNull))
+    }
+    val cachedBefore = sc.getPersistentRDDs.keySet
+    sc.addSparkListener(listener)
+    val frames = try {
+      val built = Seq(
+        Dedup.simhashNearDups(text, "doc_id", "text", hotBucketThreshold = 4),
+        Dedup.embeddingNearDups(vecs, "vec_id", "embedding", threshold = 0.99, dim = 8,
+          hotBucketThreshold = 4))
+      // the listener bus delivers in order: once the marker job's start
+      // arrives, every job started while building has been counted
+      sc.setJobDescription("build-marker")
+      sc.parallelize(Seq(1), 1).count()
+      sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30000000000L
+      while (!descriptions.contains("build-marker") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      built
+    } finally sc.removeSparkListener(listener)
+    val buildJobs = descriptions.toArray(Array.empty[String]).toSeq.takeWhile(_ != "build-marker")
+    assert(descriptions.contains("build-marker") && buildJobs.isEmpty,
+      s"building the near-dup frames launched ${buildJobs.size} Spark job(s)")
+    assert(frames.forall(_.collect().nonEmpty))
+    val leaked = sc.getPersistentRDDs.keySet.filterNot(cachedBefore)
+    assert(leaked.isEmpty, s"near-dup queries left ${leaked.size} persisted RDD(s): $leaked")
   }
 }
