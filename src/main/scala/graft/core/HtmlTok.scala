@@ -34,7 +34,7 @@ object HtmlTok {
   }
 
   // Python re \s (unicode) as an explicit character class body
-  private final val PS = "\\t\\n\\x0B\\f\\r\\x1C\\x1D\\x1E\\x1F \\x85\\xA0\\u1680\\u2000-\\u200A\\u2028\\u2029\\u202F\\u205F\\u3000"
+  private[core] final val PS = "\\t\\n\\x0B\\f\\r\\x1C\\x1D\\x1E\\x1F \\x85\\xA0\\u1680\\u2000-\\u200A\\u2028\\u2029\\u202F\\u205F\\u3000"
 
   def pyIsSpace(c: Char): Boolean = {
     val i = c.toInt
@@ -55,26 +55,8 @@ object HtmlTok {
   private[core] val charrefP = Pattern.compile("&#(?:[0-9]+|[xX][0-9a-fA-F]+)[^0-9a-fA-F]")
   private val incomplete = Pattern.compile("&[a-zA-Z#]")
   private val starttagopen = Pattern.compile("<[a-zA-Z]")
-  private[core] val tagfindTolerant = Pattern.compile(s"([a-zA-Z][^\\t\\n\\r\\f />\\x00]*)(?:[$PS]|/(?!>))*")
-  private[core] val attrfindTolerant = Pattern.compile(
-    s"((?<=['\"$PS/])[^$PS/>][^$PS/=>]*)([$PS]*=+[$PS]*" +
-    s"('[^']*'|\"[^\"]*\"|(?!['\"])[^>$PS]*))?(?:[$PS]|/(?!>))*")
-  private[core] val locatestarttagendTolerant = Pattern.compile(
-    s"<[a-zA-Z][^\\t\\n\\r\\f />\\x00]*" +
-    s"(?:[$PS/]*" +
-    s"(?:(?<=['\"$PS/])[^$PS/>][^$PS/=>]*" +
-    s"(?:[$PS]*=+[$PS]*" +
-    s"(?:'[^']*'|\"[^\"]*\"|(?!['\"])[^>$PS]*)" +
-    s"[$PS]*" +
-    s")?(?:[$PS]|/(?!>))*" +
-    s")*" +
-    s")?" +
-    s"[$PS]*")
-  private[core] val endtagfind = Pattern.compile(s"</[$PS]*([a-zA-Z][-.a-zA-Z0-9:_]*)[$PS]*>")
-  private[core] val commentclose = Pattern.compile(s"--[$PS]*>")
   private val markedSectionClose = Pattern.compile(s"][$PS]*][$PS]*>")
   private val msMarkedSectionClose = Pattern.compile(s"][$PS]*>")
-  private[core] val declnameMatch = Pattern.compile(s"[a-zA-Z][-_.a-zA-Z0-9]*[$PS]*")
 
   final val CDATA_CONTENT_ELEMENTS = Set("script", "style")
 

@@ -3,7 +3,6 @@ package graft.core
 import graft.model._
 import java.nio.charset.{Charset, CodingErrorAction}
 import java.nio.ByteBuffer
-import java.util.regex.Pattern
 
 /** Webarchive -> HTML extraction engine.
   *
@@ -413,9 +412,7 @@ object Rewriter {
 
   // --- CSS (util.py:236-276) --------------------------------------------------
 
-  private[core] val rxStyleSheetUrl = Pattern.compile("url\\(([^\\)]+)\\)")
-
-  /** Hand-rolled findall for [[rxStyleSheetUrl]] (`url\(([^\)]+)\)`) —
+  /** Hand-rolled findall for the reference's `url\(([^\)]+)\)` —
     * the regex's Boyer-Moore scan was ~5% of the 1-core extraction
     * profile (r5 JFR). Exact emulation, property-differentialed against
     * the Pattern in PropertySpec:
@@ -448,380 +445,32 @@ object Rewriter {
 
   /** Rewrites url() values; base for resolution is the style sheet's URL.
     *
-    * Reference semantics (util.py:236-276): findall on the ORIGINAL
-    * content, then `content = content.replace(match, local)` applied
-    * SEQUENTIALLY — each replace rescans the current (growing) string. In
-    * data-URI mode every replacement is a multi-KB data URI, so a sheet
-    * with k url() refs walks O(k²·len) bytes through copies (profiled
-    * ~10% of to_html). [[onePassCssSplice]] produces the identical result
-    * in one splice whenever equivalence is PROVABLE (no cross-containment
-    * between match strings or replacements, no overlapping occurrences);
-    * any unprovable input falls back to the literal sequential semantics. */
+    * Reference semantics (util.py:236-276), applied literally: findall on
+    * the ORIGINAL content, then `content = content.replace(match, local)`
+    * for every resolved occurrence in order, duplicates kept. Each replace
+    * rescans the current string, so later pairs see (and may rewrite) text
+    * inserted by earlier ones, and a duplicated match whose replacement
+    * contains it is rewritten once per occurrence. The cost is k scans and
+    * copies of the sheet for k resolved url() refs. */
   def processCssResource(ctx: ArchiveCtx, res: WResource, output: StringBuilder,
                          subresourceDir: String, depth: Int): Unit = {
     if (res.mimeType != "text/css")
       throw new IllegalArgumentException("res must have mime_type == 'text/css'")
     var content = resourceText(res)
-    // findall on the ORIGINAL content; replacements applied sequentially
-    val matches = cssUrlFindAll(content)
-    // resolve every match OCCURRENCE in original order (duplicates kept —
-    // the reference re-runs replace per occurrence, which is observable:
-    // a duplicate match whose replacement contains its own match string
-    // double-rewrites). getLocalUrl is deterministic per (ctx, dir, m,
-    // base) and toDataUri memoizes, so duplicate occurrences reuse the
-    // first resolution.
+    // getLocalUrl is deterministic per (ctx, dir, m, base) and toDataUri
+    // memoizes, so duplicate occurrences reuse the first resolution
     val firstLocal = scala.collection.mutable.HashMap.empty[String, String]
-    val resolved = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    for (m0 <- matches) {
+    for (m0 <- cssUrlFindAll(content)) {
       var m = m0
       if (m.startsWith("\"") || m.startsWith("'")) m = m.substring(1)
       if (m.endsWith("\"") || m.endsWith("'")) m = m.substring(0, m.length - 1)
       if (m.nonEmpty) {
         val localUrl = firstLocal.getOrElseUpdate(m,
           getLocalUrl(ctx, subresourceDir, m, res.url, depth))
-        if (localUrl != m) resolved += ((m, localUrl))
+        if (localUrl != m) content = content.replace(m, localUrl)
       }
     }
-    cssReplaceAll(content, resolved.toIndexedSeq, output)
-  }
-
-  /** The reference's sequential global-replace chain (util.py:270-276) —
-    * `for (m, r) in resolved: content = content.replace(m, r)`, duplicates
-    * included — accelerated: a one-pass splice with per-pair EFFECTIVE
-    * replacements plus post-splice verification, with the literal
-    * sequential fold as the fallback whenever equivalence is unprovable.
-    *
-    * Effective replacement: a pair that appears k>1 times in the chain
-    * applies its replace k times; applications after the first rewrite the
-    * match INSIDE the previously inserted text (the reference's observable
-    * double-rewrite — e.g. a root-relative url whose absolute replacement
-    * ends with it folds to 'https://host' * k + url). The fixed point is
-    * computed by folding `e = e.replace(m, r)` k-1 times, and the splice
-    * inserts that; any cross-pair interference with the intermediate
-    * states is caught by the verification (an occurrence inside a span
-    * inserted before the interfering pair's last step fails the seq-order
-    * rule) and falls back. */
-  private[core] def cssReplaceAll(content: String, resolved: IndexedSeq[(String, String)],
-                                  output: StringBuilder): Unit = {
-    if (resolved.isEmpty) { output.append(content); return }
-    val distinct = resolved.distinct.toIndexedSeq
-    def sequentialFallback(): Unit = {
-      var c = content
-      for ((m, local) <- resolved) c = c.replace(m, local)
-      output.append(c)
-    }
-    // one replacement per match and non-empty matches are assumed by the
-    // effective-fold and the splice (the css resolver memoizes per match
-    // and filters empties, so neither triggers there; the guards keep the
-    // helper safe — and non-looping — for other callers)
-    if (distinct.exists(_._1.isEmpty) ||
-        distinct.map(_._1).distinct.length != distinct.length) { sequentialFallback(); return }
-    val counts = scala.collection.mutable.HashMap.empty[(String, String), Int]
-    val first = scala.collection.mutable.HashMap.empty[(String, String), Int]
-    val last = scala.collection.mutable.HashMap.empty[(String, String), Int]
-    var p = 0
-    while (p < resolved.length) {
-      val key = resolved(p)
-      counts(key) = counts.getOrElse(key, 0) + 1
-      if (!first.contains(key)) first(key) = p
-      last(key) = p
-      p += 1
-    }
-    // per-pair FOLD CHAIN: f_1 = r (the text the pair's first sequential
-    // replace inserts), f_c = f_{c-1}.replace(m, r) (the state after its
-    // c-th application). The splice inserts the final state; verification
-    // probes every state (another pair's replace can run between any two
-    // applications).
-    val chains = distinct.map { case (m, r) =>
-      val k = counts((m, r))
-      val b = IndexedSeq.newBuilder[String]
-      var e = r
-      b += e
-      var t = 1
-      while (t < k) { e = e.replace(m, r); b += e; t += 1 }
-      b.result()
-    }
-    val effective = distinct.zip(chains).map { case ((m, _), ch) => (m, ch.last) }
-    val seqBounds = distinct.map(d => (first(d), last(d)))
-    if (!onePassCssSplice(content, effective, output, seqBounds, chains))
-      sequentialFallback()
-  }
-
-  /** Appends `content` with every occurrence of each match string replaced
-    * — equivalent to the sequential global-replace chain — and returns
-    * true IF equivalence holds; returns false with `output` untouched
-    * otherwise. SPLICE-THEN-VERIFY (r4; replaces the r3 pre-guards, which
-    * bailed on any 1-char replacement/match boundary coincidence — ~1/64
-    * per pair against base64 data URIs, so real sheets kept paying the
-    * quadratic sequential chain):
-    *
-    * Pre-checks (make "replace all original occurrences" well-defined):
-    *  (a) no match string is a substring of another (else which one wins
-    *      depends on list order);
-    *  (b) no two occurrences of different matches overlap in the original
-    *      content (else the earlier-REPLACED one consumes the other).
-    *
-    * Then three verifications gate the splice (any failure => rollback to
-    * the exact sequential fold; JFR-measured total ~5% of to_html — far
-    * below the quadratic chain it replaces):
-    *  V1 RESIDUAL: every occurrence of every match m_i in the FINAL
-    *      spliced output must lie entirely inside a replacement span of
-    *      pair j with j == i (own insertion — never rescanned by its own
-    *      replace; a duplicated pair's later applications are pre-folded
-    *      into the effective replacement) or firstSeq(j) > lastSeq(i)
-    *      (r_j's text first appears after every replace of m_i has run).
-    *  V2 PARTIAL-FOLD INSIDES: a pair j whose sequential range overlaps a
-    *      duplicated pair i's range can see i's INTERMEDIATE fold states,
-    *      which later folds may consume — invisible to V1 — so any m_j
-    *      inside a non-final state fails.
-    *  V3 JUNCTION WINDOWS: an m_j occurrence can straddle an insertion
-    *      boundary — junction-FORMING (new text the sequential chain
-    *      rewrites: a comment's './x.png' whose './x' becomes '.../d/x'
-    *      junction-forms 'd/x.png') or junction-CONSUMING (shifting the
-    *      greedy scan so an original occurrence is skipped: content
-    *      'abbaa' with ('bb'->'ba'),('aa'->'ba') — the round-4 review's
-    *      confirmed counterexample; neither necessarily leaves V1
-    *      residue). For every span and every pair with a step after that
-    *      span's text exists (its own later applications included), the
-    *      possible boundary neighborhoods are reconstructed — every fold
-    *      state of the span's pair, adjacent original text, neighboring
-    *      spans in every state they can show (original included, variant
-    *      product capped) — and any straddling m_j occurrence fails.
-    *
-    * `seqBounds(i)` = (first, last) sequential step of pair i when the
-    * caller's chain runs pairs multiple times (duplicated matches), and
-    * `chains(i)` = the pair's fold-state sequence f_1..f_K (see
-    * [[cssReplaceAll]]); both default to the single-application shape.
-    * Property-tested against the sequential fold over adversarial inputs
-    * (5000-sample differential with junction-friendly tokens), plus the
-    * round-4 review's confirmed junction-consume counterexamples. */
-  private[core] def onePassCssSplice(content: String, repl: IndexedSeq[(String, String)],
-                                     output: StringBuilder,
-                                     seqBounds: IndexedSeq[(Int, Int)] = null,
-                                     chains: IndexedSeq[IndexedSeq[String]] = null): Boolean = {
-    val k = repl.length
-    var i = 0
-    while (i < k) { // pre-check (a); empty matches never splice (replace("")
-      var j = 0    // inserts between every char — sequential-only semantics)
-      while (j < k) {
-        if (repl(j)._1.isEmpty || (i != j && repl(i)._1.contains(repl(j)._1))) return false
-        j += 1
-      }
-      i += 1
-    }
-    // all occurrences of every match in the ORIGINAL content, left-to-right
-    // non-overlapping per match (String.replace semantics)
-    var occ = List.empty[(Int, Int, Int)] // (start, end, replIdx)
-    i = 0
-    while (i < k) {
-      val m = repl(i)._1
-      var from = content.indexOf(m)
-      while (from >= 0) {
-        occ = (from, from + m.length, i) :: occ
-        from = content.indexOf(m, from + m.length)
-      }
-      i += 1
-    }
-    val sorted = occ.sortBy(_._1).toIndexedSeq
-    var p = 0
-    while (p + 1 < sorted.length) { // pre-check (b)
-      if (sorted(p + 1)._1 < sorted(p)._2) return false // overlap: order-dependent
-      p += 1
-    }
-    def firstSeq(j: Int) = if (seqBounds == null) j else seqBounds(j)._1
-    def lastSeq(j: Int) = if (seqBounds == null) j else seqBounds(j)._2
-    def chainOf(j: Int): IndexedSeq[String] =
-      if (chains == null) IndexedSeq(repl(j)._2) else chains(j)
-
-    // ---- V2: partial-fold insides. A pair j whose sequential range
-    // overlaps a DUPLICATED pair i's range can see i's intermediate fold
-    // states; an m_j occurrence inside a partial state is invisible to the
-    // final-output residual check (the later folds may consume it), so any
-    // hit falls back. Final-state insides are V1's job.
-    i = 0
-    while (i < k) {
-      val ch = chainOf(i)
-      if (ch.length > 1) {
-        var j = 0
-        while (j < k) {
-          if (j != i && firstSeq(j) <= lastSeq(i) && lastSeq(j) >= firstSeq(i)) {
-            val mj = repl(j)._1
-            var c = 0
-            while (c < ch.length - 1) {
-              if (ch(c).contains(mj)) return false
-              c += 1
-            }
-          }
-          j += 1
-        }
-      }
-      i += 1
-    }
-
-    // ---- V3: junction windows. At any step of pair j after pair i's text
-    // exists, an m_j occurrence can straddle an insertion boundary —
-    // junction-FORMING (new text to rewrite) or junction-CONSUMING
-    // (shifting the greedy scan so an original occurrence is skipped; the
-    // review's 'abbaa' counterexample). Neither necessarily leaves residue
-    // in the final output, so they are probed directly: for every span of
-    // pair i and every pair j with a step after i's first insertion
-    // (including j == i when i is duplicated — its own later applications
-    // rescan junctions), reconstruct the possible local texts around the
-    // span at such steps (every fold state of i; neighbors within the
-    // window in every state they can be in, original included) and fall
-    // back if m_j overlaps a boundary in ANY variant. Windows are
-    // |m_j| - 1 chars; the variant product is capped (cap hit => fall
-    // back, conservative).
-    val VariantCap = 64
-    // context variants on one side of span sp: texts of exactly `w` chars
-    // (shorter only at the string edge), nearest-to-span alignment
-    def sideVariants(sp: Int, dir: Int, w: Int): IndexedSeq[String] = {
-      var variants: IndexedSeq[String] = IndexedSeq("")
-      var segIdx = sp + dir // next span index in walk direction
-      var boundary = if (dir < 0) sorted(sp)._1 else sorted(sp)._2
-      var edge = false
-      def fit(s: String): String = if (dir < 0) s.takeRight(w) else s.take(w)
-      while (!edge && variants.exists(_.length < w)) {
-        // original-content gap between boundary and the next span (or edge)
-        val (gs, ge) =
-          if (dir < 0) (if (segIdx >= 0) sorted(segIdx)._2 else 0, boundary)
-          else (boundary, if (segIdx < sorted.length) sorted(segIdx)._1 else content.length)
-        val gap = content.substring(gs, ge)
-        variants = variants.map(v => fit(if (dir < 0) gap + v else v + gap)).distinct
-        val atEdge = if (dir < 0) segIdx < 0 else segIdx >= sorted.length
-        if (atEdge) edge = true
-        else if (variants.exists(_.length < w)) {
-          // neighbor span: every text it can show while another pair still
-          // replaces — original match + every fold state
-          val q = sorted(segIdx)._3
-          val qTexts = (repl(q)._1 +: chainOf(q)).distinct
-          variants = variants.flatMap(v =>
-            qTexts.map(qt => fit(if (dir < 0) qt + v else v + qt))).distinct
-          if (variants.length > VariantCap) return null // cap: caller falls back
-          boundary = if (dir < 0) sorted(segIdx)._1 else sorted(segIdx)._2
-          segIdx += dir
-        }
-      }
-      variants
-    }
-    // windows only ever need the LARGEST match's length: contexts and
-    // probes are built ONCE per span at that width (wider context never
-    // changes a straddle verdict — an occurrence crosses the boundary with
-    // at most |m|-1 chars on a side) and every pair j checks against the
-    // same probes with its own match
-    val wMax = { var mx = 0; var q = 0; while (q < k) { mx = math.max(mx, repl(q)._1.length - 1); q += 1 }; mx }
-    // true when m overlaps the boundary at off inside probe
-    def boundaryHit(probe: String, off: Int, m: String): Boolean = {
-      // only occurrences straddling `off` matter: start the scan |m|-1
-      // chars before it and stop once past it
-      val lo = math.max(0, off - m.length + 1)
-      var from = probe.indexOf(m, lo)
-      while (from >= 0 && from < off) {
-        if (from + m.length > off) return true
-        from = probe.indexOf(m, from + 1)
-      }
-      false
-    }
-    if (wMax >= 1) {
-      p = 0
-      while (p < sorted.length) {
-        val i2 = sorted(p)._3
-        val states = chainOf(i2)
-        // pairs that can still replace after this span's text exists
-        var anyLater = false
-        var j = 0
-        while (j < k && !anyLater) {
-          anyLater = repl(j)._1.length >= 2 &&
-            (if (j == i2) states.length > 1 else lastSeq(j) > firstSeq(i2))
-          j += 1
-        }
-        if (anyLater) {
-          val lefts = sideVariants(p, -1, wMax)
-          val rights = if (lefts != null) sideVariants(p, +1, wMax) else null
-          if (lefts == null || rights == null) return false
-          // probes per (state, variant): boundary regions only — interior
-          // occurrences of the (possibly huge) insertion are V1/V2's
-          // business; junctions live within wMax chars of a boundary
-          var si = 0
-          while (si < states.length) {
-            val t = states(si)
-            val probes: IndexedSeq[(String, Int)] = // (probe, boundaryOff)
-              if (t.length >= 2 * wMax) {
-                val tL = t.substring(0, wMax)
-                val tR = t.substring(t.length - wMax)
-                lefts.map(l => (l + tL, l.length)) ++ rights.map(r => (tR + r, wMax))
-              } else {
-                for (l <- lefts; r <- rights; probe = l + t + r;
-                     off <- Seq(l.length, l.length + t.length))
-                  yield (probe, off)
-              }
-            j = 0
-            while (j < k) {
-              val laterStep =
-                if (j == i2) states.length > 1
-                else lastSeq(j) > firstSeq(i2)
-              val mj = repl(j)._1
-              if (laterStep && mj.length >= 2) {
-                var pi = 0
-                while (pi < probes.length) {
-                  if (boundaryHit(probes(pi)._1, probes(pi)._2, mj)) return false
-                  pi += 1
-                }
-              }
-              j += 1
-            }
-            si += 1
-          }
-        }
-        p += 1
-      }
-    }
-
-    // ---- splice + V1 (final-output residual check) ----------------------
-    val jsb = output.underlying // scala StringBuilder lacks the 3-arg
-    val base = jsb.length()     // (CharSequence, from, to) append overload
-    val spanStart = new Array[Int](sorted.length)
-    val spanEnd = new Array[Int](sorted.length)
-    val spanIdx = new Array[Int](sorted.length)
-    var pos = 0
-    p = 0
-    while (p < sorted.length) {
-      val (s, e, idx) = sorted(p)
-      jsb.append(content, pos, s)
-      spanStart(p) = jsb.length() - base
-      output.append(repl(idx)._2)
-      spanEnd(p) = jsb.length() - base
-      spanIdx(p) = idx
-      pos = e
-      p += 1
-    }
-    jsb.append(content, pos, content.length)
-    // verify on the spliced text (one String copy; indexOf is intrinsified)
-    val spliced = jsb.substring(base)
-    i = 0
-    while (i < k) {
-      val m = repl(i)._1
-      var from = spliced.indexOf(m)
-      while (from >= 0) {
-        val end = from + m.length
-        // last span with start <= from (binary search); among same-start
-        // spans only the last can be non-empty, so it is the only candidate
-        var lo = 0; var hi = sorted.length - 1; var cand = -1
-        while (lo <= hi) {
-          val mid = (lo + hi) >>> 1
-          if (spanStart(mid) <= from) { cand = mid; lo = mid + 1 } else hi = mid - 1
-        }
-        val inside = cand >= 0 && spanStart(cand) <= from && spanEnd(cand) >= end
-        val safe = inside && {
-          val j = spanIdx(cand)
-          j == i || firstSeq(j) > lastSeq(i)
-        }
-        if (!safe) { jsb.setLength(base); return false }
-        from = spliced.indexOf(m, from + 1)
-      }
-      i += 1
-    }
-    true
+    output.append(content)
   }
 
   // --- HTML (util.py:22-221, 279-311) ------------------------------------------

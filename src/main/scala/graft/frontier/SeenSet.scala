@@ -65,7 +65,6 @@ object SeenSet {
     def mightContain(url: String): Boolean = cf.mightContain(url)
     def serialized: Array[Byte] = cf.serialized
     def stashSize: Int = cf.stashSize
-    def underlying: CuckooFilter = cf
   }
 
   def createFilter(cfg: Config, expected: Long): UrlFilter = cfg.filterKind match {
@@ -179,28 +178,15 @@ object SeenSet {
     else if (a.retries != b.retries) { if (a.retries > b.retries) a else b }
     else if (a.discoveredEpoch <= b.discoveredEpoch) a else b
 
-  /** Deterministic merge of exactly TWO candidates: [[pickWinner]] plus the
-    * retry ticket (max retries of the pair) — a fetch-miss retry merged
-    * with a higher-priority retries=0 rediscovery must not lose its ticket,
-    * or the merged row would be seen-filtered and the url silently never
-    * re-fetched (round-4 review finding). For groups of 3+ rows do NOT
-    * fold this pairwise: copying the max onto the winner at each step
-    * feeds the inflated count into later retries-DESC tie-breaks, making
-    * the merged discoveredEpoch depend on iterator order (round-5 advisory
-    * counterexample, pinned in SeenSetSpec) — use [[mergeByUrl]], which
-    * compares on original per-row retries and applies the ticket once
-    * after the fold. */
-  def reduceCandidates(a: Candidate, b: Candidate): Candidate = {
-    val winner = pickWinner(a, b)
-    val r = math.max(a.retries, b.retries)
-    if (winner.retries == r) winner else winner.copy(retries = r)
-  }
-
   /** Order-independent per-url merge of a candidate batch: per url, the
     * [[pickWinner]] winner over ORIGINAL rows with max(original retries)
-    * applied once at the end. Any permutation of the input yields the same
-    * merged set (SeenSetSpec pins the 3-duplicate counterexample where the
-    * per-step reduceCandidates fold diverges). */
+    * applied once at the end. The retry ticket must survive: a fetch-miss
+    * retry merged with a higher-priority retries=0 rediscovery would
+    * otherwise be seen-filtered and never re-fetched. It is applied once,
+    * not per step: a pairwise fold that copies the max onto each winner
+    * feeds the inflated count into later retries-DESC tie-breaks, so the
+    * merged discoveredEpoch would depend on iterator order (SeenSetSpec
+    * pins the 3-duplicate counterexample). */
   private[frontier] def mergeByUrl(cs: Iterator[Candidate]): java.util.Iterator[Candidate] = {
     final class Acc(var winner: Candidate, var maxRetries: Int)
     val best = new java.util.HashMap[String, Acc]()

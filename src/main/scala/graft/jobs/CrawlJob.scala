@@ -81,12 +81,6 @@ object CrawlJob {
       .agg(max_by(col("html"), struct(col("warc_ts"), xxhash64(col("html")))).as("html"))
   }
 
-  /** The capture tie-break hash — matches Spark's `xxhash64(html)` (seed
-    * 42) so single-node oracles can replicate the [[preparePages]] winner. */
-  def captureHash(html: Array[Byte]): Long =
-    org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
-      html, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, html.length, 42L)
-
   /** Per-host per-epoch fetch budget under a robots crawl-delay: the number
     * of politeness-respecting fetches that fit in the epoch window,
     * floor(epochWindowSec / crawl_delay), clamped to [1, perHostBudget].

@@ -29,6 +29,20 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
       name -> fn(spark, sf).queryExecution.executedPlan.toString
     }
 
+  test("no declared query leaves a cached RDD behind") {
+    // every query, the crawl_schedule* mini-crawls included, built and run
+    // to the noop sink: a frame persisted along the way must be released
+    // by its owner before the query returns
+    val sc = spark.sparkContext
+    for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
+      val before = sc.getPersistentRDDs.keySet.toSet
+      fn(spark, sf).write.format("noop").mode("overwrite").save()
+      val after = sc.getPersistentRDDs.keySet.toSet
+      assert(after == before,
+        s"$name: cached RDDs before ${before.toSeq.sorted} after ${after.toSeq.sorted}")
+    }
+  }
+
   test("no nested-loop or cartesian join in any flagship query plan") {
     for ((name, plan) <- plans) {
       assert(!plan.contains("BroadcastNestedLoopJoin"), s"BNLJ in $name")

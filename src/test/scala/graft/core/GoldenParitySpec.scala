@@ -43,19 +43,30 @@ class GoldenParitySpec extends AnyFunSuite {
   // cannot produce (e.g. to_html of a non-HTML main)
   for (name <- fixtureNames) {
 
-    test(s"$name: to_html byte parity") {
+    // the single-file html of every entry point must equal the reference's
+    // to_html output byte for byte
+    def assertToHtmlParity(what: String, html: => String): Unit = {
       val golden = goldenDir.resolve(s"tohtml/$name.html")
       assume(Files.exists(golden))
-      val archive = WebArchiveOps.parse(archiveBytes(name))
-      val got = Rewriter.toHtml(archive).getBytes("UTF-8")
+      val got = html.getBytes("UTF-8")
       val expected = Files.readAllBytes(golden)
       if (!java.util.Arrays.equals(got, expected)) {
         val g = new String(got, "UTF-8"); val e = new String(expected, "UTF-8")
         val diffAt = g.zip(e).indexWhere { case (a, b) => a != b }
         val at = if (diffAt < 0) math.min(g.length, e.length) else diffAt
-        fail(s"to_html mismatch at char $at:\n got: ...${g.slice(math.max(0, at - 60), at + 80)}\n exp: ...${e.slice(math.max(0, at - 60), at + 80)}\n(lengths ${g.length} vs ${e.length})")
+        fail(s"$what mismatch at char $at:\n got: ...${g.slice(math.max(0, at - 60), at + 80)}\n exp: ...${e.slice(math.max(0, at - 60), at + 80)}\n(lengths ${g.length} vs ${e.length})")
       }
     }
+
+    test(s"$name: to_html byte parity") {
+      assertToHtmlParity("to_html", Rewriter.toHtml(WebArchiveOps.parse(archiveBytes(name))))
+    }
+
+    // registered only where the golden exists, so it never adds a cancel
+    if (Files.exists(goldenDir.resolve(s"tohtml/$name.html")))
+      test(s"$name: extract_all html byte parity") {
+        assertToHtmlParity("extract_all", Rewriter.extractAll(WebArchiveOps.parse(archiveBytes(name)))._1)
+      }
 
     test(s"$name: local paths parity") {
       val golden = goldenDir.resolve(s"localpaths/$name.tsv")

@@ -8,6 +8,27 @@ import java.util.regex.Pattern
   * on deterministic random tag soup (100k samples per scanner). */
 class HtmlScanDiffSpec extends AnyFunSuite {
 
+  // the CPython html.parser regexes the scanners replace (Python \s spelled
+  // out as HtmlTok.PS)
+  private val PS = HtmlTok.PS
+  private val tagfindTolerant = Pattern.compile(s"([a-zA-Z][^\\t\\n\\r\\f />\\x00]*)(?:[$PS]|/(?!>))*")
+  private val attrfindTolerant = Pattern.compile(
+    s"((?<=['\"$PS/])[^$PS/>][^$PS/=>]*)([$PS]*=+[$PS]*" +
+    s"('[^']*'|\"[^\"]*\"|(?!['\"])[^>$PS]*))?(?:[$PS]|/(?!>))*")
+  private val locatestarttagendTolerant = Pattern.compile(
+    s"<[a-zA-Z][^\\t\\n\\r\\f />\\x00]*" +
+    s"(?:[$PS/]*" +
+    s"(?:(?<=['\"$PS/])[^$PS/>][^$PS/=>]*" +
+    s"(?:[$PS]*=+[$PS]*" +
+    s"(?:'[^']*'|\"[^\"]*\"|(?!['\"])[^>$PS]*)" +
+    s"[$PS]*" +
+    s")?(?:[$PS]|/(?!>))*" +
+    s")*" +
+    s")?" +
+    s"[$PS]*")
+  private val endtagfind = Pattern.compile(s"</[$PS]*([a-zA-Z][-.a-zA-Z0-9:_]*)[$PS]*>")
+  private val commentclose = Pattern.compile(s"--[$PS]*>")
+
   private val alphabet: Array[String] = Array(
     "a", "B", "z", "0", "9", " ", "\t", "\n", "\r", "\f", "\u000b", "\u00a0",
     "\u2003", "<", ">", "/", "=", "==", "'", "\"", "&", ";", "#", "-", ".",
@@ -46,7 +67,7 @@ class HtmlScanDiffSpec extends AnyFunSuite {
     var checked = 0
     for (body <- samples(1L, 60000, 32)) {
       val s = "<a" + body
-      val expected = regexEnd(HtmlTok.locatestarttagendTolerant, s, 0)
+      val expected = regexEnd(locatestarttagendTolerant, s, 0)
       val got = HtmlScan.startTagEnd(s, 0)
       assert(expected >= 0, s"regex must always match: ${s.take(40)}")
       assert(got == expected, s"startTagEnd mismatch on ${render(s)}: got $got expected $expected")
@@ -59,7 +80,7 @@ class HtmlScanDiffSpec extends AnyFunSuite {
     for (body <- samples(2L, 60000, 24)) {
       val s = "<a " + body
       val at = 3
-      val m = HtmlTok.attrfindTolerant.matcher(s)
+      val m = attrfindTolerant.matcher(s)
       m.region(at, s.length)
       m.useTransparentBounds(true)
       m.useAnchoringBounds(false)
@@ -77,7 +98,7 @@ class HtmlScanDiffSpec extends AnyFunSuite {
   test("tagFind == tagfind_tolerant") {
     for (body <- samples(3L, 40000, 16)) {
       val s = body
-      val m = HtmlTok.tagfindTolerant.matcher(s)
+      val m = tagfindTolerant.matcher(s)
       m.useAnchoringBounds(false)
       m.region(0, s.length)
       val expected = if (m.lookingAt()) (m.group(1), m.end()) else null
@@ -93,7 +114,7 @@ class HtmlScanDiffSpec extends AnyFunSuite {
   test("endTagFind == endtagfind") {
     for (body <- samples(4L, 40000, 16)) {
       val s = "</" + body
-      val m = HtmlTok.endtagfind.matcher(s)
+      val m = endtagfind.matcher(s)
       m.useAnchoringBounds(false)
       m.region(0, s.length)
       val expected = if (m.lookingAt()) (m.group(1), m.end()) else null
@@ -108,7 +129,7 @@ class HtmlScanDiffSpec extends AnyFunSuite {
 
   test("commentClose == commentclose search") {
     for (body <- samples(5L, 40000, 24)) {
-      val m = HtmlTok.commentclose.matcher(body)
+      val m = commentclose.matcher(body)
       val expected = if (m.find()) (m.start(), m.end()) else null
       val got = HtmlScan.commentClose(body, 0)
       if (expected == null) assert(got == null, s"commentClose should fail on ${render(body)}")

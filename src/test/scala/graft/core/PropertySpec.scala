@@ -68,119 +68,6 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
-  test("css one-pass splice == sequential global replace whenever it claims equivalence") {
-    // tiny alphabet forces frequent substring/overlap/containment collisions
-    // AND the junction-consume shape (self-overlapping matches 'aa'/'bb'
-    // whose alignment a replacement boundary can shift — the class the
-    // round-4 review proved the first verification design blind to)
-    val tok = Gen.oneOf("a", "b", "ab", "ba", "aa", "bb", "a.p", "x/a.p", ".", "/")
-    val gen: Gen[(String, IndexedSeq[(String, String)])] = for {
-      content <- Gen.listOf(tok).map(_.mkString)
-      n <- Gen.choose(0, 4)
-      repl <- Gen.listOfN(n, for { m <- tok; r <- tok } yield (m, r))
-    } yield (content, repl.filter { case (m, r) => m.nonEmpty && m != r }
-               .distinctBy(_._1).toIndexedSeq)
-    var accepted = 0
-    forAllN(gen, 5000) { case (content, repl) =>
-      val out = new StringBuilder
-      if (Rewriter.onePassCssSplice(content, repl, out)) {
-        accepted += 1
-        var c = content
-        for ((m, r) <- repl) c = c.replace(m, r)
-        assert(out.toString == c,
-          s"splice mismatch for content='$content' repl=$repl: got '${out.toString}' want '$c'")
-      }
-    }
-    assert(accepted > 100, s"guards too conservative: only $accepted accepted samples")
-    // the review's confirmed counterexamples pin the junction-consume class
-    for ((content, repl) <- Seq(
-      ("abbaa", IndexedSeq(("bb" -> "ba"), ("aa" -> "ba"))),
-      ("baaaa", IndexedSeq(("b" -> "ba"), ("aa" -> "bb"))))) {
-      val want = repl.foldLeft(content) { case (c, (m, r)) => c.replace(m, r) }
-      val out = new StringBuilder
-      Rewriter.cssReplaceAll(content, repl, out)
-      assert(out.toString == want,
-        s"junction-consume parity: content='$content' got '${out.toString}' want '$want'")
-    }
-  }
-
-  test("cssReplaceAll == sequential chain under DUPLICATED pairs (effective-replacement fold)") {
-    // the duplicate path: a pair appearing k times applies its replace k
-    // times sequentially (observable double-rewrite when r contains m);
-    // cssReplaceAll folds that into an effective replacement and must
-    // match the literal chain on every input, falling back when unsure
-    val tok = Gen.oneOf("a", "b", "ab", "ba", "aa", "bb", "Xab", "bX", "a.p", "/a", ".")
-    val gen = for {
-      content <- Gen.listOf(tok).map(_.mkString)
-      n <- Gen.choose(0, 5)
-      chain <- Gen.listOfN(n, for { m <- tok; r <- tok } yield (m, r))
-    } yield (content, chain.filter { case (m, r) => m.nonEmpty && m != r })
-    forAllN(gen, 5000) { case (content, chain0) =>
-      // duplicates with a CONSISTENT replacement per match (the resolver
-      // memoizes per match, so real chains always satisfy this)
-      val byMatch = chain0.toMap
-      val chain = chain0.map { case (m, _) => (m, byMatch(m)) }.toIndexedSeq
-      val want = chain.foldLeft(content) { case (c, (m, r)) => c.replace(m, r) }
-      val out = new StringBuilder
-      Rewriter.cssReplaceAll(content, chain, out)
-      assert(out.toString == want,
-        s"cssReplaceAll mismatch for content='$content' chain=$chain: got '${out.toString}' want '$want'")
-    }
-    // the Wikipedia-fixture shape: duplicated root-relative url whose
-    // absolute replacement ends with it — folds to H*k + m
-    val m = "/w/img/x.png"
-    val r = "https://en.example" + m
-    val out = new StringBuilder
-    Rewriter.cssReplaceAll(s"url($m) body url($m)",
-      IndexedSeq((m, r), (m, r)), out)
-    val want = Seq((m, r), (m, r)).foldLeft(s"url($m) body url($m)") {
-      case (c, (mm, rr)) => c.replace(mm, rr)
-    }
-    assert(out.toString == want && want.contains("https://en.examplehttps://en.example"),
-      s"double-rewrite fold: got '${out.toString}' want '$want'")
-  }
-
-  test("css splice verification: junction-formed matches force fallback; benign boundaries splice") {
-    def seq(content: String, repl: Seq[(String, String)]): String =
-      repl.foldLeft(content) { case (c, (m, r)) => c.replace(m, r) }
-    def spliceOrNone(content: String, repl: IndexedSeq[(String, String)]): Option[String] = {
-      val out = new StringBuilder
-      if (Rewriter.onePassCssSplice(content, repl, out)) Some(out.toString) else None
-    }
-    // ACTUAL junction: '.'->'b' next to 'a' forms m1='ab' which the
-    // sequential chain rewrites — verification must roll back
-    assert(spliceOrNone("a.", IndexedSeq(("." -> "b"), ("ab" -> "X"))).isEmpty)
-    // rollback leaves output untouched even when non-empty before the call
-    locally {
-      val out = new StringBuilder("pre")
-      assert(!Rewriter.onePassCssSplice("a.", IndexedSeq(("." -> "b"), ("ab" -> "X")), out))
-      assert(out.toString == "pre")
-    }
-    // empty replacement whose deletion joins neighbors into another match
-    assert(spliceOrNone("a.b", IndexedSeq(("." -> ""), ("ab" -> "X"))).isEmpty)
-    // the ADVICE r3 end-to-end shape is covered by the processCssResource
-    // parity test below; the REDUCED pair here has no junction in the
-    // actual content, so r4's verification accepts it — with the
-    // sequential result (r3's pre-guard refused on the mere possibility)
-    for ((c, r) <- Seq(
-      ("url(./x) url(d/x.png)",
-        IndexedSeq(("./x" -> "https://h.x/d/x"), ("d/x.png" -> "pf/x.png"))),
-      ("u v", IndexedSeq(("u" -> "w!"), ("v w" -> "z"))),
-      ("q r", IndexedSeq(("q" -> "o"), ("xoy" -> "z"))),
-      // 1-char boundary coincidence (r0 ends 'b', m1 starts 'b') with no
-      // junction in content — the common base64-data-URI shape that made
-      // the r3 guard fall back ~1/64 of the time per pair
-      ("url(a.png) url(b.png)", IndexedSeq(("a.png" -> "xb"), ("b.png" -> "y")))
-    )) {
-      val got = spliceOrNone(c, r)
-      assert(got.contains(seq(c, r)), s"content='$c': got $got want ${seq(c, r)}")
-    }
-    // and a junction-free pair is still accepted one-pass
-    assert(spliceOrNone("url(one) url(two)",
-      IndexedSeq(("one" -> "pf/1.css"), ("two" -> "pf/2.css")))
-      .contains("url(pf/1.css) url(pf/2.css)"))
-  }
-
   test("css junction rewrite parity end-to-end (ADVICE r3: comment text re-formed by splice miss)") {
     // util.py:236-276 sequential semantics: replace('./x','https://h.x/d/x')
     // rewrites the COMMENT's './x.png' too, and the later
@@ -227,6 +114,9 @@ class PropertySpec extends AnyFunSuite {
     assert(out1.toString == ".a{background:url(page_files/a.png)}")
   }
 
+  // the reference's style-sheet url() regex (util.py:236-276)
+  private val rxStyleSheetUrl = java.util.regex.Pattern.compile("url\\(([^\\)]+)\\)")
+
   test("cssUrlFindAll == regex findall (url\\(([^\\)]+)\\)) on adversarial css") {
     // the hand scanner replaced the BnM regex on the extraction hot path
     // (r5); exact emulation incl. empty-group url(), unclosed parens,
@@ -236,7 +126,7 @@ class PropertySpec extends AnyFunSuite {
     val gen = Gen.listOf(tokens).map(_.mkString)
     forAllN(gen, 3000) { css =>
       val viaRegex = {
-        val m = graft.core.Rewriter.rxStyleSheetUrl.matcher(css)
+        val m = rxStyleSheetUrl.matcher(css)
         val b = Vector.newBuilder[String]
         while (m.find()) b += m.group(1)
         b.result()

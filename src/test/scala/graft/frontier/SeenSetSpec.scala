@@ -87,6 +87,15 @@ class SeenSetSpec extends AnyFunSuite with BeforeAndAfterAll {
     val b = Candidate("https://h.example/x", "h.example", 0.9, 5, 0)
     val c = Candidate("https://h.example/x", "h.example", 0.9, 2, 0)
     val expected = c.copy(retries = 1)
+    // the pairwise fold the merge must not be: pickWinner plus the max
+    // retry ticket copied onto the winner at every step
+    def reduceCandidates(x: Candidate, y: Candidate): Candidate = {
+      val winner = SeenSet.pickWinner(x, y)
+      val r = math.max(x.retries, y.retries)
+      if (winner.retries == r) winner else winner.copy(retries = r)
+    }
+    assert(Seq(a, b, c).reduceLeft(reduceCandidates).discoveredEpoch == 5)
+    assert(Seq(b, c, a).reduceLeft(reduceCandidates).discoveredEpoch == 2)
     for (perm <- Seq(a, b, c).permutations) {
       val merged = SeenSet.mergeByUrl(perm.iterator).asScala.toVector
       assert(merged == Vector(expected),

@@ -65,6 +65,12 @@ class CrawlJobSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   // ---------- in-memory oracle ------------------------------------------------
 
+  /** The capture tie-break hash: Spark's `xxhash64(html)` (seed 42), so the
+    * oracle replicates the `CrawlJob.preparePages` winner. */
+  private def captureHash(html: Array[Byte]): Long =
+    org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
+      html, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, html.length, 42L)
+
   /** (scheduled-per-epoch, final frontier map, final seen set). */
   private def oracle(epochs: Int)
       : (Vector[(Int, Vector[String])], Map[String, Candidate], Set[String]) = {
@@ -76,7 +82,7 @@ class CrawlJobSpec extends AnyFunSuite with BeforeAndAfterAll {
         val u = PyUrl.canonicalize(SyntheticCorpus.urlOf(seed, i)).get
         val html = SyntheticCorpus.htmlOf(seed, i, N).getBytes("UTF-8")
         val ts = SyntheticCorpus.tsOf(seed, i)
-        val h = CrawlJob.captureHash(html)
+        val h = captureHash(html)
         val ord = Ordering.Tuple2[Long, Long]
         best.get(u) match {
           case Some((ots, oh, _)) if ord.compare((ots, oh), (ts, h)) >= 0 => ()
