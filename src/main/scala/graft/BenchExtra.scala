@@ -11,9 +11,8 @@ import org.apache.spark.sql.SparkSession
   *   noop [nameFilter...]      time each declared query with the noop sink
   *                             (computation only, no collect/driver cost),
   *                             best-of-3, print one JSON line
-  *   crawl                     run the bench-shaped 3-epoch crawl once with
-  *                             GRAFT_EPOCH_TIMING honored (set the env var
-  *                             to see per-phase breakdown)
+  *
+  * Crawl-epoch phases are measured by perfbench's traced crawl workload.
   *
   * Uses the same session config as graft.Bench so timings are comparable.
   */
@@ -88,105 +87,6 @@ object BenchExtra {
         val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
           .mkString("{", ",", "}")
         println(s"""{"metric":"noop","queries":$qs,"sf":"$sfDir","cpus":$cpus}""")
-
-      case "crawlplans" =>
-        // dump the crawl epoch's two restructured subplans (seen-filter
-        // output, politeness dequeue) for the plans/r06 before/after
-        // evidence — uses only APIs stable across the r5/r6 boundary
-        val outDir = args(1)
-        val suffix = if (args.length > 2) args(2) else "before"
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-        import graft.jobs.CrawlJob
-        import graft.frontier.{SeenSet, Scheduler}
-        import graft.model.Candidate
-        import spark.implicits._
-        import org.apache.spark.sql.functions.{broadcast, coalesce, array, struct, udf}
-        val cfg = CrawlJob.Config(
-          seen = SeenSet.Config(numBuckets = 32, expectedPerBucket = 1 << 18),
-          sched = Scheduler.Config(perHostBudget = 256, saltFactor = 8),
-          shufflePartitions = cpus)
-        val pages = CrawlJob.preparePages(
-          graft.data.SyntheticCorpus.pages(spark, 42L, 20000L, cpus, 300).toDF())
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        pages.count()
-        val robots = graft.data.SyntheticCorpus.robots(spark, 42L, 300).toDF()
-        val root = java.nio.file.Files.createTempDirectory("planx-crawl").toString
-        val store = new graft.store.ParquetSnapshotStore(root)
-        CrawlJob.init(spark, store,
-          graft.data.SyntheticCorpus.seeds(spark, 42L, 20000L, 1000, 300), cfg)
-        CrawlJob.runEpoch(spark, store, pages, robots, cfg)
-        CrawlJob.runEpoch(spark, store, pages, robots, cfg)
-        val snap = store.latest().get
-        val frontier = store.readTable(spark, snap, "frontier").as[Candidate]
-        val seen = store.readTable(spark, snap, "seen")
-        val blooms = store.readTable(spark, snap, "blooms").as[SeenSet.BucketBloom]
-        val (kept, _, _) = SeenSet.dedupAndFilterNew(spark, frontier, seen, blooms, cfg.seen)
-        def dump(name: String, df: org.apache.spark.sql.DataFrame): Unit =
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(outDir, s"${name}_$suffix.txt"),
-            df.queryExecution.explainString(
-              org.apache.spark.sql.execution.FormattedMode).getBytes("UTF-8"))
-        dump("crawl_epoch_seenfilter", kept.toDF())
-        val budgeted = kept.toDF()
-          .select(struct($"url", $"host", $"priority", $"discoveredEpoch",
-                         $"retries").as("_1"),
-                  org.apache.spark.sql.functions.lit(cfg.sched.perHostBudget).as("_2"))
-          .as[(Candidate, Int)]
-        dump("crawl_epoch_dequeue", Scheduler.dequeueRanked(spark, budgeted, cfg.sched).toDF())
-        System.err.println(s"[crawlplans] wrote $suffix")
-
-      case "hotplans" =>
-        // bench-shaped natural-fire hot dedup corpora (smaller n, same
-        // branch selection) — plan evidence for the r6 tier branching
-        val outDir = args(1)
-        val suffix = if (args.length > 2) args(2) else "before"
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-        def dump(name: String, df: org.apache.spark.sql.DataFrame): Unit =
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(outDir, s"${name}_$suffix.txt"),
-            df.queryExecution.explainString(
-              org.apache.spark.sql.execution.FormattedMode).getBytes("UTF-8"))
-        val docs = graft.data.SyntheticCorpus.hotDocs(spark, 42L, 20000L, 6000L, cpus)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        docs.count()
-        dump("dedup_hot_simhash", graft.pipeline.Dedup.simhashNearDups(docs, "doc_id", "text"))
-        val emb = graft.data.SyntheticCorpus.hotEmbeddings(spark, 42L, 30000L, 64, 50, cpus)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        emb.count()
-        dump("dedup_hot_embedding",
-          graft.pipeline.Dedup.embeddingNearDups(emb, "vec_id", "embedding", threshold = 0.99))
-        System.err.println(s"[hotplans] wrote $suffix")
-
-      case "crawl" =>
-        import graft.jobs.CrawlJob
-        import graft.frontier.{SeenSet, Scheduler}
-        val crawlPages = sys.env.getOrElse("SPARK_GRAFT_CRAWL_PAGES", "200000").toLong
-        val crawlHosts = sys.env.getOrElse("SPARK_GRAFT_CRAWL_HOSTS", "1200").toInt
-        val crawlSeeds = sys.env.getOrElse("SPARK_GRAFT_CRAWL_SEEDS", "10000").toInt
-        val nBuckets = sys.env.getOrElse("SPARK_GRAFT_CRAWL_BUCKETS", "32").toInt
-        val cfg = CrawlJob.Config(
-          seen = SeenSet.Config(numBuckets = nBuckets, expectedPerBucket = 1 << 18),
-          sched = Scheduler.Config(perHostBudget = 256, saltFactor = 8),
-          shufflePartitions = cpus)
-        val pages = CrawlJob.preparePages(
-          graft.data.SyntheticCorpus.pages(spark, 42L, crawlPages, cpus, crawlHosts).toDF())
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        pages.count()
-        val robots = graft.data.SyntheticCorpus.robots(spark, 42L, crawlHosts).toDF()
-        val reps = sys.env.getOrElse("SPARK_GRAFT_CRAWL_REPS", "2").toInt
-        val secs = (1 to reps).map { _ =>
-          val root = java.nio.file.Files.createTempDirectory("benchx-crawl").toString
-          val store = new graft.store.ParquetSnapshotStore(root)
-          val sec = time {
-            CrawlJob.init(spark, store,
-              graft.data.SyntheticCorpus.seeds(spark, 42L, crawlPages, crawlSeeds, crawlHosts), cfg)
-            (1 to 3).foreach(_ => CrawlJob.runEpoch(spark, store, pages, robots, cfg))
-          }
-          System.gc()
-          System.err.println(f"[crawl] 3 epochs $sec%.3f s")
-          sec
-        }
-        println(f"""{"metric":"crawl_3epochs","value":${secs.min}%.3f,"pages":$crawlPages,"cpus":$cpus}""")
 
       case other => sys.error(s"unknown mode $other")
     }

@@ -8,9 +8,6 @@ import java.nio.charset.StandardCharsets
   * membership structure the north-star names ("bloom/cuckoo URL-seen").
   *
   * Why offer it next to [[org.apache.spark.util.sketch.BloomFilter]]:
-  *  - DELETE support. A recrawl policy (url must become schedulable again)
-  *    can remove a fingerprint; a bloom can only be rebuilt from the exact
-  *    table (a full bucket pass at the 10^10 design point).
   *  - Far lower false-positive rate per probe at these sizes: 4-slot
   *    buckets with 16-bit fingerprints give fpp <= 2*4/2^16 ~ 1.2e-4 at
   *    full load vs the blooms' 1e-2 — and in the LSM seen-set the fpp of a
@@ -34,9 +31,8 @@ import java.nio.charset.StandardCharsets
   * slot); i1 = low bits of h; i2 = i1 XOR mix(fp) (partial-key cuckoo
   * hashing: either index + the fingerprint recovers the other, so an
   * eviction never needs the original key). An insert that exhausts
-  * `MaxKicks` evictions parks the victim in a small stash that lookups and
-  * deletes also consult — the filter NEVER false-negatives, even
-  * overfull. */
+  * `MaxKicks` evictions parks the victim in a small stash that lookups
+  * also consult — the filter NEVER false-negatives, even overfull. */
 final class CuckooFilter private (
     private val numBuckets: Int, // power of 2
     private val table: Array[Short],
@@ -48,7 +44,7 @@ final class CuckooFilter private (
 
   def size: Long = count
 
-  /** Entries parked by overfull inserts — every mightContain/delete scans
+  /** Entries parked by overfull inserts — every mightContain scans
     * this linearly, so a growing stash is the operational signal that the
     * filter was sized below its actual load (SeenSet warns past
     * [[SeenSet.StashWarnThreshold]]). */
@@ -93,10 +89,9 @@ final class CuckooFilter private (
     val fp = fingerprint(h)
     val i1 = (h & indexMask).toInt
     val i2 = altIndex(i1, fp)
-    // MULTISET insert — never dedup on a fingerprint match: two DIFFERENT
-    // urls can collide in (bucket, fingerprint), and a skipped copy would
-    // let delete(url1) false-negative url2 (Fan et al. §3.2: deletion is
-    // safe only when every insert stores a copy)
+    // MULTISET insert (Fan et al.'s construction): every put stores a copy,
+    // even on a fingerprint match, so `size` counts inserts and persisted
+    // segment bytes are a function of the inserted url multiset alone
     count += 1
     if (tryInsertAt(i1, fp) || tryInsertAt(i2, fp)) return
     // evict loop (partial-key: the fingerprint alone derives the alt index)
@@ -125,30 +120,6 @@ final class CuckooFilter private (
     while (k < stash.length) {
       val (si, sfp) = stash(k)
       if (sfp == fp && (si == i1 || si == i2)) return true
-      k += 1
-    }
-    false
-  }
-
-  /** Remove ONE copy of the url's fingerprint (cuckoo filters support
-    * deletion only for items actually inserted — deleting a never-inserted
-    * url can evict a colliding fingerprint; callers gate on the exact seen
-    * table first). Returns whether a fingerprint was removed. */
-  def delete(url: String): Boolean = {
-    val h = hash(url)
-    val fp = fingerprint(h)
-    val i1 = (h & indexMask).toInt
-    val i2 = altIndex(i1, fp)
-    var s = 0
-    while (s < SlotsPerBucket) {
-      if (slot(i1, s) == fp) { setSlot(i1, s, EmptySlot); count -= 1; return true }
-      if (slot(i2, s) == fp) { setSlot(i2, s, EmptySlot); count -= 1; return true }
-      s += 1
-    }
-    var k = 0
-    while (k < stash.length) {
-      val (si, sfp) = stash(k)
-      if (sfp == fp && (si == i1 || si == i2)) { stash.remove(k); count -= 1; return true }
       k += 1
     }
     false

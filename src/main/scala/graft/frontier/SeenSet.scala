@@ -32,9 +32,11 @@ object SeenSet {
     * BloomFilter, ~9.6 bits/url at 1% fpp. `Cuckoo`: [[CuckooFilter]],
     * ~16.8 bits/url but fpp ~1.2e-4 per segment (the LSM lookup sums fpp
     * over segments, so 80x lower per-segment fpp buys long delta chains
-    * between compactions) plus DELETE support for recrawl policies. The
-    * crawl product is filter-kind invariant: a filter only routes urls to
-    * the definitely-new fast path or the exact anti-join (spec-pinned). */
+    * between compactions). The crawl product is filter-kind invariant: a
+    * filter only routes urls to the definitely-new fast path or the exact
+    * anti-join (spec-pinned). Neither kind is edited in place: a
+    * CrawlJob.recrawlWithDelete leaves forgotten urls in the filters, where
+    * they only cost an exact probe, until compaction rebuilds them. */
   sealed trait FilterKind extends Serializable
   case object Bloom extends FilterKind
   case object Cuckoo extends FilterKind
@@ -109,7 +111,7 @@ object SeenSet {
 
   /** Stash depth past which an overfull cuckoo bucket is surfaced
     * operationally (each stash entry is scanned linearly by every
-    * mightContain/delete for the rest of the filter's life). */
+    * mightContain for the rest of the filter's life). */
   val StashWarnThreshold = 64
 
   /** Payload-sniffing deserialize: segments written under either filter
@@ -290,40 +292,6 @@ object SeenSet {
       val newRetried = cached.filter(!col("maybe") && col("retries") > 0).select("url")
         .unionByName(survived.filter(col("retries") > 0).select("url")).as[String]
       (kept, newRetried, cached)
-    }
-  }
-
-  /** Remove urls' fingerprints from ONE filter segment — the cuckoo DELETE
-    * path of a recrawl-with-forget policy (CrawlJob.recrawlWithDelete).
-    * `present` MUST be the subset of the delete list actually stored in
-    * the CORRESPONDING seen segment: deleting a never-inserted url can
-    * evict a colliding url's fingerprint and create a false negative,
-    * which would let that url skip the exact check and duplicate itself
-    * into the seen table (Fan et al. §3.2 — deletion is only safe for
-    * items actually inserted; the seen segment IS the record of what was
-    * inserted into this filter segment). Bloom payloads pass through
-    * byte-unchanged — a bloom cannot delete; its stale fingerprint merely
-    * routes the url to the exact anti-join, which the deleted table rows
-    * now let through, until the next major compaction rebuilds clean
-    * filters. Urls are deleted in sorted order so rewritten cuckoo bytes
-    * are deterministic. */
-  def deleteFromFilters(spark: SparkSession, filters: Dataset[BucketBloom],
-                        present: Dataset[(String, Int)]): Dataset[BucketBloom] = {
-    import spark.implicits._
-    filters.groupByKey(_.bucket).cogroup(present.groupByKey(_._2)) { (bucket, fs, ds) =>
-      val urls = ds.map(_._1).toArray
-      if (urls.isEmpty) fs
-      else {
-        java.util.Arrays.sort(urls.asInstanceOf[Array[Object]])
-        fs.map { bb =>
-          if (bb.bytes.isEmpty || !CuckooFilter.isCuckooPayload(bb.bytes)) bb
-          else {
-            val cf = CuckooFilter.deserialize(bb.bytes)
-            urls.foreach(cf.delete)
-            BucketBloom(bucket, cf.serialized)
-          }
-        }
-      }
     }
   }
 

@@ -145,13 +145,6 @@ object CrawlJob {
                robots: DataFrame, cfg: Config,
                recrawl: Option[Dataset[String]] = None): EpochResult = {
     import spark.implicits._
-    var tPhase = System.nanoTime()
-    def phase(name: String): Unit = {
-      val now = System.nanoTime()
-      if (sys.env.contains("GRAFT_EPOCH_TIMING"))
-        System.err.println(f"[epoch-timing] $name ${(now - tPhase) / 1e9}%.2fs")
-      tPhase = now
-    }
     val snap = store.latest().getOrElse(sys.error("no snapshot to resume from — call init() first"))
     val epoch = snap.epoch + 1
 
@@ -215,7 +208,6 @@ object CrawlJob {
     val unseen = unseenRaw
       .toDF().observe(obsUnseen, count(lit(1)).as("n")).as[Candidate]
 
-    phase("dedup+seen-filter(graph)")
     // 3. robots gate: broadcast the (small) per-host rule table
     val rulesDf = robots.select(col("host"),
       coalesce(col("disallow"), array()).as("disallow"),
@@ -263,12 +255,10 @@ object CrawlJob {
     //    zipWithIndex jobs. The deterministic total crawl order is
     //    (epoch, host ASC, seq ASC).
     val ranked = Scheduler.dequeueRanked(spark, allowedBudgeted, cfg.sched)
-    phase("gate+dequeue(graph)")
     val scheduledSeq: Dataset[ScheduledRow] = ranked
       .map { case (c, r) => ScheduledRow(epoch, r.toLong, c.url, c.host, c.priority, c.retries) }
       .toDF().observe(obsSched, count(lit(1)).as("n")).as[ScheduledRow]
       .persist(StorageLevel.MEMORY_AND_DISK)
-    phase("seq-rank")
     // 5+6. "fetch" (join the prepared pages corpus — unique canonical url,
     //    see preparePages) + extraction (single-pass Catalyst-native
     //    operator) in ONE pass. The persisted frame drops the raw html
@@ -289,14 +279,8 @@ object CrawlJob {
               col("__x.text").as("text"), col("__x.outlinks").as("outlinks"))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    phase("graph-build-rest")
     // 7. atomic snapshot commit (these writes are the actions that fire
     // every Observation above)
-    def timedWrite(name: String, df: DataFrame, partitionBy: Seq[String] = Nil): (String, String) = {
-      val p = store.writeTable(name, epoch, df, partitionBy)
-      phase(s"write-$name")
-      name -> p
-    }
     // First write materializes the whole epoch graph into the persisted
     // caches (extractedAll <- fetch join <- scheduledSeq <- dequeue <-
     // gate <- fused dedup). The five remaining writes then read only
@@ -311,11 +295,8 @@ object CrawlJob {
     // compacted blooms) become unreferenced garbage for expire() to reap.
     def appendSeg(name: String, path: String): String =
       snap.tables.get(name).map(_ + ";" + path).getOrElse(path)
-    val extractedEntry = {
-      val (n, p) = timedWrite("extracted",
-        extractedAll.filter(col("__hit")).select("epoch", "seq", "url", "extracted_html", "text"))
-      n -> appendSeg(n, p)
-    }
+    val extractedEntry = "extracted" -> appendSeg("extracted", store.writeTable("extracted", epoch,
+      extractedAll.filter(col("__hit")).select("epoch", "seq", "url", "extracted_html", "text")))
 
     // Swap the epoch cache for a SLIM projection: every pass after the
     // extracted write (outlink discovery, retry routing, lineage, the
@@ -329,7 +310,6 @@ object CrawlJob {
       .persist(StorageLevel.MEMORY_AND_DISK)
     slim.count()
     extractedAll.unpersist()
-    phase("slim-cache-swap")
 
     // misses -> retry (bounded). Columnar: url_host/arithmetic columns
     // instead of a typed map — no object decode/encode pass (url_host IS
@@ -466,11 +446,9 @@ object CrawlJob {
             val delta = SeenSet.buildDeltaBlooms(spark, newlySeen, cfg.seen)
             Seq("blooms" -> (oldSegs + ";" + store.writeTable("blooms", epoch, delta.toDF())))
           })
-      val entries = Seq(extractedEntry, Await.result(fFrontier, Duration.Inf),
+      (Seq(extractedEntry, Await.result(fFrontier, Duration.Inf),
         Await.result(fScheduled, Duration.Inf), Await.result(fLineage, Duration.Inf)) ++
-        fSeenBlooms.flatMap(Await.result(_, Duration.Inf))
-      phase("write-rest-parallel")
-      entries.toMap
+        fSeenBlooms.flatMap(Await.result(_, Duration.Inf))).toMap
     } finally pool.shutdown()
 
     def metric(o: org.apache.spark.sql.Observation, k: String): Long =
@@ -506,34 +484,37 @@ object CrawlJob {
   final case class RecrawlDeleteResult(requested: Long, deletedSeen: Long,
                                        segmentsRewritten: Int, epoch: Long)
 
-  /** Recrawl via SEEN-SET DELETION — the capability the cuckoo filter kind
-    * exists for (CuckooFilter scaladoc; a bloom can only be rebuilt).
-    * Unlike the `recrawl=` epoch input (which bypasses the seen filter for
-    * one epoch via a retries>=1 ticket), this FORGETS the urls entirely:
-    * the exact seen rows are removed and their cuckoo fingerprints deleted
-    * from every filter segment, so each url becomes schedulable through
-    * the NORMAL retries=0 path — the filter reports a clean miss (the
-    * definitely-new fast path), the url is scheduled, re-extracted, and
-    * re-registered as seen, with no duplicate rows and no special-cased
-    * state left behind. The urls are also enqueued as plain frontier
-    * candidates at `priority` so the refetch happens next epoch instead of
-    * waiting for rediscovery.
+  /** Recrawl via SEEN-SET DELETION. Unlike the `recrawl=` epoch input
+    * (which bypasses the seen filter for one epoch via a retries>=1
+    * ticket), this FORGETS the urls entirely: their exact seen rows are
+    * removed, so each url becomes schedulable through the NORMAL retries=0
+    * path — scheduled, re-extracted and re-registered as seen, with no
+    * duplicate rows and no special-cased state left behind. The urls are
+    * also enqueued as plain frontier candidates at `priority` so the
+    * refetch happens next epoch instead of waiting for rediscovery.
     *
-    * Commits one snapshot (an Iceberg-style delete commit). Storage shape:
-    * copy-on-write per TOUCHED segment — each seen/filter segment pair
-    * that actually contains a deleted url is rewritten (seen rows
-    * anti-joined out, bucket-partitioned like the compacted layout;
-    * filters via [[SeenSet.deleteFromFilters]], gated on per-segment
-    * membership so a never-inserted url can never evict a colliding
-    * fingerprint); untouched segments keep their existing paths. The
-    * membership probes are bounded (one per segment, <= maxBloomSegments)
-    * and directory-pruned to the delete urls' buckets on partitioned
-    * segments. A file-level manifest store (real Iceberg) would narrow
-    * the rewrite to affected files; at the dir-level store a rare
-    * operator-initiated delete paying one segment rewrite is the
-    * documented trade. Under the Bloom filter kind only the exact rows
-    * are removed (correct but slower: maybe-hits fall through the exact
-    * anti-join until compaction rebuilds the filters). */
+    * Filters are left as they are, under either filter kind: a forgotten
+    * url keeps its bloom bits or cuckoo fingerprint until the next major
+    * compaction rebuilds the filters from the seen table. That is correct
+    * because a filter never decides membership — a hit only routes the url
+    * to the exact anti-join of [[SeenSet.dedupAndFilterNew]], which reads
+    * the rewritten seen table and finds the url unseen. The stale entry
+    * costs one exact-probe row per forgotten url until then, and the
+    * snapshot's `blooms` entry passes through unchanged.
+    *
+    * Commits one snapshot (an Iceberg-style delete commit) after:
+    *  - ONE membership probe: every seen segment, directory-pruned to the
+    *    delete urls' buckets on partitioned segments and semi-joined with
+    *    them, aggregated to (segment index -> deleted rows), collected once;
+    *  - a copy-on-write rewrite of each seen segment that holds a deleted
+    *    url (rows anti-joined out, bucket-partitioned like the compacted
+    *    layout); untouched segments keep their paths. A file-level manifest
+    *    store (real Iceberg) would narrow this to affected files; at the
+    *    dir-level store a rare operator-initiated delete paying one segment
+    *    rewrite is the documented trade;
+    *  - an APPEND of the re-enqueued urls as a frontier delta segment
+    *    (`frontier` becomes `<previous>;<delta>`): readTable unions the
+    *    segments and the next runEpoch writes one full frontier again. */
   def recrawlWithDelete(spark: SparkSession, store: FrontierStore,
                         urls: Dataset[String], cfg: Config,
                         priority: Double = 1.0): RecrawlDeleteResult = {
@@ -544,61 +525,44 @@ object CrawlJob {
     val del = urls.flatMap(u => PyUrl.canonicalize(u)).distinct()
       .map(u => (u, SeenSet.bucketOfUrl(u, nb))).toDF("url", "bucket")
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val requested = del.count()
-    // bucket prune for the membership probes (same bounded driver
-    // round-trip as SeenSet.dedupAndFilterNew's hot-bucket collect)
-    val delBuckets = del.select("bucket").distinct().as[Int].collect()
+    // one driver round-trip yields the request size and the bucket prune
+    val perBucket = del.groupBy("bucket").count().as[(Int, Long)].collect()
+    val requested = perBucket.map(_._2).sum
+    val delBuckets = perBucket.map(_._1)
+    val delUrls = broadcast(del.select("url"))
     val seenSegs = snap.tables("seen").split(";").toVector
-    val filterSegs = snap.tables("blooms").split(";").toVector
-    require(seenSegs.length == filterSegs.length,
-      s"seen/filter segment lists out of step: ${seenSegs.length} vs ${filterSegs.length}")
-    var deleted = 0L
-    var rewritten = 0
-    val newPairs = seenSegs.zip(filterSegs).zipWithIndex.map {
-      case ((seenSeg, filterSeg), i) =>
-        val segDf = spark.read.parquet(seenSeg)
-        val pruned = SeenSet.prunedSeen(segDf, delBuckets, nb)
-        val present = pruned.join(broadcast(del.select("url")), Seq("url"), "left_semi")
-          .select(col("url"), col("bucket").cast("int")).as[(String, Int)]
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val nPresent = present.count()
-        if (nPresent == 0) { present.unpersist(); (seenSeg, filterSeg) }
-        else {
-          deleted += nPresent
-          rewritten += 1
-          val remaining = segDf.join(broadcast(del.select("url")), Seq("url"), "left_anti")
-          // a fully-emptied segment cannot be written partitioned: a
-          // zero-row partitionBy write carries no schema for the re-read
-          val newSeen =
-            if (remaining.isEmpty) store.writeTable(s"seen-d$i", epoch, remaining.repartition(1))
-            else store.writeTable(s"seen-d$i", epoch,
-              remaining.repartition(math.min(cfg.shufflePartitions, nb), col("bucket")),
-              Seq("bucket"))
-          val filters = spark.read.parquet(filterSeg).as[SeenSet.BucketBloom]
-          val newFilters = store.writeTable(s"blooms-d$i", epoch,
-            SeenSet.deleteFromFilters(spark, filters, present).toDF())
-          present.unpersist()
-          (newSeen, newFilters)
-        }
+    val segDfs = seenSegs.map(spark.read.parquet(_))
+    val deletedPerSeg = segDfs.zipWithIndex.map { case (segDf, i) =>
+      SeenSet.prunedSeen(segDf, delBuckets, nb)
+        .join(delUrls, Seq("url"), "left_semi").select(lit(i).as("seg"))
+    }.reduce(_ unionByName _).groupBy("seg").count().as[(Int, Long)].collect().toMap
+    val newSeen = seenSegs.zipWithIndex.map { case (seg, i) =>
+      if (!deletedPerSeg.contains(i)) seg
+      else {
+        val remaining = segDfs(i).join(delUrls, Seq("url"), "left_anti")
+        // a fully-emptied segment cannot be written partitioned: a
+        // zero-row partitionBy write carries no schema for the re-read
+        if (remaining.isEmpty) store.writeTable(s"seen-d$i", epoch, remaining.repartition(1))
+        else store.writeTable(s"seen-d$i", epoch,
+          remaining.repartition(math.min(cfg.shufflePartitions, nb), col("bucket")),
+          Seq("bucket"))
+      }
     }
-    // enqueue the urls as PLAIN candidates: they pass the (now clean) seen
-    // filter like any discovery — the normal path, no retry ticket
+    // enqueue the urls as PLAIN candidates: they pass the seen filter like
+    // any discovery — the normal path, no retry ticket
     val newCands = del.select("url").as[String]
       .map(u => Candidate(u, PyUrl.hostOf(u), priority, epoch.toInt, 0))
-    val frontier = store.readTable(spark, snap, "frontier").as[Candidate]
-      .unionByName(newCands)
-    val fPath = store.writeTable("frontier", epoch,
-      frontier.toDF().coalesce(cfg.shufflePartitions))
+    val frontierDelta = store.writeTable("frontier-d", epoch,
+      newCands.toDF().coalesce(cfg.shufflePartitions))
     del.unpersist()
     val tables = snap.tables ++ Map(
-      "frontier" -> fPath,
-      "seen" -> newPairs.map(_._1).mkString(";"),
-      "blooms" -> newPairs.map(_._2).mkString(";"))
+      "frontier" -> (snap.tables("frontier") + ";" + frontierDelta),
+      "seen" -> newSeen.mkString(";"))
     val counters = snap.counters +
       ("frontierSize" -> (snap.counters.getOrElse("frontierSize", 0L) + requested))
     store.commit(epoch, tables, counters)
     if (cfg.retainSnapshots > 0) store.expire(cfg.retainSnapshots)
-    RecrawlDeleteResult(requested, deleted, rewritten, epoch)
+    RecrawlDeleteResult(requested, deletedPerSeg.values.sum, deletedPerSeg.size, epoch)
   }
 
   /** Run epochs until the frontier drains or maxEpochs is hit. */

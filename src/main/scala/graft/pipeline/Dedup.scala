@@ -32,15 +32,6 @@ object Dedup {
     df.groupBy(xxhash64(key).as("content_hash"))
       .agg(count(lit(1)).as("n"), min(col(idCol)).as("keeper"))
 
-  /** Word shingles of size k as an array column. */
-  def shingles(text: Column, k: Int): Column = {
-    val toks = regexp_extract_all(lower(text), lit("\\S+"), lit(0))
-    when(size(toks) >= k,
-      transform(sequence(lit(0), size(toks) - k),
-        i => concat_ws(" ", slice(toks, i + 1, lit(k)))))
-      .otherwise(array(concat_ws(" ", toks)))
-  }
-
   private def bridge(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
     org.apache.spark.sql.GraftColumnBridge.expression(c)
   private def bridge(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =

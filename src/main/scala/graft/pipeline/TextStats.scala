@@ -105,34 +105,4 @@ object TextStats {
     * (quadratic interpreted eval, 43s at sf0.1 vs <2s now). */
   def fingerprint(text: Column): Column =
     col(graft.sql.Fingerprint64Expr(bridge(text)))
-
-  // ---- regex-column twins (differential-test reference only) -----------------
-
-  private[pipeline] def tokenCountRegex(text: Column): Column =
-    size(regexp_extract_all(text, lit("\\S+"), lit(0)))
-
-  private[pipeline] def bpeishCountRegex(text: Column): Column =
-    size(regexp_extract_all(text, lit("[A-Za-z]+|[0-9]|[^A-Za-z0-9\\s]"), lit(0)))
-
-  private[pipeline] def punctRatioRegex(text: Column): Column = {
-    val nonSpace = length(regexp_replace(text, "\\s+", ""))
-    val punct = length(regexp_replace(text, "[^!-/:-@\\[-`{-~]", ""))
-    when(nonSpace > 0, punct.cast("double") / nonSpace.cast("double")).otherwise(0.0)
-  }
-
-  private[pipeline] def meanWordLenRegex(text: Column): Column = {
-    val toks = tokenCountRegex(text)
-    when(toks > 0,
-      length(regexp_replace(text, "\\s+", "")).cast("double") / toks.cast("double"))
-      .otherwise(0.0)
-  }
-
-  private[pipeline] val stopwordsByLang: Seq[Seq[String]] = Seq(
-    graft.sql.TextStatsExpr.stopwordsEn, graft.sql.TextStatsExpr.stopwordsDe,
-    graft.sql.TextStatsExpr.stopwordsFr, graft.sql.TextStatsExpr.stopwordsEs)
-
-  private[pipeline] def stopwordHitsRegex(text: Column, words: Seq[String]): Column = {
-    val pattern = words.mkString("(?i)\\b(", "|", ")\\b")
-    size(regexp_extract_all(text, lit(pattern), lit(0)))
-  }
 }

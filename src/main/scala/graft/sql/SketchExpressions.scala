@@ -47,7 +47,8 @@ object SketchOps extends Serializable { // codegen ships a module reference per 
 
   /** Distinct shingle hashes (first-occurrence order): k-token shingles
     * joined by ' ', or ONE shingle of all tokens when fewer than k —
-    * exactly Dedup.shingles + array_distinct + xxhash64. */
+    * exactly the test-scope regex formulation
+    * (ReferenceFormulations.shingles) + array_distinct + xxhash64. */
   def shingleHashes(bytes: Array[Byte], k: Int): Array[Long] = {
     val r = tokenRanges(bytes)
     val nTok = r.length / 2

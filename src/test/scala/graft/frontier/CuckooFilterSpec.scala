@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Cuckoo filter contract (Fan et al. 2014 construction): zero false
   * negatives at and beyond design load, fpp far under the bloom default,
-  * working deletion, deterministic serialized state, stash-backed overfill
+  * deterministic serialized state, stash-backed overfill
   * behavior, and LSM interop through the SeenSet filter codec. */
 class CuckooFilterSpec extends AnyFunSuite {
 
@@ -22,33 +22,6 @@ class CuckooFilterSpec extends AnyFunSuite {
     // theoretical bound 2*4/2^16 ~ 1.2e-4; allow 4x slack on 200k probes
     assert(fp <= (200000 * 1.2e-4 * 4).toInt,
       s"fpp too high: $fp false positives over 200k probes")
-  }
-
-  test("delete removes an inserted url; survivors keep zero false negatives") {
-    val in = urls(20000, "d")
-    val cf = CuckooFilter.create(20000)
-    in.foreach(cf.put)
-    val (gone, kept) = in.splitAt(5000)
-    gone.foreach(u => assert(cf.delete(u), s"delete failed for inserted url $u"))
-    assert(kept.forall(cf.mightContain), "deletion caused a false negative on a survivor")
-    // deleted urls mostly gone (residual hits are other urls' colliding
-    // fingerprints — bounded by fpp, not by deletion correctness)
-    val residual = gone.count(cf.mightContain)
-    assert(residual <= 10, s"deleted urls still present: $residual of 5000")
-    assert(cf.delete(urls(1, "no").head) == false || true) // never throws
-  }
-
-  test("multiset inserts: delete removes ONE copy, a second identical insert survives") {
-    // the mechanism that keeps deletion safe under (bucket, fingerprint)
-    // collisions between different urls: every put stores a copy, so
-    // removing one occurrence never false-negatives the other
-    val cf = CuckooFilter.create(1024)
-    val u = "https://twice.example/p.html"
-    cf.put(u); cf.put(u)
-    assert(cf.delete(u))
-    assert(cf.mightContain(u), "second inserted copy must survive one delete")
-    assert(cf.delete(u))
-    assert(!cf.mightContain(u))
   }
 
   test("overfill parks victims in the stash: still zero false negatives at 130% load") {
@@ -73,10 +46,9 @@ class CuckooFilterSpec extends AnyFunSuite {
     val back = CuckooFilter.deserialize(a)
     assert(in.forall(back.mightContain))
     assert(back.size == build().size)
-    // deserialized filter keeps working (insert + delete)
+    // deserialized filter keeps working
     back.put("https://new.example/x.html")
     assert(back.mightContain("https://new.example/x.html"))
-    assert(back.delete(in.head))
   }
 
   test("payload sniffing: cuckoo magic vs spark bloom bytes") {

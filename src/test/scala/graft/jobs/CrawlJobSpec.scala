@@ -388,7 +388,7 @@ class CrawlJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!sched2.contains(fresh), s"epoch ${r2.epoch} re-crawled a registered url")
   }
 
-  test("recrawlWithDelete: cuckoo fingerprints removed, url re-schedulable via the NORMAL path") {
+  test("recrawlWithDelete: blooms kept, frontier +1 delta, url rescheduled once") {
     import spark.implicits._
     for (kind <- Seq[SeenSet.FilterKind](SeenSet.Cuckoo, SeenSet.Bloom)) {
       val kcfg = CrawlJob.Config(
@@ -400,7 +400,8 @@ class CrawlJobSpec extends AnyFunSuite with BeforeAndAfterAll {
       CrawlJob.init(spark, store, SyntheticCorpus.seeds(spark, seed, 500L, 10), kcfg)
       (1 to 2).foreach(_ => CrawlJob.runEpoch(spark, store, pages, robots, kcfg))
       val snap0 = store.latest().get
-      val target = spark.read.parquet(snap0.tables("scheduled").split(";").toIndexedSeq: _*)
+      // a fetched url: a refetch hits the corpus, so no retry can follow it
+      val target = spark.read.parquet(snap0.tables("extracted").split(";").toIndexedSeq: _*)
         .select("url").as[String].collect().sorted.head
       def seenCount(snap: graft.store.Snapshot): Long =
         store.readTable(spark, snap, "seen").filter(org.apache.spark.sql.functions.col("url") === target).count()
@@ -411,28 +412,34 @@ class CrawlJobSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(seenCount(snap0) == 1 && filterSaysMaybe(snap0), s"[$kind] fixture: target must be seen")
 
       val r = CrawlJob.recrawlWithDelete(spark, store, spark.createDataset(Seq(target)), kcfg)
-      assert(r.requested == 1 && r.deletedSeen == 1 && r.segmentsRewritten >= 1)
+      assert(r.requested == 1 && r.deletedSeen == 1 && r.segmentsRewritten == 1)
       val snap1 = store.latest().get
       assert(seenCount(snap1) == 0, s"[$kind] exact seen row must be deleted")
-      if (kind == SeenSet.Cuckoo)
-        assert(!filterSaysMaybe(snap1),
-          "cuckoo fingerprint must be deleted: a clean filter miss restores the definitely-new fast path")
-      // other urls' membership is untouched (no collateral false negatives)
-      val others = store.readTable(spark, snap1, "seen").select("url").as[String].collect()
-      val filters1 = store.readTable(spark, snap1, "blooms").as[SeenSet.BucketBloom].collect()
-        .filter(_.bytes.nonEmpty).map(b => SeenSet.deserializeFilter(b.bytes))
-      assert(others.forall(u => filters1.exists(_.mightContain(u))),
-        s"[$kind] deletion must not false-negative any still-seen url")
+      // filters are not edited: the stale entry only routes the url to the
+      // exact anti-join, which now finds it unseen
+      assert(snap1.tables("blooms") == snap0.tables("blooms"), s"[$kind] a delete writes no blooms version")
+      assert(filterSaysMaybe(snap1), s"[$kind] the filter keeps the forgotten url until compaction")
+      // the frontier is appended to, not rewritten
+      val segs0 = snap0.tables("frontier").split(";").toSeq
+      val segs1 = snap1.tables("frontier").split(";").toSeq
+      assert(segs1.length == segs0.length + 1 && segs1.init == segs0,
+        s"[$kind] frontier must be the previous entry plus one delta segment: $segs1")
+      val delta = spark.read.parquet(segs1.last).as[Candidate].collect()
+      assert(delta.map(c => (c.url, c.retries)).toSeq == Seq((target, 0)),
+        s"[$kind] the delta holds exactly the forgotten url as a plain candidate")
 
-      // the url re-enters through the NORMAL retries=0 path next epoch
+      // the url re-enters through the NORMAL retries=0 path, exactly once
       val re = CrawlJob.runEpoch(spark, store, pages, robots, kcfg)
+      assert(!store.latest().get.tables("frontier").contains(";"),
+        s"[$kind] the next epoch writes one full frontier again")
+      CrawlJob.runEpoch(spark, store, pages, robots, kcfg)
       val snap2 = store.latest().get
-      val lastSched = spark.read.parquet(snap2.tables("scheduled").split(";").last)
-        .select("url", "retries").as[(String, Int)].collect()
-      assert(lastSched.count(_._1 == target) == 1,
-        s"[$kind] forgotten url must be re-scheduled in epoch ${re.epoch}")
-      assert(lastSched.find(_._1 == target).get._2 == 0,
-        s"[$kind] re-schedule must be the plain retries=0 path, not a recrawl ticket")
+      val after = spark.read.parquet(snap2.tables("scheduled").split(";").toIndexedSeq: _*)
+        .filter(org.apache.spark.sql.functions.col("epoch") > r.epoch)
+        .select("epoch", "url", "retries").as[(Long, String, Int)].collect()
+        .filter(_._2 == target)
+      assert(after.toSeq == Seq((re.epoch, target, 0)),
+        s"[$kind] forgotten url must be re-scheduled once, with retries=0, in epoch ${re.epoch}: ${after.toSeq}")
       assert(seenCount(snap2) == 1, s"[$kind] re-registered exactly once, no duplicates")
     }
   }
@@ -454,7 +461,8 @@ class CrawlJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     // simulate the crash: the delete's table writes land, the manifest
     // rename does NOT — same failure point the runEpoch crash spec pins
     store.writeTable("seen-d0", snapBefore.epoch + 1, spark.range(3).toDF("junk"))
-    store.writeTable("blooms-d0", snapBefore.epoch + 1, spark.range(2).toDF("junk"))
+    val junkDelta = java.nio.file.Paths.get(
+      store.writeTable("frontier-d", snapBefore.epoch + 1, spark.range(2).toDF("junk")))
     val resumed = new ParquetSnapshotStore(store.rootDir)
     assert(resumed.latest().get.epoch == snapBefore.epoch,
       "uncommitted delete writes must not advance the snapshot")
@@ -464,17 +472,24 @@ class CrawlJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     // ...and re-running the delete on the resumed store works end-to-end
     val r = CrawlJob.recrawlWithDelete(spark, resumed, spark.createDataset(Seq(target)), kcfg)
     assert(r.deletedSeen == 1)
-    // the orphan junk dirs from the crash become reapable once their epoch
-    // is committed: after the delete commit at epoch+1 the next expire
-    // removes unreferenced table versions at <= committed epochs
+    // the re-run delete replaced the crash's frontier delta, not mixed with it
+    val deltaSeg = resumed.latest().get.tables("frontier").split(";").last
+    assert(java.nio.file.Paths.get(deltaSeg).toAbsolutePath.normalize ==
+      junkDelta.toAbsolutePath.normalize)
+    assert(spark.read.parquet(deltaSeg).select("url").as[String].collect().toSeq == Seq(target))
+    // a second delete crashes after its frontier delta write and the
+    // operator moves on: the next epoch commits at the orphan's epoch
+    val orphanDelta = java.nio.file.Paths.get(
+      resumed.writeTable("frontier-d", r.epoch + 1, spark.range(2).toDF("junk")))
+    CrawlJob.runEpoch(spark, resumed, pages, robots, kcfg)
     val (_, reaped) = resumed.expire(1)
-    val liveDirs = {
-      val out = scala.collection.mutable.Buffer.empty[String]
-      val tables = java.nio.file.Paths.get(resumed.rootDir, "tables")
-      java.nio.file.Files.walk(tables, 2).forEach(p => out += p.toString)
-      out.toVector
-    }
-    assert(reaped > 0, "expire must reap the crash-orphaned delete dirs")
+    assert(reaped > 0, "expire must reap the superseded delete dirs")
+    assert(!java.nio.file.Files.exists(orphanDelta),
+      "expire must reap a crash-orphaned frontier delta dir")
+    // once the epoch folded the committed delta into a full frontier, no
+    // retained manifest references the delta dir and expire reaps it too
+    assert(!java.nio.file.Files.exists(junkDelta),
+      "expire must reap the frontier delta dir written at the crashed delete's epoch")
     val snapNow = resumed.latest().get
     val referenced = snapNow.tables.values.flatMap(_.split(";")).toSet
     for (seg <- referenced)
@@ -490,63 +505,67 @@ class CrawlJobSpec extends AnyFunSuite with BeforeAndAfterAll {
       x = (x ^ (x >>> 27)) * 0x94D049BB133111EBL
       x ^ (x >>> 31)
     }
-    val kcfg = CrawlJob.Config(
-      seen = SeenSet.Config(numBuckets = 8, expectedPerBucket = 1 << 14,
-                            filterKind = SeenSet.Cuckoo),
-      sched = Scheduler.Config(perHostBudget = 4, saltFactor = 4))
-    val store = freshStore()
-    val pages = CrawlJob.preparePages(SyntheticCorpus.pages(spark, seed, 400L, 8).toDF())
-    val robots = SyntheticCorpus.robots(spark, seed).toDF()
-    CrawlJob.init(spark, store, SyntheticCorpus.seeds(spark, seed, 400L, 10), kcfg)
-    (1 to 2).foreach(_ => CrawlJob.runEpoch(spark, store, pages, robots, kcfg))
-    def seenUrls(): Vector[String] = {
-      val snap = store.latest().get
-      store.readTable(spark, snap, "seen").select("url").as[String].collect().toVector.sorted
-    }
-    def filters(): Array[SeenSet.UrlFilter] = {
-      val snap = store.latest().get
-      store.readTable(spark, snap, "blooms").as[SeenSet.BucketBloom].collect()
-        .filter(_.bytes.nonEmpty).map(b => SeenSet.deserializeFilter(b.bytes))
-    }
-    for (trial <- 0 until 3) {
-      val before = seenUrls()
-      assert(before.nonEmpty)
-      val r = mix(trial.toLong ^ 0xDE1E7EL)
-      // random subset of seen urls + garbage + a repeat
-      val k = 1 + (mix(r) & 3).toInt
-      val victims = (0 until k).map(i =>
-        before(((mix(r ^ i) >>> 1) % before.length).toInt)).distinct
-      val input = victims ++ victims.take(1) ++ Seq("not a url", "https://never.example/x")
-      // expected deletions = canonical input ∩ current seen (note: the
-      // dangling never.example url gets scheduled+registered as seen by
-      // the FIRST trial's epoch — fetch-missed urls are still marked seen
-      // once scheduled — so later trials legitimately delete it too)
-      val expectedDel = input.flatMap(PyUrl.canonicalize).distinct.filter(before.contains)
-      val res = CrawlJob.recrawlWithDelete(spark, store,
-        spark.createDataset(input), kcfg)
-      assert(res.deletedSeen == expectedDel.length,
-        s"trial $trial: expected ${expectedDel.length} deletions, got ${res.deletedSeen}")
-      val after = seenUrls()
-      assert(after == (before.toSet -- expectedDel).toVector.sorted,
-        s"trial $trial: seen table must lose exactly the deleted urls")
-      // NO collateral false negatives: every still-seen url is still
-      // covered by at least one segment filter
-      val fs = filters()
-      val uncovered = after.filterNot(u => fs.exists(_.mightContain(u)))
-      assert(uncovered.isEmpty, s"trial $trial: false negatives for $uncovered")
-      // the victims become crawlable again through the normal path
-      CrawlJob.runEpoch(spark, store, pages, robots, kcfg)
-      val snap = store.latest().get
-      val lastSched = spark.read.parquet(snap.tables("scheduled").split(";").last)
-        .select("url", "retries").as[(String, Int)].collect()
-      for (v <- victims) {
-        assert(lastSched.count(_._1 == v) == 1,
-          s"trial $trial: deleted url $v must re-schedule exactly once")
-        assert(lastSched.find(_._1 == v).get._2 == 0, s"trial $trial: normal retries=0 path")
+    for (kind <- Seq[SeenSet.FilterKind](SeenSet.Cuckoo, SeenSet.Bloom)) {
+      val kcfg = CrawlJob.Config(
+        seen = SeenSet.Config(numBuckets = 8, expectedPerBucket = 1 << 14, filterKind = kind),
+        sched = Scheduler.Config(perHostBudget = 4, saltFactor = 4))
+      val store = freshStore()
+      val pages = CrawlJob.preparePages(SyntheticCorpus.pages(spark, seed, 400L, 8).toDF())
+      val robots = SyntheticCorpus.robots(spark, seed).toDF()
+      CrawlJob.init(spark, store, SyntheticCorpus.seeds(spark, seed, 400L, 10), kcfg)
+      (1 to 2).foreach(_ => CrawlJob.runEpoch(spark, store, pages, robots, kcfg))
+      def seenUrls(): Vector[String] = {
+        val snap = store.latest().get
+        store.readTable(spark, snap, "seen").select("url").as[String].collect().toVector.sorted
       }
-      val again = seenUrls()
-      assert(again.size == again.distinct.size, s"trial $trial: no duplicate seen rows")
-      assert(victims.forall(again.contains), s"trial $trial: victims re-registered")
+      def filters(): Array[SeenSet.UrlFilter] = {
+        val snap = store.latest().get
+        store.readTable(spark, snap, "blooms").as[SeenSet.BucketBloom].collect()
+          .filter(_.bytes.nonEmpty).map(b => SeenSet.deserializeFilter(b.bytes))
+      }
+      for (trial <- 0 until 3) {
+        val before = seenUrls()
+        assert(before.nonEmpty, s"[$kind] trial $trial")
+        val r = mix(trial.toLong ^ 0xDE1E7EL)
+        // random subset of seen urls + garbage + a repeat
+        val k = 1 + (mix(r) & 3).toInt
+        val victims = (0 until k).map(i =>
+          before(((mix(r ^ i) >>> 1) % before.length).toInt)).distinct
+        val input = victims ++ victims.take(1) ++ Seq("not a url", "https://never.example/x")
+        // expected deletions = canonical input ∩ current seen (note: the
+        // dangling never.example url gets scheduled+registered as seen by
+        // the FIRST trial's epoch — fetch-missed urls are still marked seen
+        // once scheduled — so later trials legitimately delete it too)
+        val expectedDel = input.flatMap(PyUrl.canonicalize).distinct.filter(before.contains)
+        val bloomsBefore = store.latest().get.tables("blooms")
+        val res = CrawlJob.recrawlWithDelete(spark, store,
+          spark.createDataset(input), kcfg)
+        assert(store.latest().get.tables("blooms") == bloomsBefore,
+          s"[$kind] trial $trial: a delete writes no blooms version")
+        assert(res.deletedSeen == expectedDel.length,
+          s"[$kind] trial $trial: expected ${expectedDel.length} deletions, got ${res.deletedSeen}")
+        val after = seenUrls()
+        assert(after == (before.toSet -- expectedDel).toVector.sorted,
+          s"[$kind] trial $trial: seen table must lose exactly the deleted urls")
+        // NO collateral false negatives: every still-seen url is still
+        // covered by at least one segment filter
+        val fs = filters()
+        val uncovered = after.filterNot(u => fs.exists(_.mightContain(u)))
+        assert(uncovered.isEmpty, s"[$kind] trial $trial: false negatives for $uncovered")
+        // the victims become crawlable again through the normal path
+        CrawlJob.runEpoch(spark, store, pages, robots, kcfg)
+        val snap = store.latest().get
+        val lastSched = spark.read.parquet(snap.tables("scheduled").split(";").last)
+          .select("url", "retries").as[(String, Int)].collect()
+        for (v <- victims) {
+          assert(lastSched.count(_._1 == v) == 1,
+            s"[$kind] trial $trial: deleted url $v must re-schedule exactly once")
+          assert(lastSched.find(_._1 == v).get._2 == 0, s"[$kind] trial $trial: normal retries=0 path")
+        }
+        val again = seenUrls()
+        assert(again.size == again.distinct.size, s"[$kind] trial $trial: no duplicate seen rows")
+        assert(victims.forall(again.contains), s"[$kind] trial $trial: victims re-registered")
+      }
     }
   }
 

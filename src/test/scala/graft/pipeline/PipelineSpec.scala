@@ -96,14 +96,14 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
     def gather(c: org.apache.spark.sql.Column) =
       df.select(col("doc_id"), c.as("v")).collect().map(r => r.getLong(0) -> r.get(1)).toMap
-    assert(gather(TextStats.tokenCount(col("text"))) == gather(TextStats.tokenCountRegex(col("text"))), "tokens")
-    assert(gather(TextStats.bpeishCount(col("text"))) == gather(TextStats.bpeishCountRegex(col("text"))), "bpeish")
-    assert(gather(TextStats.punctRatio(col("text"))) == gather(TextStats.punctRatioRegex(col("text"))), "punct")
-    assert(gather(TextStats.meanWordLen(col("text"))) == gather(TextStats.meanWordLenRegex(col("text"))), "mwl")
-    for ((words, i) <- TextStats.stopwordsByLang.zipWithIndex) {
+    assert(gather(TextStats.tokenCount(col("text"))) == gather(ReferenceFormulations.tokenCountRegex(col("text"))), "tokens")
+    assert(gather(TextStats.bpeishCount(col("text"))) == gather(ReferenceFormulations.bpeishCountRegex(col("text"))), "bpeish")
+    assert(gather(TextStats.punctRatio(col("text"))) == gather(ReferenceFormulations.punctRatioRegex(col("text"))), "punct")
+    assert(gather(TextStats.meanWordLen(col("text"))) == gather(ReferenceFormulations.meanWordLenRegex(col("text"))), "mwl")
+    for ((words, i) <- ReferenceFormulations.stopwordsByLang.zipWithIndex) {
       val field = Seq("hits_en", "hits_de", "hits_fr", "hits_es")(i)
       assert(gather(TextStats.stats(col("text")).getField(field)) ==
-        gather(TextStats.stopwordHitsRegex(col("text"), words)), field)
+        gather(ReferenceFormulations.stopwordHitsRegex(col("text"), words)), field)
     }
   }
 
