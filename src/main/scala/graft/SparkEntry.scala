@@ -73,8 +73,7 @@ object SparkEntry {
     CrawlJob.init(s, store, SyntheticCorpus.seeds(s, 42L, 500L, 10), cfg)
     CrawlJob.runEpoch(s, store, pages, robots, cfg)
     CrawlJob.runEpoch(s, store, pages, robots, cfg)
-    val snap = store.latest().get
-    s.read.parquet(snap.tables("scheduled").split(";").toIndexedSeq: _*)
+    store.readTable(s, store.latest().get, "scheduled")
       .select("epoch", "seq", "url").orderBy("epoch", "seq")
   }
 

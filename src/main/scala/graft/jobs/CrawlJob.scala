@@ -114,14 +114,10 @@ object CrawlJob {
     val frontier: Dataset[Candidate] = seeds.flatMap { case (u, prio) =>
       PyUrl.canonicalize(u).map(c => Candidate(c, PyUrl.hostOf(c), prio, 0, 0))
     }
-    // repartition(1): an empty dataframe must still write one parquet file
-    // so the schema survives for the epoch-0 read
-    val emptySeen = spark.emptyDataset[(String, Int)].toDF("url", "bucket").repartition(1)
-    val emptyBlooms = spark.emptyDataset[SeenSet.BucketBloom].toDF().repartition(1)
     val tables = Map(
-      "frontier" -> store.writeTable("frontier", -1, frontier.toDF().repartition(1)),
-      "seen" -> store.writeTable("seen", -1, emptySeen),
-      "blooms" -> store.writeTable("blooms", -1, emptyBlooms))
+      "frontier" -> store.writeTable("frontier", -1, frontier.toDF()),
+      "seen" -> store.writeTable("seen", -1, spark.emptyDataset[(String, Int)].toDF("url", "bucket")),
+      "blooms" -> store.writeTable("blooms", -1, spark.emptyDataset[SeenSet.BucketBloom].toDF()))
     store.commit(-1, tables,
       Map("frontierSize" -> frontier.count(), "frontierRetried" -> 0L))
   }
@@ -152,6 +148,7 @@ object CrawlJob {
     // (Observation) instead of separate count() jobs — at 10^10 scale every
     // extra count() is a full pass over a huge table.
     import org.apache.spark.sql.Observation
+    val obsIn = Observation(s"in-$epoch")
     val obsUnseen = Observation(s"unseen-$epoch")
     val obsGate = Observation(s"gate-$epoch")
     val obsSched = Observation(s"sched-$epoch")
@@ -160,33 +157,20 @@ object CrawlJob {
     val obsDisc = Observation(s"disc-$epoch")
 
     val frontierBase = store.readTable(spark, snap, "frontier").as[Candidate]
-    // persist only when a recrawl makes the frame dual-consumed (count +
-    // cogroup); the steady-state epoch reads the frontier parquet exactly
-    // once, so caching it was a pure block-manager write with no reader
-    val frontier = (recrawl match {
-      case Some(urls) =>
-        val rc = urls.flatMap(u => PyUrl.canonicalize(u).map(c =>
-          Candidate(c, PyUrl.hostOf(c), 1.0, epoch.toInt, 1))).distinct()
-        // recrawl rows MERGE with any existing frontier row via the fused
-        // dedup's order-independent per-url reducer (SeenSet.mergeByUrl):
-        // the merged candidate keeps max(existing.retries, 1), so it (a)
-        // bypasses the seen filter — the recrawl request cannot be lost to
-        // a higher-priority retries=0 duplicate — and (b) PRESERVES an
-        // in-flight fetch-miss retry's budget (the round-4 anti-join
-        // replacement reset retries to 1, granting a url up to one extra
-        // schedule beyond the 1+maxRetries bound — r5 advisory). A plain
-        // union suffices; no join.
-        frontierBase.unionByName(rc).persist(StorageLevel.MEMORY_AND_DISK)
-      case None => frontierBase
-    })
-    // frontier row count is already known exactly: the previous snapshot
-    // recorded it at write time (no extra pass, no metric plumbing). A
-    // recrawl epoch changed the row set (anti-join removal + union), so
-    // the counter is stale — count the persisted frame instead (reads the
-    // cache; recrawl epochs are operator-initiated, not the steady state)
-    val inRows =
-      if (recrawl.isDefined) frontier.count()
-      else snap.counters.getOrElse("frontierSize", 0L)
+    val frontier = recrawl.fold(frontierBase) { urls =>
+      val rc = urls.flatMap(u => PyUrl.canonicalize(u).map(c =>
+        Candidate(c, PyUrl.hostOf(c), 1.0, epoch.toInt, 1))).distinct()
+      // recrawl rows MERGE with any existing frontier row via the fused
+      // dedup's order-independent per-url reducer (SeenSet.mergeByUrl):
+      // the merged candidate keeps max(existing.retries, 1), so it (a)
+      // bypasses the seen filter — the recrawl request cannot be lost to
+      // a higher-priority retries=0 duplicate — and (b) PRESERVES an
+      // in-flight fetch-miss retry's budget (the round-4 anti-join
+      // replacement reset retries to 1, granting a url up to one extra
+      // schedule beyond the 1+maxRetries bound — r5 advisory). A plain
+      // union suffices; no join.
+      frontierBase.unionByName(rc)
+    }
     val seen = store.readTable(spark, snap, "seen")
     val blooms = store.readTable(spark, snap, "blooms").as[SeenSet.BucketBloom]
 
@@ -203,8 +187,11 @@ object CrawlJob {
     //    snapshot without the counter stays on the conservative path.
     val mayHaveRetries = recrawl.isDefined ||
       snap.counters.get("frontierRetried").forall(_ > 0L)
-    val (unseenRaw, newRetriedUrls, seenSetCache) =
-      SeenSet.dedupAndFilterNew(spark, frontier, seen, blooms, cfg.seen, mayHaveRetries)
+    //    The observation counts the epoch's input rows (frontier plus
+    //    recrawl requests) inside the same pass.
+    val (unseenRaw, newRetriedUrls, seenSetCache) = SeenSet.dedupAndFilterNew(spark,
+      frontier.toDF().observe(obsIn, count(lit(1)).as("n")).as[Candidate],
+      seen, blooms, cfg.seen, mayHaveRetries)
     val unseen = unseenRaw
       .toDF().observe(obsUnseen, count(lit(1)).as("n")).as[Candidate]
 
@@ -289,13 +276,11 @@ object CrawlJob {
     // latencies the same way). This cut the per-epoch serial write tail,
     // the dominant fixed cost at sandbox epoch sizes.
     // scheduled/lineage/extracted are APPEND tables: the manifest carries
-    // every epoch's segment (';'-joined, like seen/blooms), so the crawl's
+    // every epoch's segment (like seen/blooms), so the crawl's
     // full product stays referenced — and therefore alive — across
     // snapshot expiry. Only full-rewrite state versions (frontier,
     // compacted blooms) become unreferenced garbage for expire() to reap.
-    def appendSeg(name: String, path: String): String =
-      snap.tables.get(name).map(_ + ";" + path).getOrElse(path)
-    val extractedEntry = "extracted" -> appendSeg("extracted", store.writeTable("extracted", epoch,
+    val extractedEntry = "extracted" -> snap.append("extracted", store.writeTable("extracted", epoch,
       extractedAll.filter(col("__hit")).select("epoch", "seq", "url", "extracted_html", "text")))
 
     // Swap the epoch cache for a SLIM projection: every pass after the
@@ -400,11 +385,11 @@ object CrawlJob {
           nextFrontier.toDF().coalesce(cfg.shufflePartitions))
       }
       val fScheduled = Future {
-        "scheduled" -> appendSeg("scheduled",
+        "scheduled" -> snap.append("scheduled",
           store.writeTable("scheduled", epoch, scheduledSeq.toDF()))
       }
       val fLineage = Future {
-        "lineage" -> appendSeg("lineage",
+        "lineage" -> snap.append("lineage",
           store.writeTable("lineage", epoch, lineage.toDF()))
       }
       // blooms are append-only delta segments (each sized to its actual
@@ -419,19 +404,18 @@ object CrawlJob {
       // inter-compaction deltas stay unpartitioned (LSM memtable shape) and
       // are merely row-filtered. expire() reclaims the superseded delta
       // dirs once the manifests referencing them age out.
-      val oldSegs = snap.tables("blooms")
-      val compacting = oldSegs.split(";").length + 1 > cfg.seen.maxBloomSegments
+      val compacting = snap.segments("blooms").length + 1 > cfg.seen.maxBloomSegments
       val fSeenBlooms: Seq[Future[Seq[(String, String)]]] =
         if (compacting) Seq(Future {
-          val allSeen = store.readTable(spark, snap, "seen").unionByName(seenDelta)
           // repartition by bucket: ~one file per bucket dir, not one per
           // shuffle task per dir
-          val compacted =
-            if (allSeen.isEmpty) store.writeTable("seen", epoch, seenDelta.repartition(1))
-            else store.writeTable("seen", epoch,
-              allSeen.repartition(cfg.shufflePartitions, col("bucket")), Seq("bucket"))
-          val full = SeenSet.buildBlooms(spark,
-            spark.read.parquet(compacted).select("url").as[String], cfg.seen)
+          val compacted = store.writeTable("seen", epoch,
+            store.readTable(spark, snap, "seen").unionByName(seenDelta)
+              .repartition(cfg.shufflePartitions, col("bucket")), Seq("bucket"))
+          // the filters are built from the compacted table as it is stored
+          val full = SeenSet.buildBlooms(spark, store.readTable(spark,
+            Snapshot(epoch, Map("seen" -> compacted), Map.empty), "seen").select("url").as[String],
+            cfg.seen)
           Seq("seen" -> compacted,
               "blooms" -> store.writeTable("blooms", epoch, full.toDF()))
         })
@@ -440,11 +424,11 @@ object CrawlJob {
           // persisted scheduledSeq projection) — run them concurrently
           // like the other state writes
           Future {
-            Seq("seen" -> (snap.tables("seen") + ";" + store.writeTable("seen", epoch, seenDelta)))
+            Seq("seen" -> snap.append("seen", store.writeTable("seen", epoch, seenDelta)))
           },
           Future {
             val delta = SeenSet.buildDeltaBlooms(spark, newlySeen, cfg.seen)
-            Seq("blooms" -> (oldSegs + ";" + store.writeTable("blooms", epoch, delta.toDF())))
+            Seq("blooms" -> snap.append("blooms", store.writeTable("blooms", epoch, delta.toDF())))
           })
       (Seq(extractedEntry, Await.result(fFrontier, Duration.Inf),
         Await.result(fScheduled, Duration.Inf), Await.result(fLineage, Duration.Inf)) ++
@@ -454,7 +438,7 @@ object CrawlJob {
     def metric(o: org.apache.spark.sql.Observation, k: String): Long =
       o.get.get(k).map(v => if (v == null) 0L else v.asInstanceOf[Long]).getOrElse(0L)
     val unseenCount = metric(obsUnseen, "n")
-    val dedupedCount = inRows - unseenCount
+    val dedupedCount = metric(obsIn, "n") - unseenCount
     val robotsBlocked = metric(obsGate, "blocked")
     val scheduledCount = metric(obsSched, "n")
     val fetchedCount = metric(obsFetch, "fetched")
@@ -473,7 +457,7 @@ object CrawlJob {
     // compacted-away bloom generations, crash orphans (epoch <= committed)
     if (cfg.retainSnapshots > 0) store.expire(cfg.retainSnapshots)
 
-    Seq(frontier.toDF(), gated, scheduledSeq.toDF(), slim, nextFrontier.toDF())
+    Seq(gated, scheduledSeq.toDF(), slim, nextFrontier.toDF())
       .foreach(d => d.unpersist())
     seenSetCache.unpersist()
 
@@ -513,8 +497,8 @@ object CrawlJob {
     *    dir-level store a rare operator-initiated delete paying one segment
     *    rewrite is the documented trade;
     *  - an APPEND of the re-enqueued urls as a frontier delta segment
-    *    (`frontier` becomes `<previous>;<delta>`): readTable unions the
-    *    segments and the next runEpoch writes one full frontier again. */
+    *    (`frontier` gains one segment): readTable unions the segments and
+    *    the next runEpoch writes one full frontier again. */
   def recrawlWithDelete(spark: SparkSession, store: FrontierStore,
                         urls: Dataset[String], cfg: Config,
                         priority: Double = 1.0): RecrawlDeleteResult = {
@@ -530,23 +514,16 @@ object CrawlJob {
     val requested = perBucket.map(_._2).sum
     val delBuckets = perBucket.map(_._1)
     val delUrls = broadcast(del.select("url"))
-    val seenSegs = snap.tables("seen").split(";").toVector
-    val segDfs = seenSegs.map(spark.read.parquet(_))
+    val seenSegs = snap.segments("seen")
+    val segDfs = store.readSegments(spark, snap, "seen")
     val deletedPerSeg = segDfs.zipWithIndex.map { case (segDf, i) =>
       SeenSet.prunedSeen(segDf, delBuckets, nb)
         .join(delUrls, Seq("url"), "left_semi").select(lit(i).as("seg"))
     }.reduce(_ unionByName _).groupBy("seg").count().as[(Int, Long)].collect().toMap
     val newSeen = seenSegs.zipWithIndex.map { case (seg, i) =>
       if (!deletedPerSeg.contains(i)) seg
-      else {
-        val remaining = segDfs(i).join(delUrls, Seq("url"), "left_anti")
-        // a fully-emptied segment cannot be written partitioned: a
-        // zero-row partitionBy write carries no schema for the re-read
-        if (remaining.isEmpty) store.writeTable(s"seen-d$i", epoch, remaining.repartition(1))
-        else store.writeTable(s"seen-d$i", epoch,
-          remaining.repartition(math.min(cfg.shufflePartitions, nb), col("bucket")),
-          Seq("bucket"))
-      }
+      else store.writeTable(s"seen-d$i", epoch, segDfs(i).join(delUrls, Seq("url"), "left_anti")
+        .repartition(math.min(cfg.shufflePartitions, nb), col("bucket")), Seq("bucket"))
     }
     // enqueue the urls as PLAIN candidates: they pass the seen filter like
     // any discovery — the normal path, no retry ticket
@@ -556,8 +533,8 @@ object CrawlJob {
       newCands.toDF().coalesce(cfg.shufflePartitions))
     del.unpersist()
     val tables = snap.tables ++ Map(
-      "frontier" -> (snap.tables("frontier") + ";" + frontierDelta),
-      "seen" -> newSeen.mkString(";"))
+      "frontier" -> snap.append("frontier", frontierDelta),
+      "seen" -> Snapshot.entry(newSeen))
     val counters = snap.counters +
       ("frontierSize" -> (snap.counters.getOrElse("frontierSize", 0L) + requested))
     store.commit(epoch, tables, counters)

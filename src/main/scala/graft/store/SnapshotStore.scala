@@ -1,8 +1,10 @@
 package graft.store
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import org.apache.spark.sql.types.{DataType, StructType}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.nio.charset.StandardCharsets
+import scala.jdk.CollectionConverters._
 
 /** Iceberg-shaped snapshot store over parquet (SURVEY.md §7.6).
   *
@@ -13,12 +15,27 @@ import java.nio.charset.StandardCharsets
   * giving Iceberg-equivalent all-or-nothing semantics; resume reads the
   * highest committed manifest. Swappable for real Iceberg (same call
   * sites: writeTable/commit/latest).
+  *
+  * The store owns the table format. A snapshot table is a list of
+  * segments (table-version dirs, oldest first): append tables such as
+  * seen, blooms, scheduled, lineage and extracted add one per epoch, a
+  * delete adds a frontier delta. Callers list and extend it only through
+  * [[Snapshot.segments]], [[Snapshot.append]] and [[Snapshot.entry]], and
+  * read it only through [[readTable]] and [[readSegments]].
   */
 trait FrontierStore {
   def writeTable(name: String, epoch: Long, df: DataFrame, partitionBy: Seq[String] = Nil): String
   def commit(epoch: Long, tables: Map[String, String], counters: Map[String, Long]): Unit
   def latest(): Option[Snapshot]
+
+  /** The table's segments as one frame, each read with the schema it was
+    * written with. */
   def readTable(spark: SparkSession, snap: Snapshot, name: String): DataFrame
+
+  /** Each of the table's segments as its own frame, oldest first (a
+    * copy-on-write delete rewrites segments one by one). */
+  def readSegments(spark: SparkSession, snap: Snapshot, name: String): IndexedSeq[DataFrame] =
+    snap.segments(name).map(seg => readTable(spark, snap.copy(tables = Map(name -> seg)), name))
 
   /** Iceberg `expire_snapshots` analog: keep the newest `retain` committed
     * manifests, delete the older ones, then delete every table-version dir
@@ -34,29 +51,54 @@ trait FrontierStore {
   def expire(retain: Int): (Int, Int)
 }
 
-final case class Snapshot(epoch: Long, tables: Map[String, String], counters: Map[String, Long])
+/** A committed snapshot. `tables` maps each table to its manifest entry,
+  * the table's segment paths joined by `;`. */
+final case class Snapshot(epoch: Long, tables: Map[String, String], counters: Map[String, Long]) {
 
+  /** The table's segment paths, oldest first; empty for an absent table. */
+  def segments(name: String): IndexedSeq[String] =
+    tables.get(name).fold(IndexedSeq.empty[String])(_.split(';').toIndexedSeq)
+
+  /** The table's manifest entry with `path` appended as its newest segment. */
+  def append(name: String, path: String): String = Snapshot.entry(segments(name) :+ path)
+}
+
+object Snapshot {
+  /** The manifest entry of a table made of `segments`, oldest first. */
+  def entry(segments: Seq[String]): String = segments.mkString(";")
+}
+
+/** Parquet table versions under `root/tables/<name>/v<epoch>`, manifests
+  * under `root`. Each version dir also holds `_schema.json`, the written
+  * frame's schema: every segment is read with it, so a read launches no
+  * schema-inference job and a zero-row `partitionBy` write (which leaves no
+  * parquet footer) reads back as an empty table. Parquet readers skip
+  * files whose names start with `_`.
+  *
+  * The manifest's flat JSON holds table names, counter names and paths
+  * verbatim, so a root that contains `, ; " \ { }` or a control character
+  * is rejected. */
 final class ParquetSnapshotStore(root: String) extends FrontierStore {
+  require(!root.exists(c => Character.isISOControl(c) || ",;\"\\{}".indexOf(c) >= 0),
+    "store root must not contain , ; \" \\ { } or control characters: " + root)
 
   /** Snapshot root directory (for resume: open a new store on the same root). */
   def rootDir: String = root
 
   private val rootPath = Paths.get(root)
+  private val SchemaFile = "_schema.json"
   Files.createDirectories(rootPath)
 
   override def writeTable(name: String, epoch: Long, df: DataFrame,
                           partitionBy: Seq[String] = Nil): String = {
-    val path = rootPath.resolve(s"tables/$name/v$epoch").toString
+    val path = rootPath.resolve(s"tables/$name/v$epoch")
     val w = df.write.mode(SaveMode.Overwrite)
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(path)
-    path
+    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(path.toString)
+    Files.write(path.resolve(SchemaFile), df.schema.json.getBytes(StandardCharsets.UTF_8))
+    path.toString
   }
 
-  private def q(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
+  private def q(s: String): String = "\"" + s + "\""
 
   override def commit(epoch: Long, tables: Map[String, String],
                       counters: Map[String, Long]): Unit = {
@@ -69,33 +111,31 @@ final class ParquetSnapshotStore(root: String) extends FrontierStore {
       StandardCopyOption.ATOMIC_MOVE)
   }
 
-  /** All committed manifests as (epoch, file). Files.list holds an open
-    * directory handle until closed — this runs at least once per epoch, so
-    * an unclosed stream would leak an fd per epoch. */
-  private def listManifests(): Vector[(Long, java.nio.file.Path)] = {
-    if (!Files.isDirectory(rootPath)) return Vector.empty
-    val out = Vector.newBuilder[(Long, java.nio.file.Path)]
-    val stream = Files.list(rootPath)
-    try {
-      val it = stream.iterator()
-      while (it.hasNext) {
-        val p = it.next()
-        val n = p.getFileName.toString
-        if (n.startsWith("manifest-") && n.endsWith(".json"))
-          out += ((n.stripPrefix("manifest-").stripSuffix(".json").toLong, p))
-      }
-    } finally stream.close()
-    out.result()
-  }
-
-  override def latest(): Option[Snapshot] = {
-    val ms = listManifests()
-    if (ms.isEmpty) None
+  /** The entries of `dir`, none if it is not a directory. Files.list holds
+    * an open directory handle until closed — this runs at least once per
+    * epoch, so an unclosed stream would leak an fd per epoch. */
+  private def list(dir: Path): Vector[Path] =
+    if (!Files.isDirectory(dir)) Vector.empty
     else {
-      val best = ms.maxBy(_._1)._2
-      Some(parseManifest(new String(Files.readAllBytes(best), StandardCharsets.UTF_8)))
+      val s = Files.list(dir)
+      try s.iterator().asScala.toVector finally s.close()
     }
-  }
+
+  /** The epoch in file name `n` = prefix + epoch + suffix, if it is one. */
+  private def epochOf(n: String, prefix: String, suffix: String): Option[Long] =
+    if (n.startsWith(prefix) && n.endsWith(suffix))
+      n.stripPrefix(prefix).stripSuffix(suffix).toLongOption
+    else None
+
+  /** All committed manifests as (epoch, file). */
+  private def listManifests(): Vector[(Long, Path)] =
+    list(rootPath).flatMap(p => epochOf(p.getFileName.toString, "manifest-", ".json").map((_, p)))
+
+  private def readManifest(p: Path): Snapshot =
+    parseManifest(new String(Files.readAllBytes(p), StandardCharsets.UTF_8))
+
+  override def latest(): Option[Snapshot] =
+    listManifests().maxByOption(_._1).map(m => readManifest(m._2))
 
   override def expire(retain: Int): (Int, Int) = {
     require(retain >= 1, s"retain must be >= 1, got $retain")
@@ -104,73 +144,29 @@ final class ParquetSnapshotStore(root: String) extends FrontierStore {
     val latestCommitted = ms.head._1
     val (retained, expired) = ms.splitAt(retain)
     // every table-version dir any retained manifest references stays live
-    // — including old epochs' append segments (';'-joined lists)
-    val referenced = scala.collection.mutable.HashSet.empty[java.nio.file.Path]
-    for ((_, mf) <- retained) {
-      val snap = parseManifest(new String(Files.readAllBytes(mf), StandardCharsets.UTF_8))
-      for ((_, v) <- snap.tables; seg <- v.split(";") if seg.nonEmpty)
-        referenced += Paths.get(seg).toAbsolutePath.normalize
-    }
+    // — including old epochs' append segments
+    val referenced = for ((_, mf) <- retained.toSet; snap = readManifest(mf);
+                          name <- snap.tables.keys; seg <- snap.segments(name) if seg.nonEmpty)
+      yield Paths.get(seg).toAbsolutePath.normalize
     // manifests first: after this point no surviving manifest references a
     // dir the next step deletes (a crash in between only leaves
     // unreferenced dirs, reaped by the next expire)
     expired.foreach { case (_, p) => Files.deleteIfExists(p) }
     // tmp files from crashed commits at committed-or-older epochs
-    val tmpStream = Files.list(rootPath)
-    try {
-      val it = tmpStream.iterator()
-      while (it.hasNext) {
-        val p = it.next()
-        val n = p.getFileName.toString
-        if (n.startsWith(".manifest-") && n.endsWith(".json.tmp") &&
-            scala.util.Try(n.stripPrefix(".manifest-").stripSuffix(".json.tmp").toLong)
-              .toOption.exists(_ <= latestCommitted))
-          Files.deleteIfExists(p)
-      }
-    } finally tmpStream.close()
+    for (p <- list(rootPath)
+         if epochOf(p.getFileName.toString, ".manifest-", ".json.tmp").exists(_ <= latestCommitted))
+      Files.deleteIfExists(p)
     // reap unreferenced table-version dirs from committed-or-older epochs
-    var dirsDeleted = 0
-    val tablesRoot = rootPath.resolve("tables")
-    if (Files.isDirectory(tablesRoot)) {
-      val tStream = Files.list(tablesRoot)
-      try {
-        val tIt = tStream.iterator()
-        while (tIt.hasNext) {
-          val tableDir = tIt.next()
-          if (Files.isDirectory(tableDir)) {
-            val vStream = Files.list(tableDir)
-            try {
-              val vIt = vStream.iterator()
-              while (vIt.hasNext) {
-                val vDir = vIt.next()
-                val n = vDir.getFileName.toString
-                val epochOpt =
-                  if (n.startsWith("v")) scala.util.Try(n.stripPrefix("v").toLong).toOption
-                  else None
-                epochOpt match {
-                  case Some(e) if e <= latestCommitted &&
-                      !referenced.contains(vDir.toAbsolutePath.normalize) =>
-                    deleteRecursively(vDir)
-                    dirsDeleted += 1
-                  case _ => ()
-                }
-              }
-            } finally vStream.close()
-          }
-        }
-      } finally tStream.close()
-    }
-    (expired.size, dirsDeleted)
+    val stale = for (tableDir <- list(rootPath.resolve("tables")); vDir <- list(tableDir)
+                     if epochOf(vDir.getFileName.toString, "v", "").exists(_ <= latestCommitted) &&
+                       !referenced.contains(vDir.toAbsolutePath.normalize))
+      yield vDir
+    stale.foreach(deleteRecursively)
+    (expired.size, stale.size)
   }
 
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    if (Files.isDirectory(p)) {
-      val s = Files.list(p)
-      try {
-        val it = s.iterator()
-        while (it.hasNext) deleteRecursively(it.next())
-      } finally s.close()
-    }
+  private def deleteRecursively(p: Path): Unit = {
+    list(p).foreach(deleteRecursively)
     Files.deleteIfExists(p)
   }
 
@@ -197,15 +193,15 @@ final class ParquetSnapshotStore(root: String) extends FrontierStore {
     Snapshot(epoch, section("tables"), section("counters").map { case (k, v) => k -> v.toLong })
   }
 
-  override def readTable(spark: SparkSession, snap: Snapshot, name: String): DataFrame = {
-    // a table may be a ';'-joined list of append segments (e.g. the seen
-    // set: each epoch appends a delta instead of rewriting history).
+  override def readTable(spark: SparkSession, snap: Snapshot, name: String): DataFrame =
     // Segments are read PER ROOT and unioned: a single multi-root read
     // trips Spark's CONFLICTING_DIRECTORY_STRUCTURES check as soon as one
     // segment is bucket-partitioned (the post-compaction seen table) and
     // others are not (deltas). Filters push through the Union into every
     // branch, so partition pruning on partitioned segments still works.
-    snap.tables(name).split(";").toIndexedSeq
-      .map(spark.read.parquet(_)).reduce(_ unionByName _)
-  }
+    snap.segments(name).map { seg =>
+      val schema = DataType.fromJson(new String(
+        Files.readAllBytes(Paths.get(seg, SchemaFile)), StandardCharsets.UTF_8)).asInstanceOf[StructType]
+      spark.read.schema(schema).parquet(seg)
+    }.reduce(_ unionByName _)
 }

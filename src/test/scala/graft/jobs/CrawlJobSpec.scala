@@ -523,14 +523,22 @@ class CrawlJobSpec extends AnyFunSuite with BeforeAndAfterAll {
         store.readTable(spark, snap, "blooms").as[SeenSet.BucketBloom].collect()
           .filter(_.bytes.nonEmpty).map(b => SeenSet.deserializeFilter(b.bytes))
       }
-      for (trial <- 0 until 3) {
+      // the seed epoch's seen segment: the last trial deletes all of it
+      val seedSeg = 1
+      for (trial <- 0 until 4) {
         val before = seenUrls()
         assert(before.nonEmpty, s"[$kind] trial $trial")
         val r = mix(trial.toLong ^ 0xDE1E7EL)
-        // random subset of seen urls + garbage + a repeat
+        // random subset of seen urls + garbage + a repeat; the last trial
+        // takes every url of one whole seen segment instead
         val k = 1 + (mix(r) & 3).toInt
-        val victims = (0 until k).map(i =>
-          before(((mix(r ^ i) >>> 1) % before.length).toInt)).distinct
+        val victims =
+          if (trial == 3)
+            store.readSegments(spark, store.latest().get, "seen")(seedSeg).select("url").as[String]
+              .collect().toVector.sorted
+          else (0 until k).map(i =>
+            before(((mix(r ^ i) >>> 1) % before.length).toInt)).distinct
+        assert(victims.nonEmpty, s"[$kind] trial $trial")
         val input = victims ++ victims.take(1) ++ Seq("not a url", "https://never.example/x")
         // expected deletions = canonical input ∩ current seen (note: the
         // dangling never.example url gets scheduled+registered as seen by
@@ -547,6 +555,13 @@ class CrawlJobSpec extends AnyFunSuite with BeforeAndAfterAll {
         val after = seenUrls()
         assert(after == (before.toSet -- expectedDel).toVector.sorted,
           s"[$kind] trial $trial: seen table must lose exactly the deleted urls")
+        val seenNow = store.readTable(spark, store.latest().get, "seen")
+        assert(seenNow.schema.map(f => f.name -> f.dataType) ==
+          Seq("url" -> org.apache.spark.sql.types.StringType, "bucket" -> org.apache.spark.sql.types.IntegerType),
+          s"[$kind] trial $trial: seen schema after the delete: ${seenNow.schema}")
+        if (trial == 3)
+          assert(store.readSegments(spark, store.latest().get, "seen")(seedSeg).count() == 0,
+            s"[$kind] the emptied segment reads back with no rows")
         // NO collateral false negatives: every still-seen url is still
         // covered by at least one segment filter
         val fs = filters()

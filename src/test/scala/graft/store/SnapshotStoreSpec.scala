@@ -143,4 +143,70 @@ class SnapshotStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(store.expire(3) == ((0, 0)))
     assert(store.latest().get.epoch == 0)
   }
+
+  /** Spark jobs started while `body` runs, counted with a listener and an
+    * in-order marker job (the listener bus delivers events in order). */
+  private def jobsDuring[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        descriptions.add(String.valueOf(
+          Option(e.properties).map(_.getProperty("spark.job.description")).orNull))
+    }
+    sc.addSparkListener(listener)
+    val out = try {
+      val a = body
+      sc.setJobDescription("read-marker")
+      sc.parallelize(Seq(1), 1).count()
+      sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30000000000L
+      while (!descriptions.contains("read-marker") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      a
+    } finally sc.removeSparkListener(listener)
+    assert(descriptions.contains("read-marker"), "marker job never reached the listener")
+    (out, descriptions.toArray(Array.empty[String]).toSeq.takeWhile(_ != "read-marker").size)
+  }
+
+  test("readTable: partitioned, unpartitioned and zero-row partitioned segments, no Spark job, written schema") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val store = freshStore()
+    val written = Seq(("a", 1), ("b", 2)).toDF("url", "bucket")
+    val segs = Seq(
+      store.writeTable("t", 0, written, Seq("bucket")),
+      store.writeTable("t", 1, Seq(("c", 3)).toDF("url", "bucket")),
+      // leaves no parquet file at all, only _SUCCESS
+      store.writeTable("t", 2, spark.emptyDataset[(String, Int)].toDF("url", "bucket"), Seq("bucket")))
+    store.commit(2, Map("t" -> Snapshot.entry(segs)), Map.empty)
+    val snap = store.latest().get
+    assert(snap.segments("t") == segs)
+    val ((table, perSeg), jobs) = jobsDuring(
+      (store.readTable(spark, snap, "t"), store.readSegments(spark, snap, "t")))
+    assert(jobs == 0, s"reading a 3-segment table launched $jobs Spark job(s)")
+    def typed(df: org.apache.spark.sql.DataFrame) = df.schema.map(f => f.name -> f.dataType)
+    assert(typed(table) == typed(written))
+    assert(perSeg.forall(d => typed(d) == typed(written)))
+    assert(table.as[(String, Int)].collect().sorted.toSeq == Seq(("a", 1), ("b", 2), ("c", 3)))
+    assert(perSeg.map(_.count()) == Seq(2L, 1L, 0L))
+    assert(perSeg(2).filter(col("bucket") === 1).count() == 0)
+    assert(table.filter(col("bucket") === 2).select("url").as[String].collect().toSeq == Seq("b"))
+  }
+
+  test("store roots the manifest cannot represent are rejected; a root with spaces round-trips") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("snaproot")
+    for (bad <- Seq(",", ";", "\"", "\\", "{", "}", "\n", "\t", "\u0001", "\u007f")) {
+      val root = base.resolve("crawl" + bad + "v2").toString
+      intercept[IllegalArgumentException](new ParquetSnapshotStore(root))
+      assert(!Files.exists(Paths.get(root)), s"a rejected root must not be created: $root")
+    }
+    val store = new ParquetSnapshotStore(base.resolve("crawl store v2").toString)
+    val p = store.writeTable("t", 0, Seq("x", "y").toDF("url"))
+    store.commit(0, Map("t" -> p), Map("n" -> 2L))
+    val snap = new ParquetSnapshotStore(store.rootDir).latest().get
+    assert(snap.tables == Map("t" -> p) && snap.counters == Map("n" -> 2L))
+    assert(store.readTable(spark, snap, "t").as[String].collect().sorted.toSeq == Seq("x", "y"))
+  }
 }
