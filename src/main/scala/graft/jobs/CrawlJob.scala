@@ -131,12 +131,12 @@ object CrawlJob {
     * retries=1 candidates, which (a) bypass the seen filter in
     * [[SeenSet.dedupAndFilterNew]] and (b) are excluded from the
     * newly-seen delta (scheduledSeq.filter(_.retries == 0)), so the seen
-    * table and filters never grow duplicates — no tombstone machinery
-    * needed, and the epoch stays replay-exact because the recrawl set is
-    * ordinary input data. Unknown/uncrawlable urls drop at
-    * canonicalization like any seed. Still subject to robots + the
-    * per-host politeness budget (a mass refresh cannot starve discovery
-    * of a host's budget beyond one epoch's share). */
+    * table and filters never grow duplicates — no delete segment needed
+    * (contrast [[recrawlWithDelete]]) — and the epoch stays replay-exact
+    * because the recrawl set is ordinary input data. Unknown/uncrawlable
+    * urls drop at canonicalization like any seed. Still subject to robots
+    * + the per-host politeness budget (a mass refresh cannot starve
+    * discovery of a host's budget beyond one epoch's share). */
   def runEpoch(spark: SparkSession, store: FrontierStore, pages: DataFrame,
                robots: DataFrame, cfg: Config,
                recrawl: Option[Dataset[String]] = None): EpochResult = {
@@ -171,6 +171,8 @@ object CrawlJob {
       // union suffices; no join.
       frontierBase.unionByName(rc)
     }
+    // the seen table as read: data segments masked by the delete segments
+    // recrawlWithDelete appended after them
     val seen = store.readTable(spark, snap, "seen")
     val blooms = store.readTable(spark, snap, "blooms").as[SeenSet.BucketBloom]
 
@@ -395,8 +397,9 @@ object CrawlJob {
       // blooms are append-only delta segments (each sized to its actual
       // insert count); every maxBloomSegments epochs a MAJOR COMPACTION
       // rewrites BOTH LSM structures — the whole seen table as ONE
-      // bucket-partitioned segment and full-capacity bloom filters rebuilt
-      // from it — bounding the per-bucket segment-union fpp, the read
+      // bucket-partitioned segment (read through readTable, so delete
+      // segments are applied and dropped) and full-capacity bloom filters
+      // rebuilt from it — bounding the per-bucket segment-union fpp, the read
       // fan-in, AND the manifest's segment-list length, at an amortized
       // 1/maxBloomSegments of a full seen pass per epoch. The bucket
       // partitioning is what turns the >64-bucket pruned anti-join
@@ -465,81 +468,79 @@ object CrawlJob {
                 retriedCount, discoveredCount, frontierSize)
   }
 
-  final case class RecrawlDeleteResult(requested: Long, deletedSeen: Long,
-                                       segmentsRewritten: Int, epoch: Long)
+  final case class RecrawlDeleteResult(requested: Long, epoch: Long)
 
   /** Recrawl via SEEN-SET DELETION. Unlike the `recrawl=` epoch input
     * (which bypasses the seen filter for one epoch via a retries>=1
-    * ticket), this FORGETS the urls entirely: their exact seen rows are
-    * removed, so each url becomes schedulable through the NORMAL retries=0
-    * path — scheduled, re-extracted and re-registered as seen, with no
-    * duplicate rows and no special-cased state left behind. The urls are
-    * also enqueued as plain frontier candidates at `priority` so the
-    * refetch happens next epoch instead of waiting for rediscovery.
+    * ticket), this FORGETS the urls entirely: they stop reading as seen, so
+    * each url becomes schedulable through the NORMAL retries=0 path —
+    * scheduled, re-extracted and re-registered as seen, with no duplicate
+    * rows. The urls are also enqueued as plain frontier candidates at
+    * `priority` so the refetch happens next epoch instead of waiting for
+    * rediscovery. `requested` counts the distinct canonical urls.
+    *
+    * The delete is merge-on-read: it appends the urls' (url, bucket) rows
+    * to `seen` as a delete segment ([[FrontierStore.writeDeletes]]), which
+    * masks them in every older seen segment. No seen row is read or
+    * rewritten, so the delete costs the same whatever the seen table's
+    * size. The next epoch's exact anti-join reads the masked table; its
+    * newly-seen delta is appended after the delete segment, so a
+    * re-registered url reads as seen again; the next compaction rewrites
+    * seen from the masked read and so drops the delete segment.
     *
     * Filters are left as they are, under either filter kind: a forgotten
     * url keeps its bloom bits or cuckoo fingerprint until the next major
     * compaction rebuilds the filters from the seen table. That is correct
     * because a filter never decides membership — a hit only routes the url
-    * to the exact anti-join of [[SeenSet.dedupAndFilterNew]], which reads
-    * the rewritten seen table and finds the url unseen. The stale entry
-    * costs one exact-probe row per forgotten url until then, and the
-    * snapshot's `blooms` entry passes through unchanged.
+    * to the exact anti-join of [[SeenSet.dedupAndFilterNew]], which finds
+    * it unseen. The stale entry costs one exact-probe row per forgotten url
+    * until then, and the snapshot's `blooms` entry passes through unchanged.
     *
-    * Commits one snapshot (an Iceberg-style delete commit) after:
-    *  - ONE membership probe: every seen segment, directory-pruned to the
-    *    delete urls' buckets on partitioned segments and semi-joined with
-    *    them, aggregated to (segment index -> deleted rows), collected once;
-    *  - a copy-on-write rewrite of each seen segment that holds a deleted
-    *    url (rows anti-joined out, bucket-partitioned like the compacted
-    *    layout); untouched segments keep their paths. A file-level manifest
-    *    store (real Iceberg) would narrow this to affected files; at the
-    *    dir-level store a rare operator-initiated delete paying one segment
-    *    rewrite is the documented trade;
-    *  - an APPEND of the re-enqueued urls as a frontier delta segment
-    *    (`frontier` gains one segment): readTable unions the segments and
-    *    the next runEpoch writes one full frontier again. */
+    * Commits one snapshot (an Iceberg-style delete commit) after two
+    * concurrent writes, three Spark jobs in all: the canonical distinct
+    * urls as a frontier delta segment (`frontier` gains one segment:
+    * readTable unions the segments and the next runEpoch writes one full
+    * frontier again), and the canonical urls' (url, bucket) rows as the
+    * seen delete segment. `urls` is evaluated once per write, so it should
+    * be cheap to recompute and deterministic. */
   def recrawlWithDelete(spark: SparkSession, store: FrontierStore,
                         urls: Dataset[String], cfg: Config,
                         priority: Double = 1.0): RecrawlDeleteResult = {
     import spark.implicits._
+    import org.apache.spark.sql.Observation
     val snap = store.latest().getOrElse(sys.error("no snapshot — call init() first"))
     val epoch = snap.epoch + 1
     val nb = cfg.seen.numBuckets
-    val del = urls.flatMap(u => PyUrl.canonicalize(u)).distinct()
-      .map(u => (u, SeenSet.bucketOfUrl(u, nb))).toDF("url", "bucket")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // one driver round-trip yields the request size and the bucket prune
-    val perBucket = del.groupBy("bucket").count().as[(Int, Long)].collect()
-    val requested = perBucket.map(_._2).sum
-    val delBuckets = perBucket.map(_._1)
-    val delUrls = broadcast(del.select("url"))
-    val seenSegs = snap.segments("seen")
-    val segDfs = store.readSegments(spark, snap, "seen")
-    val deletedPerSeg = segDfs.zipWithIndex.map { case (segDf, i) =>
-      SeenSet.prunedSeen(segDf, delBuckets, nb)
-        .join(delUrls, Seq("url"), "left_semi").select(lit(i).as("seg"))
-    }.reduce(_ unionByName _).groupBy("seg").count().as[(Int, Long)].collect().toMap
-    val newSeen = seenSegs.zipWithIndex.map { case (seg, i) =>
-      if (!deletedPerSeg.contains(i)) seg
-      else store.writeTable(s"seen-d$i", epoch, segDfs(i).join(delUrls, Seq("url"), "left_anti")
-        .repartition(math.min(cfg.shufflePartitions, nb), col("bucket")), Seq("bucket"))
-    }
+    val canonical = urls.flatMap(u => PyUrl.canonicalize(u))
     // enqueue the urls as PLAIN candidates: they pass the seen filter like
     // any discovery — the normal path, no retry ticket
-    val newCands = del.select("url").as[String]
+    val obs = Observation(s"delete-$epoch")
+    val newCands = canonical.distinct()
       .map(u => Candidate(u, PyUrl.hostOf(u), priority, epoch.toInt, 0))
-    val frontierDelta = store.writeTable("frontier-d", epoch,
-      newCands.toDF().coalesce(cfg.shufflePartitions))
-    del.unpersist()
+      .toDF().observe(obs, count(lit(1)).as("n"))
+    // the two writes are independent, so they run concurrently; the
+    // tombstones skip the distinct's shuffle, as a key listed twice masks
+    // the same rows as a key listed once
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(1)
+    implicit val ec: scala.concurrent.ExecutionContext =
+      scala.concurrent.ExecutionContext.fromExecutorService(pool)
+    val (frontierDelta, tombstones) = try {
+      val fTombstones = Future(store.writeDeletes("seen", epoch,
+        canonical.map(u => (u, SeenSet.bucketOfUrl(u, nb))).toDF("url", "bucket")))
+      (store.writeTable("frontier-d", epoch, newCands.coalesce(cfg.shufflePartitions)),
+       Await.result(fTombstones, Duration.Inf))
+    } finally pool.shutdown()
+    val requested = obs.get("n").asInstanceOf[Long]
     val tables = snap.tables ++ Map(
       "frontier" -> snap.append("frontier", frontierDelta),
-      "seen" -> Snapshot.entry(newSeen))
+      "seen" -> snap.append("seen", tombstones))
     val counters = snap.counters +
       ("frontierSize" -> (snap.counters.getOrElse("frontierSize", 0L) + requested))
     store.commit(epoch, tables, counters)
     if (cfg.retainSnapshots > 0) store.expire(cfg.retainSnapshots)
-    RecrawlDeleteResult(requested, deletedPerSeg.values.sum, deletedPerSeg.size, epoch)
+    RecrawlDeleteResult(requested, epoch)
   }
 
   /** Run epochs until the frontier drains or maxEpochs is hit. */

@@ -1,7 +1,8 @@
 package graft.store
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.functions.broadcast
+import org.apache.spark.sql.types.{DataType, MetadataBuilder, StructType}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.nio.charset.StandardCharsets
 import scala.jdk.CollectionConverters._
@@ -19,30 +20,41 @@ import scala.jdk.CollectionConverters._
   * The store owns the table format. A snapshot table is a list of
   * segments (table-version dirs, oldest first): append tables such as
   * seen, blooms, scheduled, lineage and extracted add one per epoch, a
-  * delete adds a frontier delta. Callers list and extend it only through
-  * [[Snapshot.segments]], [[Snapshot.append]] and [[Snapshot.entry]], and
-  * read it only through [[readTable]] and [[readSegments]].
+  * delete adds a frontier delta and a seen delete segment. Callers list
+  * and extend it only through [[Snapshot.segments]], [[Snapshot.append]]
+  * and [[Snapshot.entry]], and read it only through [[readTable]].
+  *
+  * Row-level deletes are merge-on-read, as Iceberg v2 equality deletes: a
+  * delete segment ([[writeDeletes]]) holds key rows that mask the matching
+  * rows of every OLDER data segment of the same list and of no newer one,
+  * so a key re-added after its delete reads again. A rewrite of the table
+  * from [[readTable]] (compaction) applies the deletes physically.
   */
 trait FrontierStore {
   def writeTable(name: String, epoch: Long, df: DataFrame, partitionBy: Seq[String] = Nil): String
   def commit(epoch: Long, tables: Map[String, String], counters: Map[String, Long]): Unit
   def latest(): Option[Snapshot]
 
-  /** The table's segments as one frame, each read with the schema it was
-    * written with. */
+  /** The table's data segments as one frame, each read with the schema it
+    * was written with and masked by the delete segments listed after it. */
   def readTable(spark: SparkSession, snap: Snapshot, name: String): DataFrame
 
-  /** Each of the table's segments as its own frame, oldest first (a
-    * copy-on-write delete rewrites segments one by one). */
-  def readSegments(spark: SparkSession, snap: Snapshot, name: String): IndexedSeq[DataFrame] =
-    snap.segments(name).map(seg => readTable(spark, snap.copy(tables = Map(name -> seg)), name))
+  /** Writes `keys` as a delete segment of table `name` and returns its path,
+    * for [[Snapshot.append]]: once appended, [[readTable]] drops every row
+    * of an older segment whose values in `keys`' columns equal a key row.
+    * The segment is an ordinary table version whose columns carry the
+    * [[FrontierStore.DeleteKey]] metadata, which the stored schema keeps. */
+  def writeDeletes(name: String, epoch: Long, keys: DataFrame): String =
+    writeTable(s"$name-del", epoch, keys.select(keys.columns.toIndexedSeq.map(c =>
+      keys(c).as(c, new MetadataBuilder().putBoolean(FrontierStore.DeleteKey, true).build())): _*))
 
   /** Iceberg `expire_snapshots` analog: keep the newest `retain` committed
     * manifests, delete the older ones, then delete every table-version dir
     * referenced by NO retained manifest. Append-segment tables (seen,
     * blooms, scheduled, lineage, extracted) keep their full history because
     * the retained manifests reference every live segment; only superseded
-    * full-rewrite versions (frontier, pre-compaction bloom generations) and
+    * full-rewrite versions (frontier, pre-compaction bloom generations and
+    * the seen segments and delete segments a compaction folded) and
     * crash-orphaned uncommitted dirs are reclaimed. Safe against an
     * in-flight epoch: an uncommitted dir is only reaped when its epoch is
     * <= the latest COMMITTED epoch (an in-progress epoch is strictly
@@ -51,8 +63,19 @@ trait FrontierStore {
   def expire(retain: Int): (Int, Int)
 }
 
+object FrontierStore {
+  /** Column metadata key that marks a segment's columns as delete keys. */
+  val DeleteKey = "graft.delete_key"
+
+  /** Whether a segment with this schema is a delete segment. */
+  def isDeletes(schema: StructType): Boolean =
+    schema.nonEmpty && schema.forall(_.metadata.contains(DeleteKey))
+}
+
 /** A committed snapshot. `tables` maps each table to its manifest entry,
-  * the table's segment paths joined by `;`. */
+  * the table's segment paths joined by `;`, oldest first. A path may be a
+  * delete segment; its place in the list is its sequence number, so
+  * appending keeps the delete rule of [[FrontierStore.readTable]]. */
 final case class Snapshot(epoch: Long, tables: Map[String, String], counters: Map[String, Long]) {
 
   /** The table's segment paths, oldest first; empty for an absent table. */
@@ -193,15 +216,26 @@ final class ParquetSnapshotStore(root: String) extends FrontierStore {
     Snapshot(epoch, section("tables"), section("counters").map { case (k, v) => k -> v.toLong })
   }
 
-  override def readTable(spark: SparkSession, snap: Snapshot, name: String): DataFrame =
+  override def readTable(spark: SparkSession, snap: Snapshot, name: String): DataFrame = {
     // Segments are read PER ROOT and unioned: a single multi-root read
     // trips Spark's CONFLICTING_DIRECTORY_STRUCTURES check as soon as one
     // segment is bucket-partitioned (the post-compaction seen table) and
     // others are not (deltas). Filters push through the Union into every
     // branch, so partition pruning on partitioned segments still works.
-    snap.segments(name).map { seg =>
+    val segs = snap.segments(name).map { seg =>
       val schema = DataType.fromJson(new String(
         Files.readAllBytes(Paths.get(seg, SchemaFile)), StandardCharsets.UTF_8)).asInstanceOf[StructType]
-      spark.read.schema(schema).parquet(seg)
-    }.reduce(_ unionByName _)
+      (FrontierStore.isDeletes(schema), spark.read.schema(schema).parquet(seg))
+    }
+    // each data segment anti-joins the (small, broadcast) union of the
+    // delete segments listed after it: the sequence-number rule
+    val data = segs.indices.filterNot(segs(_)._1).map { i =>
+      val deletes = segs.drop(i + 1).collect { case (true, d) => d }
+      if (deletes.isEmpty) segs(i)._2
+      else segs(i)._2.join(broadcast(deletes.reduce(_ unionByName _)),
+        deletes.head.columns.toSeq, "left_anti")
+    }
+    require(data.nonEmpty, s"table $name has no data segment")
+    data.reduce(_ unionByName _)
+  }
 }

@@ -412,7 +412,7 @@ class CrawlJobSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(seenCount(snap0) == 1 && filterSaysMaybe(snap0), s"[$kind] fixture: target must be seen")
 
       val r = CrawlJob.recrawlWithDelete(spark, store, spark.createDataset(Seq(target)), kcfg)
-      assert(r.requested == 1 && r.deletedSeen == 1 && r.segmentsRewritten == 1)
+      assert(r.requested == 1)
       val snap1 = store.latest().get
       assert(seenCount(snap1) == 0, s"[$kind] exact seen row must be deleted")
       // filters are not edited: the stale entry only routes the url to the
@@ -460,7 +460,8 @@ class CrawlJobSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select("url").as[String].collect().sorted.head
     // simulate the crash: the delete's table writes land, the manifest
     // rename does NOT — same failure point the runEpoch crash spec pins
-    store.writeTable("seen-d0", snapBefore.epoch + 1, spark.range(3).toDF("junk"))
+    val junkTombstones = java.nio.file.Paths.get(
+      store.writeDeletes("seen", snapBefore.epoch + 1, spark.range(3).toDF("junk")))
     val junkDelta = java.nio.file.Paths.get(
       store.writeTable("frontier-d", snapBefore.epoch + 1, spark.range(2).toDF("junk")))
     val resumed = new ParquetSnapshotStore(store.rootDir)
@@ -471,7 +472,14 @@ class CrawlJobSpec extends AnyFunSuite with BeforeAndAfterAll {
       .filter(org.apache.spark.sql.functions.col("url") === target).count() == 1)
     // ...and re-running the delete on the resumed store works end-to-end
     val r = CrawlJob.recrawlWithDelete(spark, resumed, spark.createDataset(Seq(target)), kcfg)
-    assert(r.deletedSeen == 1)
+    assert(r.requested == 1)
+    assert(store.readTable(spark, resumed.latest().get, "seen")
+      .filter(org.apache.spark.sql.functions.col("url") === target).count() == 0)
+    // the re-run delete replaced the crash's delete segment, not mixed with it
+    val tombSeg = resumed.latest().get.segments("seen").last
+    assert(java.nio.file.Paths.get(tombSeg).toAbsolutePath.normalize ==
+      junkTombstones.toAbsolutePath.normalize)
+    assert(spark.read.parquet(tombSeg).select("url").as[String].collect().toSeq == Seq(target))
     // the re-run delete replaced the crash's frontier delta, not mixed with it
     val deltaSeg = resumed.latest().get.tables("frontier").split(";").last
     assert(java.nio.file.Paths.get(deltaSeg).toAbsolutePath.normalize ==
@@ -506,8 +514,12 @@ class CrawlJobSpec extends AnyFunSuite with BeforeAndAfterAll {
       x ^ (x >>> 31)
     }
     for (kind <- Seq[SeenSet.FilterKind](SeenSet.Cuckoo, SeenSet.Bloom)) {
+      // six blooms segments (init, two epochs, trials 0-2) before the first
+      // compaction: trials 0-2 append their seen deltas after their delete
+      // segments, trial 3's epoch compacts
       val kcfg = CrawlJob.Config(
-        seen = SeenSet.Config(numBuckets = 8, expectedPerBucket = 1 << 14, filterKind = kind),
+        seen = SeenSet.Config(numBuckets = 8, expectedPerBucket = 1 << 14, filterKind = kind,
+                              maxBloomSegments = 6),
         sched = Scheduler.Config(perHostBudget = 4, saltFactor = 4))
       val store = freshStore()
       val pages = CrawlJob.preparePages(SyntheticCorpus.pages(spark, seed, 400L, 8).toDF())
@@ -523,19 +535,21 @@ class CrawlJobSpec extends AnyFunSuite with BeforeAndAfterAll {
         store.readTable(spark, snap, "blooms").as[SeenSet.BucketBloom].collect()
           .filter(_.bytes.nonEmpty).map(b => SeenSet.deserializeFilter(b.bytes))
       }
-      // the seed epoch's seen segment: the last trial deletes all of it
+      // the seed epoch's seen segment: the last trial masks all of it
       val seedSeg = 1
       for (trial <- 0 until 4) {
         val before = seenUrls()
         assert(before.nonEmpty, s"[$kind] trial $trial")
         val r = mix(trial.toLong ^ 0xDE1E7EL)
         // random subset of seen urls + garbage + a repeat; the last trial
-        // takes every url of one whole seen segment instead
+        // takes every url of one whole seen data segment instead
         val k = 1 + (mix(r) & 3).toInt
         val victims =
-          if (trial == 3)
-            store.readSegments(spark, store.latest().get, "seen")(seedSeg).select("url").as[String]
-              .collect().toVector.sorted
+          if (trial == 3) {
+            val snap = store.latest().get
+            store.readTable(spark, snap.copy(tables = Map("seen" -> snap.segments("seen")(seedSeg))),
+              "seen").select("url").as[String].collect().toVector.sorted
+          }
           else (0 until k).map(i =>
             before(((mix(r ^ i) >>> 1) % before.length).toInt)).distinct
         assert(victims.nonEmpty, s"[$kind] trial $trial")
@@ -550,8 +564,8 @@ class CrawlJobSpec extends AnyFunSuite with BeforeAndAfterAll {
           spark.createDataset(input), kcfg)
         assert(store.latest().get.tables("blooms") == bloomsBefore,
           s"[$kind] trial $trial: a delete writes no blooms version")
-        assert(res.deletedSeen == expectedDel.length,
-          s"[$kind] trial $trial: expected ${expectedDel.length} deletions, got ${res.deletedSeen}")
+        assert(res.requested == input.flatMap(PyUrl.canonicalize).distinct.length,
+          s"[$kind] trial $trial: requested ${res.requested}")
         val after = seenUrls()
         assert(after == (before.toSet -- expectedDel).toVector.sorted,
           s"[$kind] trial $trial: seen table must lose exactly the deleted urls")
@@ -559,9 +573,6 @@ class CrawlJobSpec extends AnyFunSuite with BeforeAndAfterAll {
         assert(seenNow.schema.map(f => f.name -> f.dataType) ==
           Seq("url" -> org.apache.spark.sql.types.StringType, "bucket" -> org.apache.spark.sql.types.IntegerType),
           s"[$kind] trial $trial: seen schema after the delete: ${seenNow.schema}")
-        if (trial == 3)
-          assert(store.readSegments(spark, store.latest().get, "seen")(seedSeg).count() == 0,
-            s"[$kind] the emptied segment reads back with no rows")
         // NO collateral false negatives: every still-seen url is still
         // covered by at least one segment filter
         val fs = filters()
@@ -572,6 +583,16 @@ class CrawlJobSpec extends AnyFunSuite with BeforeAndAfterAll {
         val snap = store.latest().get
         val lastSched = spark.read.parquet(snap.tables("scheduled").split(";").last)
           .select("url", "retries").as[(String, Int)].collect()
+        if (trial == 3) {
+          // the compaction applied the delete segments physically: its one
+          // segment's parquet rows are the masked set plus the epoch's
+          // newly scheduled urls
+          val segs = snap.segments("seen")
+          assert(segs.length == 1, s"[$kind] trial 3's epoch must compact: $segs")
+          val rows = spark.read.parquet(segs.head).select("url").as[String].collect().toVector.sorted
+          assert(rows == (after.toSet ++ lastSched.map(_._1)).toVector.sorted,
+            s"[$kind] the compacted seen rows differ from the model set")
+        }
         for (v <- victims) {
           assert(lastSched.count(_._1 == v) == 1,
             s"[$kind] trial $trial: deleted url $v must re-schedule exactly once")
@@ -582,6 +603,78 @@ class CrawlJobSpec extends AnyFunSuite with BeforeAndAfterAll {
         assert(victims.forall(again.contains), s"[$kind] trial $trial: victims re-registered")
       }
     }
+  }
+
+  /** A bloom-filter crawl of the 400-page corpus, non-compacting for its
+    * first 12 epochs (the default maxBloomSegments). */
+  private val deleteCfg = CrawlJob.Config(
+    seen = SeenSet.Config(numBuckets = 8, expectedPerBucket = 1 << 14),
+    sched = Scheduler.Config(perHostBudget = 4, saltFactor = 4))
+
+  private def deleteFixture(): (ParquetSnapshotStore, org.apache.spark.sql.DataFrame,
+                                org.apache.spark.sql.DataFrame, Seq[String]) = {
+    import spark.implicits._
+    val store = freshStore()
+    val pages = CrawlJob.preparePages(SyntheticCorpus.pages(spark, seed, 400L, 8).toDF())
+    val robots = SyntheticCorpus.robots(spark, seed).toDF()
+    CrawlJob.init(spark, store, SyntheticCorpus.seeds(spark, seed, 400L, 10), deleteCfg)
+    (1 to 2).foreach(_ => CrawlJob.runEpoch(spark, store, pages, robots, deleteCfg))
+    val snap = store.latest().get
+    val victims = store.readTable(spark, snap, "extracted").select("url").as[String]
+      .collect().sorted.take(3).toSeq
+    (store, pages, robots, victims)
+  }
+
+  private def isDeleteSegment(seg: String): Boolean =
+    graft.store.FrontierStore.isDeletes(org.apache.spark.sql.types.DataType.fromJson(
+      new String(Files.readAllBytes(java.nio.file.Paths.get(seg, "_schema.json")), "UTF-8"))
+      .asInstanceOf[org.apache.spark.sql.types.StructType])
+
+  test("recrawlWithDelete launches at most 3 Spark jobs and writes no seen data segment") {
+    import spark.implicits._
+    val (store, _, _, victims) = deleteFixture()
+    val snap0 = store.latest().get
+    val seenDirs = java.nio.file.Paths.get(store.rootDir, "tables", "seen")
+    def versions(): Set[String] = {
+      val st = Files.list(seenDirs)
+      try { import scala.jdk.CollectionConverters._; st.iterator().asScala.map(_.toString).toSet }
+      finally st.close()
+    }
+    val before = versions()
+    val (r, jobs) = graft.SparkJobs.during(spark)(
+      CrawlJob.recrawlWithDelete(spark, store, (victims :+ victims.head :+ "not a url").toDS(), deleteCfg))
+    assert(jobs <= 3, s"one delete launched $jobs Spark jobs")
+    assert(r.requested == victims.size)
+    val segs = store.latest().get.segments("seen")
+    assert(segs.init == snap0.segments("seen") && isDeleteSegment(segs.last),
+      s"the seen entry must be the previous one plus one delete segment: $segs")
+    assert(versions() == before, "a delete must not write a seen data segment")
+    val seenNow = store.readTable(spark, store.latest().get, "seen").select("url").as[String].collect()
+    assert(victims.forall(v => !seenNow.contains(v)), "the victims must read as unseen")
+  }
+
+  test("recrawlWithDelete then a non-compacting epoch: resume over the delete segment is exact") {
+    import spark.implicits._
+    def crawl(resumeAfterDelete: Boolean): Vector[(Long, String)] = {
+      val (store, pages, robots, victims) = deleteFixture()
+      CrawlJob.recrawlWithDelete(spark, store, victims.toDS(), deleteCfg)
+      CrawlJob.runEpoch(spark, store, pages, robots, deleteCfg)
+      val s = if (!resumeAfterDelete) store else {
+        val resumed = new ParquetSnapshotStore(store.rootDir)
+        val segs = resumed.latest().get.segments("seen")
+        assert(segs.exists(isDeleteSegment) && !isDeleteSegment(segs.last),
+          s"the seen entry must hold the delete segment with the epoch's delta after it: $segs")
+        resumed
+      }
+      CrawlJob.runEpoch(spark, s, pages, robots, deleteCfg)
+      CrawlJob.runEpoch(spark, s, pages, robots, deleteCfg)
+      val seen = s.readTable(spark, s.latest().get, "seen").select("url").as[String].collect()
+      assert(seen.length == seen.distinct.length, "no duplicate seen rows")
+      assert(victims.forall(seen.contains), "the victims are seen again")
+      scheduledTable(s)
+    }
+    assert(crawl(resumeAfterDelete = true) == crawl(resumeAfterDelete = false),
+      "resume over a delete segment diverged from the uninterrupted run")
   }
 
   test("preparePages projection contract: exactly (url, html), unique urls") {

@@ -632,32 +632,12 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       transform(array((0 until 8).map(i => lit(i.toFloat)): _*),
         (x, i) => sin(x + (col("id") % 5).cast("float") * 0.001f + i).cast("float")).as("embedding"))
     val sc = spark.sparkContext
-    val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        descriptions.add(String.valueOf(
-          Option(e.properties).map(_.getProperty("spark.job.description")).orNull))
-    }
     val cachedBefore = sc.getPersistentRDDs.keySet
-    sc.addSparkListener(listener)
-    val frames = try {
-      val built = Seq(
-        Dedup.simhashNearDups(text, "doc_id", "text", hotBucketThreshold = 4),
-        Dedup.embeddingNearDups(vecs, "vec_id", "embedding", threshold = 0.99, dim = 8,
-          hotBucketThreshold = 4))
-      // the listener bus delivers in order: once the marker job's start
-      // arrives, every job started while building has been counted
-      sc.setJobDescription("build-marker")
-      sc.parallelize(Seq(1), 1).count()
-      sc.setJobDescription(null)
-      val deadline = System.nanoTime() + 30000000000L
-      while (!descriptions.contains("build-marker") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      built
-    } finally sc.removeSparkListener(listener)
-    val buildJobs = descriptions.toArray(Array.empty[String]).toSeq.takeWhile(_ != "build-marker")
-    assert(descriptions.contains("build-marker") && buildJobs.isEmpty,
-      s"building the near-dup frames launched ${buildJobs.size} Spark job(s)")
+    val (frames, buildJobs) = graft.SparkJobs.during(spark)(Seq(
+      Dedup.simhashNearDups(text, "doc_id", "text", hotBucketThreshold = 4),
+      Dedup.embeddingNearDups(vecs, "vec_id", "embedding", threshold = 0.99, dim = 8,
+        hotBucketThreshold = 4)))
+    assert(buildJobs == 0, s"building the near-dup frames launched $buildJobs Spark job(s)")
     assert(frames.forall(_.collect().nonEmpty))
     val leaked = sc.getPersistentRDDs.keySet.filterNot(cachedBefore)
     assert(leaked.isEmpty, s"near-dup queries left ${leaked.size} persisted RDD(s): $leaked")

@@ -144,30 +144,7 @@ class SnapshotStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(store.latest().get.epoch == 0)
   }
 
-  /** Spark jobs started while `body` runs, counted with a listener and an
-    * in-order marker job (the listener bus delivers events in order). */
-  private def jobsDuring[A](body: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        descriptions.add(String.valueOf(
-          Option(e.properties).map(_.getProperty("spark.job.description")).orNull))
-    }
-    sc.addSparkListener(listener)
-    val out = try {
-      val a = body
-      sc.setJobDescription("read-marker")
-      sc.parallelize(Seq(1), 1).count()
-      sc.setJobDescription(null)
-      val deadline = System.nanoTime() + 30000000000L
-      while (!descriptions.contains("read-marker") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      a
-    } finally sc.removeSparkListener(listener)
-    assert(descriptions.contains("read-marker"), "marker job never reached the listener")
-    (out, descriptions.toArray(Array.empty[String]).toSeq.takeWhile(_ != "read-marker").size)
-  }
+  private def jobsDuring[A](body: => A): (A, Int) = graft.SparkJobs.during(spark)(body)
 
   test("readTable: partitioned, unpartitioned and zero-row partitioned segments, no Spark job, written schema") {
     import spark.implicits._
@@ -182,16 +159,71 @@ class SnapshotStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     store.commit(2, Map("t" -> Snapshot.entry(segs)), Map.empty)
     val snap = store.latest().get
     assert(snap.segments("t") == segs)
-    val ((table, perSeg), jobs) = jobsDuring(
-      (store.readTable(spark, snap, "t"), store.readSegments(spark, snap, "t")))
+    val (table, jobs) = jobsDuring(store.readTable(spark, snap, "t"))
     assert(jobs == 0, s"reading a 3-segment table launched $jobs Spark job(s)")
     def typed(df: org.apache.spark.sql.DataFrame) = df.schema.map(f => f.name -> f.dataType)
     assert(typed(table) == typed(written))
-    assert(perSeg.forall(d => typed(d) == typed(written)))
     assert(table.as[(String, Int)].collect().sorted.toSeq == Seq(("a", 1), ("b", 2), ("c", 3)))
-    assert(perSeg.map(_.count()) == Seq(2L, 1L, 0L))
-    assert(perSeg(2).filter(col("bucket") === 1).count() == 0)
     assert(table.filter(col("bucket") === 2).select("url").as[String].collect().toSeq == Seq("b"))
+    val emptySeg = Snapshot(2, Map("t" -> segs(2)), Map.empty)
+    assert(store.readTable(spark, emptySeg, "t").filter(col("bucket") === 1).count() == 0)
+  }
+
+  test("readTable merge-on-read: a delete segment masks only older data segments") {
+    import spark.implicits._
+    val store = freshStore()
+    def rows(xs: (String, Int)*) = xs.toDF("url", "bucket")
+    // data A (bucket-partitioned, the compacted layout), delete D1, data B
+    // re-adding a masked key, a second delete D2, a zero-row delete D3
+    val a = store.writeTable("t", 0, rows(("a", 1), ("b", 2), ("c", 3)), Seq("bucket"))
+    val d1 = store.writeDeletes("t", 1, rows(("b", 2), ("x", 9)))
+    val b = store.writeTable("t", 2, rows(("b", 2), ("d", 4)))
+    val d2 = store.writeDeletes("t", 3, rows(("b", 2), ("a", 1)))
+    val d3 = store.writeDeletes("t", 4, spark.emptyDataset[(String, Int)].toDF("url", "bucket"))
+    def read(segs: String*): Seq[(String, Int)] = {
+      val snap = Snapshot(0, Map("t" -> Snapshot.entry(segs)), Map.empty)
+      val (df, jobs) = jobsDuring(store.readTable(spark, snap, "t"))
+      assert(jobs == 0, s"building a read over ${segs.size} segments launched $jobs Spark job(s)")
+      assert(df.schema.map(f => f.name -> f.dataType) == rows().schema.map(f => f.name -> f.dataType))
+      df.as[(String, Int)].collect().sorted.toSeq
+    }
+    assert(read(a, d1) == Seq(("a", 1), ("c", 3)))
+    // (A - D1) ∪ B: the key re-added after its delete reads again, once
+    assert(read(a, d1, b) == Seq(("a", 1), ("b", 2), ("c", 3), ("d", 4)))
+    // a second delete masks both copies of b, and a
+    assert(read(a, d1, b, d2) == Seq(("c", 3), ("d", 4)))
+    // a zero-row delete segment masks nothing
+    assert(read(a, d3) == Seq(("a", 1), ("b", 2), ("c", 3)))
+    assert(read(a, d1, b, d2, d3) == Seq(("c", 3), ("d", 4)))
+    // the store knows a delete segment from its stored schema alone
+    def schemaOf(seg: String) = org.apache.spark.sql.types.DataType.fromJson(new String(
+      Files.readAllBytes(Paths.get(seg, "_schema.json")), "UTF-8"))
+      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    assert(Seq(d1, d2, d3).forall(d => FrontierStore.isDeletes(schemaOf(d))))
+    assert(Seq(a, b).forall(d => !FrontierStore.isDeletes(schemaOf(d))))
+    intercept[IllegalArgumentException](read(d1))
+  }
+
+  test("expire keeps referenced delete segments and reaps them once a compaction supersedes them") {
+    import spark.implicits._
+    val store = freshStore()
+    val a = store.writeTable("t", 0, Seq(("a", 1), ("b", 2)).toDF("url", "bucket"))
+    store.commit(0, Map("t" -> a), Map.empty)
+    val d = store.writeDeletes("t", 1, Seq(("a", 1)).toDF("url", "bucket"))
+    store.commit(1, Map("t" -> store.latest().get.append("t", d)), Map.empty)
+    val b = store.writeTable("t", 2, Seq(("a", 1)).toDF("url", "bucket"))
+    store.commit(2, Map("t" -> store.latest().get.append("t", b)), Map.empty)
+    store.expire(1)
+    assert(Seq(a, d, b).forall(p => Files.isDirectory(Paths.get(p))),
+      "the retained manifest references the delete segment and the segments around it")
+    // a compaction rewrites the table from the masked read: one segment
+    val compacted = store.writeTable("t", 3, store.readTable(spark, store.latest().get, "t"))
+    store.commit(3, Map("t" -> compacted), Map.empty)
+    val (_, reaped) = store.expire(1)
+    assert(reaped == 3 && Seq(a, d, b).forall(p => !Files.exists(Paths.get(p))),
+      "the superseded data and delete segments must be reaped")
+    assert(store.readTable(spark, store.latest().get, "t").as[(String, Int)].collect().sorted.toSeq ==
+      Seq(("a", 1), ("b", 2)))
   }
 
   test("store roots the manifest cannot represent are rejected; a root with spaces round-trips") {

@@ -12,8 +12,9 @@ read inside a crawl epoch, `delete/write.seen` the seen rewrite of a delete.
 
 For each file and each path this prints the number of spans on the path, the
 jobs started directly under those spans, and per span the jobs directly under
-it (`jobs/span`) and under it or any span below it (`tree/span`). Jobs with no
-span are listed under `(none)`.
+it (`jobs/span`), under it or any span below it (`tree/span`), and its wall
+seconds (`s/span`, from start to end, child spans included). Jobs with no span
+are listed under `(none)`.
 """
 import json
 import sys
@@ -51,7 +52,8 @@ def span_paths(spans):
 
 
 def table(spans, jobs):
-    """path -> (spans, direct jobs, subtree jobs) summed over the path's spans."""
+    """path -> (spans, direct jobs, subtree jobs, wall ns) summed over the
+    path's spans."""
     paths = span_paths(spans)
     direct = defaultdict(int)
     for sid in jobs:
@@ -61,15 +63,16 @@ def table(spans, jobs):
         while sid in spans:
             subtree[sid] += n
             sid = spans[sid]["parent"]
-    rows = defaultdict(lambda: [0, 0, 0])
+    rows = defaultdict(lambda: [0, 0, 0, 0])
     for sid, path in paths.items():
         row = rows[path]
         row[0] += 1
         row[1] += direct.get(sid, 0)
         row[2] += subtree.get(sid, 0)
+        row[3] += spans[sid]["end_ns"] - spans[sid]["start_ns"]
     unattributed = sum(n for sid, n in direct.items() if sid not in spans)
     if unattributed:
-        rows["(none)"] = [0, unattributed, unattributed]
+        rows["(none)"] = [0, unattributed, unattributed, 0]
     return rows
 
 
@@ -79,9 +82,11 @@ def main(argv):
     for path in argv:
         spans, jobs = load(path)
         print("%s: %d spans, %d jobs" % (path, len(spans), len(jobs)))
-        print("  %-32s %6s %6s %9s %9s" % ("path", "spans", "jobs", "jobs/span", "tree/span"))
-        for p, (n, d, t) in sorted(table(spans, jobs).items()):
-            per = "%9.1f %9.1f" % (d / n, t / n) if n else "%9s %9s" % ("-", "-")
+        print("  %-32s %6s %6s %9s %9s %9s" % ("path", "spans", "jobs", "jobs/span", "tree/span",
+                                               "s/span"))
+        for p, (n, d, t, ns) in sorted(table(spans, jobs).items()):
+            per = ("%9.1f %9.1f %9.3f" % (d / n, t / n, ns / n / 1e9) if n
+                   else "%9s %9s %9s" % ("-", "-", "-"))
             print("  %-32s %6d %6d %s" % (p, n, d, per))
 
 
