@@ -1,8 +1,6 @@
 package graft.core
 
 import graft.model._
-import java.nio.charset.{Charset, CodingErrorAction}
-import java.nio.ByteBuffer
 
 /** Webarchive -> HTML extraction engine.
   *
@@ -23,256 +21,17 @@ object Rewriter {
   final class WebArchiveError(msg: String)
       extends RuntimeException(msg, null, false, false)
 
-  // --- charset handling (python codec name -> java) --------------------------
-
-  private val charsetAliases = Map(
-    "utf-8" -> "UTF-8", "utf8" -> "UTF-8", "u8" -> "UTF-8",
-    "latin-1" -> "ISO-8859-1", "latin1" -> "ISO-8859-1", "latin" -> "ISO-8859-1",
-    "iso-8859-1" -> "ISO-8859-1", "iso8859-1" -> "ISO-8859-1", "8859" -> "ISO-8859-1",
-    "cp1252" -> "windows-1252", "windows-1252" -> "windows-1252",
-    "ascii" -> "US-ASCII", "us-ascii" -> "US-ASCII",
-    // the utf-16/utf-32 FAMILY names (utf-16, utf16, u16, ...) never reach
-    // this table — they take the BOM/native-LE CPython-parity paths — but
-    // the explicit-endian variants decode identically in both runtimes and
-    // map straight to the JDK charsets. CPython accepts several spellings
-    // Java's Charset.forName does not ("utf-16-le", "utf_16_le").
-    "utf-16" -> "UTF-16", "utf-16le" -> "UTF-16LE", "utf-16be" -> "UTF-16BE",
-    "utf-16-le" -> "UTF-16LE", "utf_16_le" -> "UTF-16LE", "utf16le" -> "UTF-16LE",
-    "utf-16-be" -> "UTF-16BE", "utf_16_be" -> "UTF-16BE", "utf16be" -> "UTF-16BE",
-    "utf-32le" -> "UTF-32LE", "utf-32-le" -> "UTF-32LE", "utf_32_le" -> "UTF-32LE",
-    "utf-32be" -> "UTF-32BE", "utf-32-be" -> "UTF-32BE", "utf_32_be" -> "UTF-32BE",
-    // CJK names also appear in PyCharsets.Supported, which intercepts
-    // decode/encode BEFORE charsetFor; gb2312 (JDK-exact) stays here
-    "shift_jis" -> "Shift_JIS", "shift-jis" -> "Shift_JIS", "sjis" -> "Shift_JIS",
-    "euc-jp" -> "EUC-JP", "euc-kr" -> "EUC-KR", "gb2312" -> "GB2312",
-    "gbk" -> "GBK", "big5" -> "Big5", "koi8-r" -> "KOI8-R")
-
-  def charsetFor(name: String): Charset =
-    Charset.forName(charsetAliases.getOrElse(name.toLowerCase, name))
-
-  /** Python cp1252 is STRICT: bytes 0x81 0x8D 0x8F 0x90 0x9D are undefined
-    * and raise; Java's windows-1252 maps them to C1 controls. Match Python
-    * by rejecting those code points around decode/encode. */
-  private def checkCp1252Strict(s: CharSequence, enc: String): Unit = {
-    if (enc == "windows-1252" || enc == "cp1252") {
-      var i = 0
-      while (i < s.length) {
-        val c = s.charAt(i).toInt
-        if (c == 0x81 || c == 0x8D || c == 0x8F || c == 0x90 || c == 0x9D)
-          throw new java.nio.charset.UnmappableCharacterException(1)
-        i += 1
-      }
-    }
-  }
-
-  private def isUtf8Name(enc: String): Boolean = {
-    val e = enc.toLowerCase
-    e == "utf-8" || e == "utf8" || e == "u8"
-  }
-
-  /** CPython's 'utf-16' codec names (the -le/-be variants are NOT in this
-    * family — they never consume a BOM in either runtime and Java's
-    * UTF-16LE/BE charsets already match). */
-  private def isUtf16Name(enc: String): Boolean = {
-    val e = enc.toLowerCase
-    e == "utf-16" || e == "utf16" || e == "u16" || e == "utf_16"
-  }
-
-  /** CPython 'utf-16' DECODE parity: a BOM is consumed and selects the
-    * order; WITHOUT a BOM CPython falls back to the NATIVE byte order —
-    * little-endian on every platform the reference goldens are generated
-    * on — while Java's UTF-16 charset assumes BIG-endian. Observable
-    * divergence (r5 `utf16_nobom_*` fixtures: the reference decodes the
-    * LE file to the real text and the BE file to CJK mojibake; Java's
-    * default did exactly the opposite). Odd trailing bytes are malformed
-    * in both runtimes (REPORT -> error path). */
-  private def decodeUtf16Py(d: Array[Byte]): String = {
-    import java.nio.charset.StandardCharsets
-    val (cs, off) =
-      if (d.length >= 2 && d(0) == 0xFE.toByte && d(1) == 0xFF.toByte)
-        (StandardCharsets.UTF_16BE, 2)
-      else if (d.length >= 2 && d(0) == 0xFF.toByte && d(1) == 0xFE.toByte)
-        (StandardCharsets.UTF_16LE, 2)
-      else (StandardCharsets.UTF_16LE, 0)
-    val dec = cs.newDecoder()
-      .onMalformedInput(CodingErrorAction.REPORT)
-      .onUnmappableCharacter(CodingErrorAction.REPORT)
-    dec.decode(ByteBuffer.wrap(d, off, d.length - off)).toString
-  }
-
-  /** CPython's 'utf-32' codec names (the -le/-be variants map straight to
-    * Java's UTF-32LE/BE, which already agree). */
-  private def isUtf32Name(enc: String): Boolean = {
-    val e = enc.toLowerCase
-    e == "utf-32" || e == "utf32" || e == "u32" || e == "utf_32"
-  }
-
-  /** Same BOM/native-LE semantics as [[decodeUtf16Py]], one size up —
-    * Java's UTF-32 charset likewise assumes BE without a BOM. */
-  private def decodeUtf32Py(d: Array[Byte]): String = {
-    val (le, off) =
-      if (d.length >= 4 && d(0) == 0 && d(1) == 0 &&
-          d(2) == 0xFE.toByte && d(3) == 0xFF.toByte) (false, 4)
-      else if (d.length >= 4 && d(0) == 0xFF.toByte && d(1) == 0xFE.toByte &&
-               d(2) == 0 && d(3) == 0) (true, 4)
-      else (true, 0)
-    decodeUtf32Fixed(d, off, le)
-  }
-
-  /** CPython's EXPLICIT-endian 'utf-32-le'/'utf-32-be' codecs never
-    * consume a BOM (a leading U+FEFF stays in the text) — Java's
-    * UTF-32LE/BE decoders DO strip one, so those names are hand-decoded
-    * too (corpus-caught divergence). */
-  private def isUtf32LeName(enc: String): Boolean = {
-    val e = enc.toLowerCase
-    e == "utf-32-le" || e == "utf_32_le" || e == "utf-32le" || e == "utf32le"
-  }
-  private def isUtf32BeName(enc: String): Boolean = {
-    val e = enc.toLowerCase
-    e == "utf-32-be" || e == "utf_32_be" || e == "utf-32be" || e == "utf32be"
-  }
-
-  /** UTF-32 strict decode, CPython semantics: length must be a multiple
-    * of 4; code points above U+10FFFF or in the surrogate range raise. */
-  private def decodeUtf32Fixed(d: Array[Byte], off: Int, le: Boolean): String = {
-    val n = d.length - off
-    if (n % 4 != 0)
-      throw new java.nio.charset.MalformedInputException(n % 4)
-    val sb = new java.lang.StringBuilder(n / 2)
-    var i = off
-    while (i < d.length) {
-      val cp =
-        if (le) (d(i) & 0xFF) | ((d(i + 1) & 0xFF) << 8) |
-                ((d(i + 2) & 0xFF) << 16) | ((d(i + 3) & 0xFF) << 24)
-        else ((d(i) & 0xFF) << 24) | ((d(i + 1) & 0xFF) << 16) |
-             ((d(i + 2) & 0xFF) << 8) | (d(i + 3) & 0xFF)
-      if (cp < 0 || cp > 0x10FFFF || (cp >= 0xD800 && cp <= 0xDFFF))
-        throw new java.nio.charset.MalformedInputException(4)
-      sb.appendCodePoint(cp)
-      i += 4
-    }
-    sb.toString
-  }
-
-  /** RFC 3629 UTF-8 well-formedness: no truncated sequences, no stray
-    * continuations, no overlongs, no surrogates, max U+10FFFF — exactly
-    * the byte strings CPython's strict utf-8 codec (and Java's REPORT
-    * decoder) accept. For a well-formed input the intrinsified String
-    * constructor produces the identical char sequence, so the strict
-    * decoder (profiled hot: decodeArrayLoop ~9% of to_html) is skippable.
-    * Differential-tested against the REPORT decoder in PropertySpec. */
-  private[core] def isValidUtf8(d: Array[Byte]): Boolean = {
-    var i = 0
-    val n = d.length
-    while (i < n) {
-      val b = d(i)
-      if (b >= 0) i += 1
-      else {
-        val b0 = b & 0xFF
-        if (b0 < 0xC2) return false // stray continuation or overlong C0/C1
-        else if (b0 < 0xE0) { // 2-byte
-          if (i + 1 >= n || (d(i + 1) & 0xC0) != 0x80) return false
-          i += 2
-        } else if (b0 < 0xF0) { // 3-byte
-          if (i + 2 >= n) return false
-          val b1 = d(i + 1) & 0xFF
-          if ((b1 & 0xC0) != 0x80 || (d(i + 2) & 0xC0) != 0x80) return false
-          if (b0 == 0xE0 && b1 < 0xA0) return false // overlong
-          if (b0 == 0xED && b1 >= 0xA0) return false // surrogate range
-          i += 3
-        } else if (b0 < 0xF5) { // 4-byte
-          if (i + 3 >= n) return false
-          val b1 = d(i + 1) & 0xFF
-          if ((b1 & 0xC0) != 0x80 || (d(i + 2) & 0xC0) != 0x80 ||
-              (d(i + 3) & 0xC0) != 0x80) return false
-          if (b0 == 0xF0 && b1 < 0x90) return false // overlong
-          if (b0 == 0xF4 && b1 >= 0x90) return false // > U+10FFFF
-          i += 4
-        } else return false
-      }
-    }
-    true
-  }
-
   /** Python str(resource): strict decode with the resource encoding;
     * TypeError for non-text resources. */
   def resourceText(r: WResource): String = {
     if (!Mime.isText(r.mimeType))
       throw new IllegalArgumentException("cannot convert non-text resource to str")
-    val encName = r.textEncoding.getOrElse("utf-8")
-    // fast path: well-formed UTF-8 decodes identically through the
-    // intrinsified constructor (see isValidUtf8); malformed input falls
-    // through to the strict REPORT decoder for the exact error behavior
-    if (isUtf8Name(encName) && isValidUtf8(r.data))
-      return new String(r.data, java.nio.charset.StandardCharsets.UTF_8)
-    if (isUtf16Name(encName)) return decodeUtf16Py(r.data)
-    if (isUtf32Name(encName)) return decodeUtf32Py(r.data)
-    if (isUtf32LeName(encName)) return decodeUtf32Fixed(r.data, 0, le = true)
-    if (isUtf32BeName(encName)) return decodeUtf32Fixed(r.data, 0, le = false)
-    // CJK charsets whose JDK tables diverge from CPython's decode via
-    // python-enumerated tables (PyCharsets scaladoc)
-    PyCharsets.tableFor(encName) match {
-      case Some(t) => return PyCharsets.decode(t, r.data)
-      case None    => ()
-    }
-    val cs = charsetFor(encName)
-    val dec = cs.newDecoder()
-      .onMalformedInput(CodingErrorAction.REPORT)
-      .onUnmappableCharacter(CodingErrorAction.REPORT)
-    val out = dec.decode(ByteBuffer.wrap(r.data)).toString
-    checkCp1252Strict(out, encName.toLowerCase)
-    out
+    PyCharsets.codec(r.textEncoding.getOrElse("utf-8")).decode(r.data)
   }
 
-  def encodeText(s: String, encoding: String): Array[Byte] = {
-    checkCp1252Strict(s, encoding.toLowerCase)
-    // fast path: UTF-8 encoding of a surrogate-free string cannot fail, and
-    // String.getBytes(UTF_8) is intrinsified; only unpaired surrogates make
-    // getBytes ('?' replacement) diverge from the REPORT encoder (CPython
-    // raises on them — the strict path below keeps that behavior)
-    if (isUtf8Name(encoding)) {
-      var i = 0
-      val n = s.length
-      while (i < n && (s.charAt(i) & 0xF800) != 0xD800) i += 1
-      if (i == n) return s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    }
-    // CPython 'utf-16' ENCODE parity: BOM (FF FE) + little-endian body;
-    // Java's UTF-16 charset writes a BE BOM + big-endian. Lone surrogates
-    // raise in both (strict REPORT below).
-    if (isUtf16Name(encoding)) {
-      val enc16 = java.nio.charset.StandardCharsets.UTF_16LE.newEncoder()
-        .onMalformedInput(CodingErrorAction.REPORT)
-        .onUnmappableCharacter(CodingErrorAction.REPORT)
-      val bb = enc16.encode(java.nio.CharBuffer.wrap(s))
-      val out = new Array[Byte](2 + bb.remaining())
-      out(0) = 0xFF.toByte
-      out(1) = 0xFE.toByte
-      bb.get(out, 2, out.length - 2)
-      return out
-    }
-    if (isUtf32Name(encoding)) {
-      val enc32 = Charset.forName("UTF-32LE").newEncoder()
-        .onMalformedInput(CodingErrorAction.REPORT)
-        .onUnmappableCharacter(CodingErrorAction.REPORT)
-      val bb = enc32.encode(java.nio.CharBuffer.wrap(s))
-      val out = new Array[Byte](4 + bb.remaining())
-      out(0) = 0xFF.toByte; out(1) = 0xFE.toByte; out(2) = 0; out(3) = 0
-      bb.get(out, 4, out.length - 4)
-      return out
-    }
-    PyCharsets.tableFor(encoding) match {
-      case Some(t) => return PyCharsets.encode(t, s)
-      case None    => ()
-    }
-    val cs = charsetFor(encoding)
-    val enc = cs.newEncoder()
-      .onMalformedInput(CodingErrorAction.REPORT)
-      .onUnmappableCharacter(CodingErrorAction.REPORT)
-    val bb = enc.encode(java.nio.CharBuffer.wrap(s))
-    val out = new Array[Byte](bb.remaining())
-    bb.get(out)
-    out
-  }
+  /** Python str.encode(encoding), strict. */
+  def encodeText(s: String, encoding: String): Array[Byte] =
+    PyCharsets.codec(encoding).encode(s)
 
   // --- archive context --------------------------------------------------------
 
@@ -561,16 +320,20 @@ object Rewriter {
   }
 
   /** util.py:279-311 — rewrite HTML; on ANY internal error fall back to the
-    * reference's observable behavior: NUL x chars-already-written + raw text. */
+    * reference's observable behavior: NUL x chars-already-written + raw text.
+    * `observer`, when given, sees every event of the rewrite's tokenizer
+    * pass. Returns whether the fallback ran. */
   def processHtmlResource(ctx: ArchiveCtx, res: WResource, output: StringBuilder,
-                          subresourceDir: String, depth: Int): Unit = {
+                          subresourceDir: String, depth: Int,
+                          observer: PageObserver = null): Boolean = {
     if (!Mime.isHtml(res.mimeType))
       throw new IllegalArgumentException("res must be text/html or application/xhtml+xml")
     val start = output.length
     val text = resourceText(res) // decode errors propagate (same as reference)
     try {
       val h = new HtmlRewriteHandler(ctx, res, output, subresourceDir, depth)
-      HtmlTok.tokenize(text, h)
+      HtmlTok.tokenize(text, if (observer == null) h else observer.forwardingTo(h))
+      false
     } catch {
       case _: Throwable =>
         // reference bug replicated: output.truncate(0) without seek leaves
@@ -580,19 +343,31 @@ object Rewriter {
         var i = start
         while (i < written) { output.append('\u0000'); i += 1 }
         output.append(text)
+        true
     }
   }
 
-  /** Event sink that observes the SAME tokenizer pass used for rewriting:
-    * collects visible text (script/style skipped, charrefs resolved) and
-    * outlinks (a/area href, frame/iframe src) without a second parse. */
-  final class PageObserver(baseUrl: String) {
-    val text = new StringBuilder
+  /** The one definition of a page's visible text and outlinks, observed on
+    * a tokenizer pass:
+    *  - text is the data outside script/style, entityrefs and charrefs
+    *    unescaped;
+    *  - outlinks are a/area href and frame/iframe src values joined onto
+    *    `baseUrl` (urljoin) and kept when http(s), in first-seen order
+    *    without duplicates; with a null `baseUrl` none are collected.
+    * Used alone, or ahead of the rewrite (see [[forwardingTo]]) so one pass
+    * serves both. */
+  final class PageObserver(baseUrl: String) extends HtmlTok.Handler {
+    private val sb = new StringBuilder
     private var skip = 0
     private val links = scala.collection.mutable.LinkedHashSet.empty[String]
-    def onStart(tag: String, attrs: List[(String, String)], selfClosing: Boolean): Unit = {
+    private var next: HtmlTok.Handler = PageObserver.Ignore
+
+    /** This observer, passing every event on to `h` after observing it. */
+    private[core] def forwardingTo(h: HtmlTok.Handler): PageObserver = { next = h; this }
+
+    private def open(tag: String, attrs: List[(String, String)], selfClosing: Boolean): Unit = {
       if (!selfClosing && (tag == "script" || tag == "style")) skip += 1
-      for ((a, v) <- attrs if v != null && v.nonEmpty) {
+      if (baseUrl != null) for ((a, v) <- attrs if v != null && v.nonEmpty) {
         if (((tag == "a" || tag == "area") && a == "href") ||
             ((tag == "frame" || tag == "iframe") && a == "src")) {
           val abs = try PyUrl.urljoin(baseUrl, v) catch { case _: Exception => null }
@@ -601,53 +376,58 @@ object Rewriter {
         }
       }
     }
-    def onEnd(tag: String): Unit =
+
+    override def starttag(tag: String, attrs: List[(String, String)]): Unit = {
+      open(tag, attrs, selfClosing = false); next.starttag(tag, attrs)
+    }
+    override def startendtag(tag: String, attrs: List[(String, String)]): Unit = {
+      open(tag, attrs, selfClosing = true); next.startendtag(tag, attrs)
+    }
+    override def endtag(tag: String): Unit = {
       if ((tag == "script" || tag == "style") && skip > 0) skip -= 1
-    def onData(d: String): Unit = if (skip == 0) text.append(d)
-    def onEntity(name: String): Unit = if (skip == 0) text.append(PyHtml.unescape(s"&$name;"))
-    def onCharref(name: String): Unit = if (skip == 0) text.append(PyHtml.unescape(s"&#$name;"))
+      next.endtag(tag)
+    }
+    override def data(d: String): Unit = { if (skip == 0) sb.append(d); next.data(d) }
+    override def entityref(name: String): Unit = {
+      if (skip == 0) sb.append(PyHtml.unescape(s"&$name;")); next.entityref(name)
+    }
+    override def charref(name: String): Unit = {
+      if (skip == 0) sb.append(PyHtml.unescape(s"&#$name;")); next.charref(name)
+    }
+    override def comment(d: String): Unit = next.comment(d)
+    override def decl(d: String): Unit = next.decl(d)
+    override def pi(d: String): Unit = next.pi(d)
+    override def unknownDecl(d: String): Unit = next.unknownDecl(d)
+
+    def text: String = sb.toString
     def outlinks: Vector[String] = links.toVector
   }
 
+  object PageObserver {
+    private object Ignore extends HtmlTok.Handler {
+      def starttag(tag: String, attrs: List[(String, String)]): Unit = ()
+      def startendtag(tag: String, attrs: List[(String, String)]): Unit = ()
+      def endtag(tag: String): Unit = ()
+      def data(d: String): Unit = ()
+      def entityref(name: String): Unit = ()
+      def charref(name: String): Unit = ()
+      def comment(d: String): Unit = ()
+      def decl(d: String): Unit = ()
+    }
+  }
+
   /** Single-pass extraction: rewritten HTML + visible text + outlinks from
-    * ONE tokenizer run (the separate expressions parse the page 3-4x). */
+    * ONE tokenizer run (the separate expressions parse the page 3-4x). A
+    * non-HTML main yields its text only; after the rewrite fallback, text
+    * and outlinks are empty. */
   def extractAll(archive: WArchive): (String, String, Vector[String]) = {
     val ctx = new ArchiveCtx(archive)
     val main = archive.main
-    if (!Mime.isHtml(main.mimeType))
-      return (new String(main.data, charsetFor(main.textEncoding.getOrElse("utf-8"))), "", Vector.empty)
+    if (!Mime.isHtml(main.mimeType)) return (resourceText(main), "", Vector.empty)
     val out = new StringBuilder(main.data.length) // rewrite output >= input
     val obs = new PageObserver(main.url)
-    val text = resourceText(main)
-    try {
-      val inner = new HtmlRewriteHandler(ctx, main, out, null, 0)
-      val h = new HtmlTok.Handler {
-        override def starttag(tag: String, attrs: List[(String, String)]): Unit = {
-          obs.onStart(tag, attrs, selfClosing = false); inner.starttag(tag, attrs)
-        }
-        override def startendtag(tag: String, attrs: List[(String, String)]): Unit = {
-          obs.onStart(tag, attrs, selfClosing = true); inner.startendtag(tag, attrs)
-        }
-        override def endtag(tag: String): Unit = { obs.onEnd(tag); inner.endtag(tag) }
-        override def data(d: String): Unit = { obs.onData(d); inner.data(d) }
-        override def entityref(name: String): Unit = { obs.onEntity(name); inner.entityref(name) }
-        override def charref(name: String): Unit = { obs.onCharref(name); inner.charref(name) }
-        override def comment(d: String): Unit = inner.comment(d)
-        override def decl(d: String): Unit = inner.decl(d)
-      }
-      HtmlTok.tokenize(text, h)
-      (out.toString, obs.text.toString, obs.outlinks)
-    } catch {
-      case _: Throwable =>
-        // reference fallback parity (NUL padding + raw text); text/links
-        // degrade to the raw-source tokenization of the fallback output
-        val written = out.length
-        out.setLength(0)
-        var i = 0
-        while (i < written) { out.append('\u0000'); i += 1 }
-        out.append(text)
-        (out.toString, "", Vector.empty)
-    }
+    if (processHtmlResource(ctx, main, out, null, 0, obs)) (out.toString, "", Vector.empty)
+    else (out.toString, obs.text, obs.outlinks)
   }
 
   private def toHtmlInner(ctx: ArchiveCtx, depth: Int): String = {

@@ -69,19 +69,6 @@ object WebArchiveOps {
   def frameCountBelowDepth2(a: WArchive): Int =
     a.subframes.map(sf => sf.subframes.length + sf.subframes.map(frameCountBelowDepth2).sum).sum
 
-  /** Depth-2 unrolled Spark row. Deeper frames are counted in
-    * `deeperFrameCount` per subframe. */
-  def toRow(a: WArchive): WebArchiveRow = {
-    def res(r: WResource) = WebResourceRow(r.data, r.mimeType, r.url, r.textEncoding, r.frameName)
-    WebArchiveRow(
-      res(a.main),
-      a.subresources.map(res),
-      a.subframes.map { sf =>
-        SubframeRow(res(sf.main), sf.subresources.map(res),
-          sf.subframes.length + sf.subframes.map(frameCountBelowDepth2).sum)
-      })
-  }
-
   // --- local paths (webarchive.py:406-489) ----------------------------------
 
   private val forbiddenChars = "%<>:\"/\\|?*"

@@ -194,278 +194,283 @@ object CrawlJob {
     val (unseenRaw, newRetriedUrls, seenSetCache) = SeenSet.dedupAndFilterNew(spark,
       frontier.toDF().observe(obsIn, count(lit(1)).as("n")).as[Candidate],
       seen, blooms, cfg.seen, mayHaveRetries)
-    val unseen = unseenRaw
-      .toDF().observe(obsUnseen, count(lit(1)).as("n")).as[Candidate]
-
-    // 3. robots gate: broadcast the (small) per-host rule table
-    val rulesDf = robots.select(col("host"),
-      coalesce(col("disallow"), array()).as("disallow"),
-      coalesce(col("allow"), array()).as("allow"),
-      col("crawl_delay"))
-    val joined = unseen.toDF().join(broadcast(rulesDf), Seq("host"), "left")
-    // rules are pre-parsed arrays on the broadcast side; the UDF only does
-    // path slicing + longest-match — no per-row rule object construction
-    val allowedCol = udf { (url: String, dis: Seq[String], alw: Seq[String]) =>
-      if (dis == null) true
-      else {
-        val path = {
-          val i = url.indexOf("://")
-          val rest = if (i < 0) url else url.substring(i + 3)
-          val s = rest.indexOf('/')
-          if (s < 0) "/" else rest.substring(s)
-        }
-        graft.frontier.RobotsRules.allowedPath(dis,
-          if (alw == null) Nil else alw, path)
-      }
+    // every frame the epoch persists, released in the one finally below
+    // whether or not the epoch commits (a failed write must not leak them)
+    val cached = scala.collection.mutable.ArrayBuffer[Dataset[_]](seenSetCache)
+    def persisted[T](d: Dataset[T]): Dataset[T] = {
+      cached += d
+      d.persist(StorageLevel.MEMORY_AND_DISK)
     }
-    // project the broadcast rule arrays away BEFORE the persist: they are
-    // consumed by the gate expressions on this line and every cached row
-    // would otherwise carry its host's disallow/allow path lists through
-    // the epoch (tens of MB of dead cache weight per 10^6-candidate epoch)
-    val gated = joined.withColumn("__allowed", allowedCol(col("url"), col("disallow"), col("allow")))
-      .withColumn("__budget",
-        crawlDelayBudget(col("crawl_delay"), cfg.sched.perHostBudget, cfg.epochWindowSec))
-      .select("url", "host", "priority", "discoveredEpoch", "retries", "__allowed", "__budget")
-      .observe(obsGate, sum(when(col("__allowed"), 0L).otherwise(1L)).as("blocked"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // `allowed` is a plain filter+project over the persisted `gated`
-    // cache — consumers read the cache directly (a second persist of the
-    // same rows bought nothing but block-manager traffic)
-    val allowed = gated.filter(col("__allowed"))
-      .select("url", "host", "priority", "discoveredEpoch", "retries").as[Candidate]
-    val allowedBudgeted = gated.filter(col("__allowed"))
-      .select(struct(col("url"), col("host"), col("priority"), col("discoveredEpoch"),
-                     col("retries")).as("_1"), col("__budget").as("_2"))
-      .as[(Candidate, Int)]
+    try {
+      val unseen = unseenRaw
+        .toDF().observe(obsUnseen, count(lit(1)).as("n")).as[Candidate]
 
-    // 4. politeness dequeue (map-side partial top-k + one per-host merge
-    //    shuffle, crawl-delay budgets) with the within-host rank attached
-    //    by the final top-k (already sorted per host) — no global sort /
-    //    zipWithIndex jobs. The deterministic total crawl order is
-    //    (epoch, host ASC, seq ASC).
-    val ranked = Scheduler.dequeueRanked(spark, allowedBudgeted, cfg.sched)
-    val scheduledSeq: Dataset[ScheduledRow] = ranked
-      .map { case (c, r) => ScheduledRow(epoch, r.toLong, c.url, c.host, c.priority, c.retries) }
-      .toDF().observe(obsSched, count(lit(1)).as("n")).as[ScheduledRow]
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // 5+6. "fetch" (join the prepared pages corpus — unique canonical url,
-    //    see preparePages) + extraction (single-pass Catalyst-native
-    //    operator) in ONE pass. The persisted frame drops the raw html
-    //    immediately: raw page bytes never enter the block manager — at a
-    //    10^7-url epoch a cached fetch join would be tens of GB of dead
-    //    weight (VERDICT r2 "What's wrong #2"). Miss rows (html null) ride
-    //    along with a __hit flag so the retry path needs no second probe
-    //    of the pages table.
-    val fetchJoin = scheduledSeq.toDF().join(pages.select("url", "html"), Seq("url"), "left")
-      .observe(obsFetch,
-        sum(when(col("html").isNotNull, 1L).otherwise(0L)).as("fetched"),
-        sum(when(col("html").isNull && col("retries") < cfg.maxRetries, 1L).otherwise(0L)).as("retried"))
-    val extractedAll = fetchJoin
-      .withColumn("__x", extract_all(col("html"), col("url")))
-      .select(col("epoch"), col("seq"), col("url"), col("host"), col("priority"),
-              col("retries"), col("html").isNotNull.as("__hit"),
-              col("__x.extracted_html").as("extracted_html"),
-              col("__x.text").as("text"), col("__x.outlinks").as("outlinks"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    // 7. atomic snapshot commit (these writes are the actions that fire
-    // every Observation above)
-    // First write materializes the whole epoch graph into the persisted
-    // caches (extractedAll <- fetch join <- scheduledSeq <- dequeue <-
-    // gate <- fused dedup). The five remaining writes then read only
-    // cached data — they are independent, so they run CONCURRENTLY (Spark
-    // schedules concurrent jobs fine; on a cluster this overlaps commit
-    // latencies the same way). This cut the per-epoch serial write tail,
-    // the dominant fixed cost at sandbox epoch sizes.
-    // scheduled/lineage/extracted are APPEND tables: the manifest carries
-    // every epoch's segment (like seen/blooms), so the crawl's
-    // full product stays referenced — and therefore alive — across
-    // snapshot expiry. Only full-rewrite state versions (frontier,
-    // compacted blooms) become unreferenced garbage for expire() to reap.
-    val extractedEntry = "extracted" -> snap.append("extracted", store.writeTable("extracted", epoch,
-      extractedAll.filter(col("__hit")).select("epoch", "seq", "url", "extracted_html", "text")))
-
-    // Swap the epoch cache for a SLIM projection: every pass after the
-    // extracted write (outlink discovery, retry routing, lineage, the
-    // concurrent state writes) needs only urls/outlinks — carrying the
-    // epoch's extracted_html/text in the block manager past this point is
-    // the other half of VERDICT r2 #2. One cheap job materializes the slim
-    // cache from the still-cached full frame, then the full frame is
-    // dropped.
-    val slim = extractedAll
-      .select("epoch", "seq", "url", "host", "priority", "retries", "__hit", "outlinks")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    slim.count()
-    extractedAll.unpersist()
-
-    // misses -> retry (bounded). Columnar: url_host/arithmetic columns
-    // instead of a typed map — no object decode/encode pass (url_host IS
-    // PyUrl.hostOf, and discovered rows stay Tungsten rows end to end).
-    val retryCands = slim.filter(!col("__hit") && col("retries") < cfg.maxRetries)
-      .select(col("url"), col("host"), col("priority"),
-              lit(epoch.toInt).as("discoveredEpoch"),
-              (col("retries") + 1).as("retries")).as[Candidate]
-
-    val discovered: Dataset[Candidate] = slim.filter(col("__hit"))
-      .select(col("priority"), explode(col("outlinks")).as("out"))
-      .withColumn("curl", url_canonicalize(col("out")))
-      .filter(col("curl").isNotNull)
-      .select(col("curl").as("url"), url_host(col("curl")).as("host"),
-              (col("priority") * cfg.linkPriorityDecay).as("priority"),
-              lit(epoch.toInt).as("discoveredEpoch"), lit(0).as("retries"))
-      .observe(obsDisc, count(lit(1)).as("n")).as[Candidate]
-
-    // 8. next state. The only join here is a left-anti join that removes
-    // THIS epoch's scheduled urls from the carried-over frontier — see
-    // residualFrontier for why it carries NO broadcast hint (AQE picks the
-    // strategy from runtime size). It cannot be skipped: the seen filter
-    // only catches retries==0 candidates, so a fetch-missed url
-    // (retries>0 bypasses seen by design) carried forward via `allowed`
-    // would be rescheduled every epoch forever and the frontier would
-    // never drain (ADVICE r1, high). Retried urls re-enter ONLY via
-    // retryCands with retries+1, bounding total schedules of any url at
-    // 1 + maxRetries. No dedup here: next epoch's FUSED bucket pass dedups
-    // raw discovered candidates (associative reducer -> same winner as
-    // incremental dedup); frontier carries raw links for exactly one epoch.
-    val residual = residualFrontier(allowed.toDF(), scheduledSeq.select("url").toDF()).as[Candidate]
-    // the observe also counts retry tickets entering the next frontier
-    // (discovered rows are retries=0 by construction), maintaining the
-    // frontierRetried snapshot counter that lets the NEXT epoch skip the
-    // retry branches when it is zero
-    val nextFrontier = residual.unionByName(retryCands)
-      .toDF().observe(obsNext, count(lit(1)).as("n"),
-        sum(when(col("retries") > 0, 1L).otherwise(0L)).as("retried")).as[Candidate]
-      .unionByName(discovered)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    // fresh scheduled urls are new by construction; scheduled RETRIED urls
-    // are new only when the seen filter proved it (a recrawled never-seen
-    // url — register it, else every future discovery re-crawls it; a
-    // fetch-miss retry is already seen and must not duplicate). When no
-    // retry ticket can exist (mayHaveRetries=false) the semi-join branch
-    // is provably empty and stays out of the plan: newlySeen becomes a
-    // plain column projection of the persisted scheduledSeq cache.
-    val newlySeen: Dataset[String] =
-      if (!mayHaveRetries) scheduledSeq.select("url").as[String]
-      else scheduledSeq.toDF().filter(col("retries") === 0).select("url").as[String]
-        .union(scheduledSeq.toDF().filter(col("retries") > 0).select("url")
-          .join(newRetriedUrls.toDF("url"), Seq("url"), "left_semi").as[String])
-    // seen set is APPEND-ONLY: write just this epoch's delta; the snapshot
-    // records the segment list (rewriting a 10^10-row table per epoch is
-    // not an option)
-    val seenDelta = newlySeen
-      .map(u => (u, SeenSet.bucketOfUrl(u, cfg.seen.numBuckets))).toDF("url", "bucket")
-
-    // 9. lineage: per-partition accounting of the extraction stage
-    val lineage: Dataset[LineageRow] = {
-      val nb = cfg.seen.numBuckets
-      slim.filter(col("__hit"))
-        .select(col("url"), spark_partition_id().as("pid")).as[(String, Int)]
-        .mapPartitions { it =>
-          val counts = scala.collection.mutable.Map.empty[(Int, Int), Long]
-          var pid = -1
-          for ((u, p) <- it) {
-            pid = p
-            val hb = SeenSet.bucketOfUrl(u, nb)
-            counts((p, hb)) = counts.getOrElse((p, hb), 0L) + 1
+      // 3. robots gate: broadcast the (small) per-host rule table
+      val rulesDf = robots.select(col("host"),
+        coalesce(col("disallow"), array()).as("disallow"),
+        coalesce(col("allow"), array()).as("allow"),
+        col("crawl_delay"))
+      val joined = unseen.toDF().join(broadcast(rulesDf), Seq("host"), "left")
+      // rules are pre-parsed arrays on the broadcast side; the UDF only does
+      // path slicing + longest-match — no per-row rule object construction
+      val allowedCol = udf { (url: String, dis: Seq[String], alw: Seq[String]) =>
+        if (dis == null) true
+        else {
+          val path = {
+            val i = url.indexOf("://")
+            val rest = if (i < 0) url else url.substring(i + 3)
+            val s = rest.indexOf('/')
+            if (s < 0) "/" else rest.substring(s)
           }
-          counts.iterator.map { case ((p, hb), c) =>
-            LineageRow(epoch.toInt, p, hb, c, c, c, 0, 0, 0, 0)
-          }
+          graft.frontier.RobotsRules.allowedPath(dis,
+            if (alw == null) Nil else alw, path)
         }
-    }
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(5)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    val tables = try {
-      val fFrontier = Future {
-        // coalesce: the union graph otherwise carries every upstream
-        // partition into the write (160 tiny files per epoch at local[32])
-        "frontier" -> store.writeTable("frontier", epoch,
-          nextFrontier.toDF().coalesce(cfg.shufflePartitions))
       }
-      val fScheduled = Future {
-        "scheduled" -> snap.append("scheduled",
-          store.writeTable("scheduled", epoch, scheduledSeq.toDF()))
+      // project the broadcast rule arrays away BEFORE the persist: they are
+      // consumed by the gate expressions on this line and every cached row
+      // would otherwise carry its host's disallow/allow path lists through
+      // the epoch (tens of MB of dead cache weight per 10^6-candidate epoch)
+      val gated = persisted(joined.withColumn("__allowed", allowedCol(col("url"), col("disallow"), col("allow")))
+        .withColumn("__budget",
+          crawlDelayBudget(col("crawl_delay"), cfg.sched.perHostBudget, cfg.epochWindowSec))
+        .select("url", "host", "priority", "discoveredEpoch", "retries", "__allowed", "__budget")
+        .observe(obsGate, sum(when(col("__allowed"), 0L).otherwise(1L)).as("blocked")))
+      // `allowed` is a plain filter+project over the persisted `gated`
+      // cache — consumers read the cache directly (a second persist of the
+      // same rows bought nothing but block-manager traffic)
+      val allowed = gated.filter(col("__allowed"))
+        .select("url", "host", "priority", "discoveredEpoch", "retries").as[Candidate]
+      val allowedBudgeted = gated.filter(col("__allowed"))
+        .select(struct(col("url"), col("host"), col("priority"), col("discoveredEpoch"),
+                       col("retries")).as("_1"), col("__budget").as("_2"))
+        .as[(Candidate, Int)]
+
+      // 4. politeness dequeue (map-side partial top-k + one per-host merge
+      //    shuffle, crawl-delay budgets) with the within-host rank attached
+      //    by the final top-k (already sorted per host) — no global sort /
+      //    zipWithIndex jobs. The deterministic total crawl order is
+      //    (epoch, host ASC, seq ASC).
+      val ranked = Scheduler.dequeueRanked(spark, allowedBudgeted, cfg.sched)
+      val scheduledSeq: Dataset[ScheduledRow] = persisted(ranked
+        .map { case (c, r) => ScheduledRow(epoch, r.toLong, c.url, c.host, c.priority, c.retries) }
+        .toDF().observe(obsSched, count(lit(1)).as("n")).as[ScheduledRow])
+      // 5+6. "fetch" (join the prepared pages corpus — unique canonical url,
+      //    see preparePages) + extraction (single-pass Catalyst-native
+      //    operator) in ONE pass. The persisted frame drops the raw html
+      //    immediately: raw page bytes never enter the block manager — at a
+      //    10^7-url epoch a cached fetch join would be tens of GB of dead
+      //    weight (VERDICT r2 "What's wrong #2"). Miss rows (html null) ride
+      //    along with a __hit flag so the retry path needs no second probe
+      //    of the pages table.
+      val fetchJoin = scheduledSeq.toDF().join(pages.select("url", "html"), Seq("url"), "left")
+        .observe(obsFetch,
+          sum(when(col("html").isNotNull, 1L).otherwise(0L)).as("fetched"),
+          sum(when(col("html").isNull && col("retries") < cfg.maxRetries, 1L).otherwise(0L)).as("retried"))
+      val extractedAll = persisted(fetchJoin
+        .withColumn("__x", extract_all(col("html"), col("url")))
+        .select(col("epoch"), col("seq"), col("url"), col("host"), col("priority"),
+                col("retries"), col("html").isNotNull.as("__hit"),
+                col("__x.extracted_html").as("extracted_html"),
+                col("__x.text").as("text"), col("__x.outlinks").as("outlinks")))
+
+      // 7. atomic snapshot commit (these writes are the actions that fire
+      // every Observation above)
+      // First write materializes the whole epoch graph into the persisted
+      // caches (extractedAll <- fetch join <- scheduledSeq <- dequeue <-
+      // gate <- fused dedup). The five remaining writes then read only
+      // cached data — they are independent, so they run CONCURRENTLY (Spark
+      // schedules concurrent jobs fine; on a cluster this overlaps commit
+      // latencies the same way). This cut the per-epoch serial write tail,
+      // the dominant fixed cost at sandbox epoch sizes.
+      // scheduled/lineage/extracted are APPEND tables: the manifest carries
+      // every epoch's segment (like seen/blooms), so the crawl's
+      // full product stays referenced — and therefore alive — across
+      // snapshot expiry. Only full-rewrite state versions (frontier,
+      // compacted blooms) become unreferenced garbage for expire() to reap.
+      val extractedEntry = "extracted" -> snap.append("extracted", store.writeTable("extracted", epoch,
+        extractedAll.filter(col("__hit")).select("epoch", "seq", "url", "extracted_html", "text")))
+
+      // Swap the epoch cache for a SLIM projection: every pass after the
+      // extracted write (outlink discovery, retry routing, lineage, the
+      // concurrent state writes) needs only urls/outlinks — carrying the
+      // epoch's extracted_html/text in the block manager past this point is
+      // the other half of VERDICT r2 #2. One cheap job materializes the slim
+      // cache from the still-cached full frame, then the full frame is
+      // dropped.
+      val slim = persisted(extractedAll
+        .select("epoch", "seq", "url", "host", "priority", "retries", "__hit", "outlinks"))
+      slim.count()
+      extractedAll.unpersist()
+
+      // misses -> retry (bounded). Columnar: url_host/arithmetic columns
+      // instead of a typed map — no object decode/encode pass (url_host IS
+      // PyUrl.hostOf, and discovered rows stay Tungsten rows end to end).
+      val retryCands = slim.filter(!col("__hit") && col("retries") < cfg.maxRetries)
+        .select(col("url"), col("host"), col("priority"),
+                lit(epoch.toInt).as("discoveredEpoch"),
+                (col("retries") + 1).as("retries")).as[Candidate]
+
+      val discovered: Dataset[Candidate] = slim.filter(col("__hit"))
+        .select(col("priority"), explode(col("outlinks")).as("out"))
+        .withColumn("curl", url_canonicalize(col("out")))
+        .filter(col("curl").isNotNull)
+        .select(col("curl").as("url"), url_host(col("curl")).as("host"),
+                (col("priority") * cfg.linkPriorityDecay).as("priority"),
+                lit(epoch.toInt).as("discoveredEpoch"), lit(0).as("retries"))
+        .observe(obsDisc, count(lit(1)).as("n")).as[Candidate]
+
+      // 8. next state. The only join here is a left-anti join that removes
+      // THIS epoch's scheduled urls from the carried-over frontier — see
+      // residualFrontier for why it carries NO broadcast hint (AQE picks the
+      // strategy from runtime size). It cannot be skipped: the seen filter
+      // only catches retries==0 candidates, so a fetch-missed url
+      // (retries>0 bypasses seen by design) carried forward via `allowed`
+      // would be rescheduled every epoch forever and the frontier would
+      // never drain (ADVICE r1, high). Retried urls re-enter ONLY via
+      // retryCands with retries+1, bounding total schedules of any url at
+      // 1 + maxRetries. No dedup here: next epoch's FUSED bucket pass dedups
+      // raw discovered candidates (associative reducer -> same winner as
+      // incremental dedup); frontier carries raw links for exactly one epoch.
+      val residual = residualFrontier(allowed.toDF(), scheduledSeq.select("url").toDF()).as[Candidate]
+      // the observe also counts retry tickets entering the next frontier
+      // (discovered rows are retries=0 by construction), maintaining the
+      // frontierRetried snapshot counter that lets the NEXT epoch skip the
+      // retry branches when it is zero
+      val nextFrontier = persisted(residual.unionByName(retryCands)
+        .toDF().observe(obsNext, count(lit(1)).as("n"),
+          sum(when(col("retries") > 0, 1L).otherwise(0L)).as("retried")).as[Candidate]
+        .unionByName(discovered))
+
+      // fresh scheduled urls are new by construction; scheduled RETRIED urls
+      // are new only when the seen filter proved it (a recrawled never-seen
+      // url — register it, else every future discovery re-crawls it; a
+      // fetch-miss retry is already seen and must not duplicate). When no
+      // retry ticket can exist (mayHaveRetries=false) the semi-join branch
+      // is provably empty and stays out of the plan: newlySeen becomes a
+      // plain column projection of the persisted scheduledSeq cache.
+      val newlySeen: Dataset[String] =
+        if (!mayHaveRetries) scheduledSeq.select("url").as[String]
+        else scheduledSeq.toDF().filter(col("retries") === 0).select("url").as[String]
+          .union(scheduledSeq.toDF().filter(col("retries") > 0).select("url")
+            .join(newRetriedUrls.toDF("url"), Seq("url"), "left_semi").as[String])
+      // seen set is APPEND-ONLY: write just this epoch's delta; the snapshot
+      // records the segment list (rewriting a 10^10-row table per epoch is
+      // not an option)
+      val seenDelta = newlySeen
+        .map(u => (u, SeenSet.bucketOfUrl(u, cfg.seen.numBuckets))).toDF("url", "bucket")
+
+      // 9. lineage: per-partition accounting of the extraction stage
+      val lineage: Dataset[LineageRow] = {
+        val nb = cfg.seen.numBuckets
+        slim.filter(col("__hit"))
+          .select(col("url"), spark_partition_id().as("pid")).as[(String, Int)]
+          .mapPartitions { it =>
+            val counts = scala.collection.mutable.Map.empty[(Int, Int), Long]
+            var pid = -1
+            for ((u, p) <- it) {
+              pid = p
+              val hb = SeenSet.bucketOfUrl(u, nb)
+              counts((p, hb)) = counts.getOrElse((p, hb), 0L) + 1
+            }
+            counts.iterator.map { case ((p, hb), c) =>
+              LineageRow(epoch.toInt, p, hb, c, c, c, 0, 0, 0, 0)
+            }
+          }
       }
-      val fLineage = Future {
-        "lineage" -> snap.append("lineage",
-          store.writeTable("lineage", epoch, lineage.toDF()))
-      }
-      // blooms are append-only delta segments (each sized to its actual
-      // insert count); every maxBloomSegments epochs a MAJOR COMPACTION
-      // rewrites BOTH LSM structures — the whole seen table as ONE
-      // bucket-partitioned segment (read through readTable, so delete
-      // segments are applied and dropped) and full-capacity bloom filters
-      // rebuilt from it — bounding the per-bucket segment-union fpp, the read
-      // fan-in, AND the manifest's segment-list length, at an amortized
-      // 1/maxBloomSegments of a full seen pass per epoch. The bucket
-      // partitioning is what turns the >64-bucket pruned anti-join
-      // (SeenSet.prunedSeen) into a parquet DIRECTORY prune; the small
-      // inter-compaction deltas stay unpartitioned (LSM memtable shape) and
-      // are merely row-filtered. expire() reclaims the superseded delta
-      // dirs once the manifests referencing them age out.
-      val compacting = snap.segments("blooms").length + 1 > cfg.seen.maxBloomSegments
-      val fSeenBlooms: Seq[Future[Seq[(String, String)]]] =
-        if (compacting) Seq(Future {
-          // repartition by bucket: ~one file per bucket dir, not one per
-          // shuffle task per dir
-          val compacted = store.writeTable("seen", epoch,
-            store.readTable(spark, snap, "seen").unionByName(seenDelta)
-              .repartition(cfg.shufflePartitions, col("bucket")), Seq("bucket"))
-          // the filters are built from the compacted table as it is stored
-          val full = SeenSet.buildBlooms(spark, store.readTable(spark,
-            Snapshot(epoch, Map("seen" -> compacted), Map.empty), "seen").select("url").as[String],
-            cfg.seen)
-          Seq("seen" -> compacted,
-              "blooms" -> store.writeTable("blooms", epoch, full.toDF()))
-        })
-        else Seq(
-          // the delta branch's two writes are independent (both read the
-          // persisted scheduledSeq projection) — run them concurrently
-          // like the other state writes
-          Future {
-            Seq("seen" -> snap.append("seen", store.writeTable("seen", epoch, seenDelta)))
-          },
-          Future {
-            val delta = SeenSet.buildDeltaBlooms(spark, newlySeen, cfg.seen)
-            Seq("blooms" -> snap.append("blooms", store.writeTable("blooms", epoch, delta.toDF())))
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.duration.Duration
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(5)
+      implicit val ec: scala.concurrent.ExecutionContext =
+        scala.concurrent.ExecutionContext.fromExecutorService(pool)
+      val tables = try {
+        val fFrontier = Future {
+          // coalesce: the union graph otherwise carries every upstream
+          // partition into the write (160 tiny files per epoch at local[32])
+          "frontier" -> store.writeTable("frontier", epoch,
+            nextFrontier.toDF().coalesce(cfg.shufflePartitions))
+        }
+        val fScheduled = Future {
+          "scheduled" -> snap.append("scheduled",
+            store.writeTable("scheduled", epoch, scheduledSeq.toDF()))
+        }
+        val fLineage = Future {
+          "lineage" -> snap.append("lineage",
+            store.writeTable("lineage", epoch, lineage.toDF()))
+        }
+        // blooms are append-only delta segments (each sized to its actual
+        // insert count); every maxBloomSegments epochs a MAJOR COMPACTION
+        // rewrites BOTH LSM structures — the whole seen table as ONE
+        // bucket-partitioned segment (read through readTable, so delete
+        // segments are applied and dropped) and full-capacity bloom filters
+        // rebuilt from it — bounding the per-bucket segment-union fpp, the read
+        // fan-in, AND the manifest's segment-list length, at an amortized
+        // 1/maxBloomSegments of a full seen pass per epoch. The bucket
+        // partitioning is what turns the >64-bucket pruned anti-join
+        // (SeenSet.prunedSeen) into a parquet DIRECTORY prune; the small
+        // inter-compaction deltas stay unpartitioned (LSM memtable shape) and
+        // are merely row-filtered. expire() reclaims the superseded delta
+        // dirs once the manifests referencing them age out.
+        val compacting = snap.segments("blooms").length + 1 > cfg.seen.maxBloomSegments
+        val fSeenBlooms: Seq[Future[Seq[(String, String)]]] =
+          if (compacting) Seq(Future {
+            // repartition by bucket: ~one file per bucket dir, not one per
+            // shuffle task per dir
+            val compacted = store.writeTable("seen", epoch,
+              store.readTable(spark, snap, "seen").unionByName(seenDelta)
+                .repartition(cfg.shufflePartitions, col("bucket")), Seq("bucket"))
+            // the filters are built from the compacted table as it is stored
+            val full = SeenSet.buildBlooms(spark, store.readTable(spark,
+              Snapshot(epoch, Map("seen" -> compacted), Map.empty), "seen").select("url").as[String],
+              cfg.seen)
+            Seq("seen" -> compacted,
+                "blooms" -> store.writeTable("blooms", epoch, full.toDF()))
           })
-      (Seq(extractedEntry, Await.result(fFrontier, Duration.Inf),
-        Await.result(fScheduled, Duration.Inf), Await.result(fLineage, Duration.Inf)) ++
-        fSeenBlooms.flatMap(Await.result(_, Duration.Inf))).toMap
-    } finally pool.shutdown()
+          else Seq(
+            // the delta branch's two writes are independent (both read the
+            // persisted scheduledSeq projection) — run them concurrently
+            // like the other state writes
+            Future {
+              Seq("seen" -> snap.append("seen", store.writeTable("seen", epoch, seenDelta)))
+            },
+            Future {
+              val delta = SeenSet.buildDeltaBlooms(spark, newlySeen, cfg.seen)
+              Seq("blooms" -> snap.append("blooms", store.writeTable("blooms", epoch, delta.toDF())))
+            })
+        (Seq(extractedEntry, Await.result(fFrontier, Duration.Inf),
+          Await.result(fScheduled, Duration.Inf), Await.result(fLineage, Duration.Inf)) ++
+          fSeenBlooms.flatMap(Await.result(_, Duration.Inf))).toMap
+      } finally {
+        // a failed write propagates only once every other write is done:
+        // the caches they read are released on the way out
+        pool.shutdown()
+        pool.awaitTermination(Long.MaxValue, java.util.concurrent.TimeUnit.NANOSECONDS)
+      }
 
-    def metric(o: org.apache.spark.sql.Observation, k: String): Long =
-      o.get.get(k).map(v => if (v == null) 0L else v.asInstanceOf[Long]).getOrElse(0L)
-    val unseenCount = metric(obsUnseen, "n")
-    val dedupedCount = metric(obsIn, "n") - unseenCount
-    val robotsBlocked = metric(obsGate, "blocked")
-    val scheduledCount = metric(obsSched, "n")
-    val fetchedCount = metric(obsFetch, "fetched")
-    val retriedCount = metric(obsFetch, "retried")
-    val discoveredCount = metric(obsDisc, "n")
-    val frontierSize = metric(obsNext, "n") + discoveredCount
+      def metric(o: org.apache.spark.sql.Observation, k: String): Long =
+        o.get.get(k).map(v => if (v == null) 0L else v.asInstanceOf[Long]).getOrElse(0L)
+      val unseenCount = metric(obsUnseen, "n")
+      val dedupedCount = metric(obsIn, "n") - unseenCount
+      val robotsBlocked = metric(obsGate, "blocked")
+      val scheduledCount = metric(obsSched, "n")
+      val fetchedCount = metric(obsFetch, "fetched")
+      val retriedCount = metric(obsFetch, "retried")
+      val discoveredCount = metric(obsDisc, "n")
+      val frontierSize = metric(obsNext, "n") + discoveredCount
 
-    val counters = Map(
-      "scheduled" -> scheduledCount, "fetched" -> fetchedCount,
-      "deduped" -> dedupedCount, "robotsBlocked" -> robotsBlocked,
-      "retried" -> retriedCount, "discovered" -> discoveredCount,
-      "frontierSize" -> frontierSize,
-      "frontierRetried" -> metric(obsNext, "retried"))
-    store.commit(epoch, tables, counters)
-    // snapshot GC: bounded state store — superseded frontier versions,
-    // compacted-away bloom generations, crash orphans (epoch <= committed)
-    if (cfg.retainSnapshots > 0) store.expire(cfg.retainSnapshots)
+      val counters = Map(
+        "scheduled" -> scheduledCount, "fetched" -> fetchedCount,
+        "deduped" -> dedupedCount, "robotsBlocked" -> robotsBlocked,
+        "retried" -> retriedCount, "discovered" -> discoveredCount,
+        "frontierSize" -> frontierSize,
+        "frontierRetried" -> metric(obsNext, "retried"))
+      store.commit(epoch, tables, counters)
+      // snapshot GC: bounded state store — superseded frontier versions,
+      // compacted-away bloom generations, crash orphans (epoch <= committed)
+      if (cfg.retainSnapshots > 0) store.expire(cfg.retainSnapshots)
 
-    Seq(gated, scheduledSeq.toDF(), slim, nextFrontier.toDF())
-      .foreach(d => d.unpersist())
-    seenSetCache.unpersist()
-
-    EpochResult(epoch, scheduledCount, fetchedCount, dedupedCount, robotsBlocked,
-                retriedCount, discoveredCount, frontierSize)
+      EpochResult(epoch, scheduledCount, fetchedCount, dedupedCount, robotsBlocked,
+                  retriedCount, discoveredCount, frontierSize)
+    } finally cached.foreach(_.unpersist())
   }
 
   final case class RecrawlDeleteResult(requested: Long, epoch: Long)

@@ -4,9 +4,10 @@ package graft.model
   *
   * `WResource`/`WArchive` are the recursive JVM-side model used inside
   * extraction (depth-recursive like the format itself,
-  * /root/reference/webarchive/webarchive.py:511-514). The Spark-facing
-  * schema (`WebArchiveRow`) is the documented depth-2 unroll — Catalyst has
-  * no recursive types; deeper frames are counted, never silently dropped.
+  * the reference's webarchive.py:511-514). Their Spark-facing
+  * form is `parse_webarchive`'s depth-2 struct
+  * (`graft.sql.ParseWebArchiveExpr`) — Catalyst has no recursive types;
+  * deeper frames are counted, never silently dropped.
   */
 final case class WResource(
     data: Array[Byte],
@@ -19,35 +20,6 @@ final case class WArchive(
     main: WResource,
     subresources: Vector[WResource],
     subframes: Vector[WArchive])
-
-// --- Spark-facing rows (flat encoders, no recursion) -------------------------
-
-final case class WebResourceRow(
-    data: Array[Byte],
-    mimeType: String,
-    url: String,
-    textEncoding: Option[String],
-    frameName: Option[String])
-
-final case class SubframeRow(
-    main: WebResourceRow,
-    subresources: Seq[WebResourceRow],
-    /** count of frames nested below depth 2 (flattened, not dropped silently) */
-    deeperFrameCount: Int)
-
-final case class WebArchiveRow(
-    main: WebResourceRow,
-    subresources: Seq[WebResourceRow],
-    subframes: Seq[SubframeRow])
-
-/** Engine input table row (BASELINE.json input_hint):
-  * pages(url, warc_ts, html, text, lang). */
-final case class PageRow(
-    url: String,
-    warc_ts: java.sql.Timestamp,
-    html: Array[Byte],
-    text: String,
-    lang: String)
 
 /** A frontier candidate URL. */
 final case class Candidate(

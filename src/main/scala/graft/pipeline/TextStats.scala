@@ -47,21 +47,6 @@ object TextStats {
       st.getField("nonspace").cast("double") / toks.cast("double")).otherwise(0.0)
   }
 
-  /** Uppercase ratio over letters. */
-  def upperRatio(text: Column): Column = {
-    val letters = length(regexp_replace(text, "[^A-Za-z]", ""))
-    val uppers = length(regexp_replace(text, "[^A-Z]", ""))
-    when(letters > 0, uppers.cast("double") / letters.cast("double")).otherwise(0.0)
-  }
-
-  /** Stopword ratio against the English list (classic quality signal). */
-  def stopwordRatio(text: Column): Column = {
-    val st = stats(text)
-    val toks = st.getField("tokens")
-    when(toks > 0,
-      st.getField("hits_en").cast("double") / toks.cast("double")).otherwise(0.0)
-  }
-
   /** Composite quality score in [0,1]: length band + stopword presence +
     * sane punctuation + sane word length. One scan per document. */
   def qualityScore(text: Column): Column = {

@@ -45,62 +45,24 @@ object ExtractionOps {
   def extractHtml(body: Array[Byte], url: String): String =
     Rewriter.toHtml(archiveOf(body, url))
 
-  /** Visible text of the page (post-rewrite, tags stripped) — the `text`
-    * output column of the pages table. */
+  /** Visible text of the page by [[Rewriter.PageObserver]]'s rule, over
+    * the rewritten html — the `text` output column of the pages table. */
   def extractText(html: String): String = {
-    val sb = new StringBuilder
-    HtmlTok.tokenize(html, new HtmlTok.Handler {
-      private var skip = 0
-      override def starttag(tag: String, attrs: List[(String, String)]): Unit =
-        if (tag == "script" || tag == "style") skip += 1
-      override def startendtag(tag: String, attrs: List[(String, String)]): Unit = ()
-      override def endtag(tag: String): Unit =
-        if ((tag == "script" || tag == "style") && skip > 0) skip -= 1
-      override def data(d: String): Unit = if (skip == 0) sb.append(d)
-      override def entityref(name: String): Unit =
-        if (skip == 0) sb.append(graft.core.PyHtml.unescape(s"&$name;"))
-      override def charref(name: String): Unit =
-        if (skip == 0) sb.append(graft.core.PyHtml.unescape(s"&#$name;"))
-      override def comment(d: String): Unit = ()
-      override def decl(d: String): Unit = ()
-    })
-    sb.toString
+    val obs = new Rewriter.PageObserver(null)
+    HtmlTok.tokenize(html, obs)
+    obs.text
   }
 
-  /** Outlinks for the frontier: a[href], (i)frame[src], area[href],
-    * absolutized against the page URL. Deterministic order of appearance,
-    * de-duplicated keeping first. */
+  /** Outlinks for the frontier by [[Rewriter.PageObserver]]'s rule,
+    * observed on the source page; the links found before a tokenizer
+    * error are kept. */
   def extractOutlinks(body: Array[Byte], url: String): Vector[String] = {
-    val archive = archiveOf(body, url)
-    if (!graft.core.Mime.isHtml(archive.main.mimeType)) return Vector.empty
-    val text = try Rewriter.resourceText(archive.main) catch { case _: Exception => return Vector.empty }
-    val base = archive.main.url
-    val seen = scala.collection.mutable.LinkedHashSet.empty[String]
-    try {
-      HtmlTok.tokenize(text, new HtmlTok.Handler {
-        private def add(v: String): Unit = {
-          if (v != null && v.nonEmpty) {
-            val abs = try PyUrl.urljoin(base, v) catch { case _: Exception => null }
-            if (abs != null && (abs.startsWith("http://") || abs.startsWith("https://")))
-              seen += abs
-          }
-        }
-        private def scan(tag: String, attrs: List[(String, String)]): Unit =
-          for ((a, v) <- attrs) {
-            if (((tag == "a" || tag == "area") && a == "href") ||
-                ((tag == "frame" || tag == "iframe") && a == "src")) add(v)
-          }
-        override def starttag(tag: String, attrs: List[(String, String)]): Unit = scan(tag, attrs)
-        override def startendtag(tag: String, attrs: List[(String, String)]): Unit = scan(tag, attrs)
-        override def endtag(tag: String): Unit = ()
-        override def data(d: String): Unit = ()
-        override def entityref(name: String): Unit = ()
-        override def charref(name: String): Unit = ()
-        override def comment(d: String): Unit = ()
-        override def decl(d: String): Unit = ()
-      })
-    } catch { case _: Exception => () }
-    seen.toVector
+    val main = archiveOf(body, url).main
+    if (!Mime.isHtml(main.mimeType)) return Vector.empty
+    val text = try Rewriter.resourceText(main) catch { case _: Exception => return Vector.empty }
+    val obs = new Rewriter.PageObserver(main.url)
+    try HtmlTok.tokenize(text, obs) catch { case _: Exception => () }
+    obs.outlinks
   }
 }
 

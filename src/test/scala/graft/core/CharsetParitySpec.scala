@@ -13,7 +13,8 @@ import java.util.zip.GZIPInputStream
   * value on OK, an error on ERR. This is what pins:
   *  - the table-driven CJK decoders (PyCharsets) AND their unit walk,
   *  - the utf-16/utf-32 BOM/native-LE semantics,
-  *  - the alias spellings CPython accepts but Charset.forName does not. */
+  *  - the alias spellings CPython accepts but Charset.forName does not
+  *    (every spelling of every resolved codec: SPELLINGS). */
 class CharsetParitySpec extends AnyFunSuite {
 
   private def unhex(s: String): Array[Byte] =
@@ -66,5 +67,28 @@ class CharsetParitySpec extends AnyFunSuite {
       checked += 1
     }
     assert(checked > 200, s"only $checked encode rows")
+  }
+
+  test("SPELLINGS: every CPython spelling of a resolved codec decodes and encodes as CPython does") {
+    // golden/charset_spellings.tsv: tools/gen_charset_tables.py spellings —
+    // the spellings codecs.lookup accepts for each codec the engine
+    // resolves itself, with one sample text and its CPython encoding
+    val in = getClass.getResourceAsStream("/golden/charset_spellings.tsv")
+    require(in != null, "spelling table missing — run tools/gen_charset_tables.py spellings")
+    val spellings = scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+      .filter(_.nonEmpty).map(_.split("\t", -1)).toVector
+    val wrong = for {
+      Array(name, codec, textHex, bytesHex) <- spellings
+      text = new String(unhex(textHex), "UTF-8")
+      decoded = try Rewriter.resourceText(
+          graft.model.WResource(unhex(bytesHex), "text/plain", "https://x/", Some(name), None))
+        catch { case e: Exception => e.toString }
+      encoded = try Rewriter.encodeText(text, name).toSeq.map("%02x".format(_)).mkString
+        catch { case e: Exception => e.toString }
+      if decoded != text || encoded != bytesHex
+    } yield s"'$name' ($codec): decoded=$decoded encoded=$encoded"
+    assert(spellings.map(_(1)).distinct.size == 17, "one sample per resolved codec")
+    if (wrong.nonEmpty)
+      fail(s"${wrong.size} of ${spellings.size} spellings differ:\n" + wrong.take(20).mkString("\n"))
   }
 }

@@ -106,16 +106,23 @@ class GoldenParitySpec extends AnyFunSuite {
   test("deepframes: depth-3 extraction recurses fully; row schema counts the overflow") {
     val archive = WebArchiveOps.parse(archiveBytes("deepframes"))
     assert(WebArchiveOps.resourceCount(archive) == 6)
-    val row = WebArchiveOps.toRow(archive)
-    assert(row.subframes.size == 1)
-    assert(row.subframes.head.deeperFrameCount == 1, "level-3 frame must be counted")
+    val counts = deeperFrameCounts(archive)
+    assert(counts.size == 1)
+    assert(counts.head == 1, "level-3 frame must be counted")
   }
 
   test("frames: depth-2 row unroll keeps subframes") {
     val archive = WebArchiveOps.parse(archiveBytes("frames"))
-    val row = WebArchiveOps.toRow(archive)
-    assert(row.subframes.size == 2)
-    assert(row.subframes.map(_.deeperFrameCount).sum == 0)
+    val counts = deeperFrameCounts(archive)
+    assert(counts.size == 2)
+    assert(counts.sum == 0)
+  }
+
+  /** `deeper_frame_count` of each subframe in `parse_webarchive`'s row. */
+  private def deeperFrameCounts(archive: graft.model.WArchive): Vector[Int] = {
+    val frames = graft.sql.ParseWebArchiveExpr.toInternal(archive).getArray(2)
+    Vector.tabulate(frames.numElements())(
+      frames.getStruct(_, graft.sql.ParseWebArchiveExpr.subframeType.size).getInt(2))
   }
 
   private implicit class JListOps[A](l: java.util.List[A]) {

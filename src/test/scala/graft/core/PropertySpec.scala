@@ -61,7 +61,7 @@ class PropertySpec extends AnyFunSuite {
           .onUnmappableCharacter(CodingErrorAction.REPORT)
           .decode(java.nio.ByteBuffer.wrap(bytes)).toString)
       } catch { case _: java.nio.charset.CharacterCodingException => None }
-      assert(Rewriter.isValidUtf8(bytes) == strict.isDefined,
+      assert(PyCharsets.isValidUtf8(bytes) == strict.isDefined,
         s"validator disagrees with strict decoder on ${bytes.map(b => f"$b%02x").mkString(" ")}")
       if (strict.isDefined)
         assert(new String(bytes, StandardCharsets.UTF_8) == strict.get)

@@ -2,14 +2,14 @@ package graft.jobs
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.Files
 
 import graft.data.SyntheticCorpus
-import graft.store.ParquetSnapshotStore
+import graft.store.{FrontierStore, ParquetSnapshotStore, Snapshot}
 import graft.frontier.{RobotsRules, Scheduler, SeenSet}
 import graft.model.Candidate
-import graft.core.PyUrl
+import graft.core.{HtmlTok, Mime, PyUrl, Rewriter}
 import graft.sql.ExtractionOps
 
 /** Crawl-semantics tests (SURVEY.md §5.2(4)): the Spark frontier must match
@@ -70,6 +70,44 @@ class CrawlJobSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def captureHash(html: Array[Byte]): Long =
     org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
       html, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, html.length, 42L)
+
+  /** The outlink rule written out on its own, so the oracle does not share
+    * the engine's `PageObserver`: a/area href and frame/iframe src,
+    * absolutized against the page URL, http(s) only, first-seen order
+    * without duplicates; the links found before a tokenizer error are
+    * kept. */
+  private def referenceOutlinks(body: Array[Byte], url: String): Vector[String] = {
+    val archive = ExtractionOps.archiveOf(body, url)
+    if (!Mime.isHtml(archive.main.mimeType)) return Vector.empty
+    val text = try Rewriter.resourceText(archive.main) catch { case _: Exception => return Vector.empty }
+    val base = archive.main.url
+    val seen = scala.collection.mutable.LinkedHashSet.empty[String]
+    try {
+      HtmlTok.tokenize(text, new HtmlTok.Handler {
+        private def add(v: String): Unit = {
+          if (v != null && v.nonEmpty) {
+            val abs = try PyUrl.urljoin(base, v) catch { case _: Exception => null }
+            if (abs != null && (abs.startsWith("http://") || abs.startsWith("https://")))
+              seen += abs
+          }
+        }
+        private def scan(tag: String, attrs: List[(String, String)]): Unit =
+          for ((a, v) <- attrs) {
+            if (((tag == "a" || tag == "area") && a == "href") ||
+                ((tag == "frame" || tag == "iframe") && a == "src")) add(v)
+          }
+        override def starttag(tag: String, attrs: List[(String, String)]): Unit = scan(tag, attrs)
+        override def startendtag(tag: String, attrs: List[(String, String)]): Unit = scan(tag, attrs)
+        override def endtag(tag: String): Unit = ()
+        override def data(d: String): Unit = ()
+        override def entityref(name: String): Unit = ()
+        override def charref(name: String): Unit = ()
+        override def comment(d: String): Unit = ()
+        override def decl(d: String): Unit = ()
+      })
+    } catch { case _: Exception => () }
+    seen.toVector
+  }
 
   /** (scheduled-per-epoch, final frontier map, final seen set). */
   private def oracle(epochs: Int)
@@ -163,7 +201,7 @@ class CrawlJobSpec extends AnyFunSuite with BeforeAndAfterAll {
       // re-add: nothing for fetched (closed world: all scheduled exist)
       for (c <- scheduled) {
         val html = pages(c.url)
-        for (link <- ExtractionOps.extractOutlinks(html, c.url);
+        for (link <- referenceOutlinks(html, c.url);
              cu <- PyUrl.canonicalize(link)) {
           addCand(Candidate(cu, hostOf(cu), c.priority * cfg.linkPriorityDecay, epoch, 0))
         }
@@ -327,6 +365,34 @@ class CrawlJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r3.epoch == 2)
     assert(scheduledTable(resumed) == scheduledTable(straight),
       "post-crash rerun must equal the uninterrupted run")
+  }
+
+  test("a failed epoch write releases every frame the epoch persisted") {
+    val store = freshStore()
+    val pages = CrawlJob.preparePages(SyntheticCorpus.pages(spark, seed, N, 8).toDF())
+    val robots = SyntheticCorpus.robots(spark, seed).toDF()
+    CrawlJob.init(spark, store, SyntheticCorpus.seeds(spark, seed, N, 20), cfg)
+    // the real store, except that the lineage write fails
+    val failing = new FrontierStore {
+      def writeTable(name: String, epoch: Long, df: DataFrame, partitionBy: Seq[String]): String =
+        if (name == "lineage") throw new java.io.IOException("lineage write failed")
+        else store.writeTable(name, epoch, df, partitionBy)
+      def commit(epoch: Long, tables: Map[String, String], counters: Map[String, Long]): Unit =
+        store.commit(epoch, tables, counters)
+      def latest(): Option[Snapshot] = store.latest()
+      def readTable(spark: SparkSession, snap: Snapshot, name: String): DataFrame =
+        store.readTable(spark, snap, name)
+      def expire(retain: Int): (Int, Int) = store.expire(retain)
+    }
+    val sc = spark.sparkContext
+    val epochBefore = store.latest().get.epoch
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val err = intercept[java.io.IOException](CrawlJob.runEpoch(spark, failing, pages, robots, cfg))
+    assert(err.getMessage == "lineage write failed")
+    val after = sc.getPersistentRDDs.keySet.toSet
+    assert(after == before,
+      s"cached RDDs before ${before.toSeq.sorted} after ${after.toSeq.sorted}")
+    assert(store.latest().get.epoch == epochBefore, "the failed epoch must not commit")
   }
 
   test("recrawl: an already-crawled url is re-fetched once, seen set gains no duplicates") {

@@ -87,10 +87,57 @@ class SqlExprSpec extends AnyFunSuite with BeforeAndAfterAll {
       """<a href="mailto:z@q.r">skip</a><a href="javascript:void(0)">skip</a>""")
       .getBytes("UTF-8")
     val df = spark.createDataFrame(Seq(("https://h.example/d/p.html", html))).toDF("url", "html")
-    val links = df.select(GraftFunctions.extract_outlinks(col("html"), col("url")))
-      .collect()(0).getSeq[String](0)
-    assert(links == Seq("https://h.example/d/x.html", "https://h.example/y.html",
-                        "https://h.example/d/f.html"))
+    val row = df.select(GraftFunctions.extract_outlinks(col("html"), col("url")),
+      GraftFunctions.extract_all(col("html"), col("url")).getField("outlinks")).collect()(0)
+    val expected = Seq("https://h.example/d/x.html", "https://h.example/y.html",
+                       "https://h.example/d/f.html")
+    assert(row.getSeq[String](0) == expected, "extract_outlinks")
+    assert(row.getSeq[String](1) == expected, "extract_all(...).outlinks")
+  }
+
+  test("extract_text: script/style skipped, entities unescaped, <script/> opens a script") {
+    val html = ("""<p>a &amp; b &#65;</p><script>var s = "<b>x</b>";</script>""" +
+      """<style>p { color: red }</style>c<script/>d""").getBytes("UTF-8")
+    val df = spark.createDataFrame(Seq(("https://h.example/p.html", html))).toDF("url", "html")
+    val row = df.select(GraftFunctions.extract_text(col("html"), col("url")),
+      GraftFunctions.extract_all(col("html"), col("url")).getField("text")).collect()(0)
+    // extract_text reads the rewritten html, where text/html re-serializes
+    // <script/> as <script>: what follows it is script content. extract_all
+    // observes the source, where <script/> is a start-end tag.
+    assert(row.getString(0) == "a & b Ac")
+    assert(row.getString(1) == "a & b Acd")
+  }
+
+  /** A webarchive whose main resource is `data`, as an XML plist. */
+  private def oneResourceArchive(mime: String, encoding: String, data: Array[Byte]): Array[Byte] =
+    s"""<?xml version="1.0" encoding="UTF-8"?>
+       |<plist version="1.0"><dict><key>WebMainResource</key><dict>
+       |<key>WebResourceData</key><data>${java.util.Base64.getEncoder.encodeToString(data)}</data>
+       |<key>WebResourceMIMEType</key><string>$mime</string>
+       |<key>WebResourceTextEncodingName</key><string>$encoding</string>
+       |<key>WebResourceURL</key><string>https://x.example/r</string>
+       |</dict></dict></plist>""".stripMargin.getBytes("UTF-8")
+
+  test("extract_all on a non-HTML main: the main's text as resourceText decodes it, else null") {
+    val js = Files.readAllBytes(
+      Paths.get(getClass.getResource("/golden/archives/nonhtml_main.webarchive").toURI))
+    val plain = "h\u00e9llo \u65e5\u672c"
+    val df = spark.createDataFrame(Seq(
+      ("js", js),
+      // utf-16 without a BOM reads little-endian, as CPython does
+      ("utf16", oneResourceArchive("text/plain", "utf-16", plain.getBytes("UTF-16LE"))),
+      ("png", oneResourceArchive("image/png", "utf-8", 0x89.toByte +: "PNG\r\n".getBytes("US-ASCII")))
+    )).toDF("name", "body")
+    val got = df.select(col("name"), GraftFunctions.extract_all(col("body"), lit("https://x.example/r")).as("x"))
+      .collect().map(r => r.getString(0) -> Option(r.getStruct(1))).toMap
+    val jsRow = got("js").get
+    assert(jsRow.getString(0) == "console.log('hello <b> &amp;');\n")
+    assert(jsRow.getString(1) == "" && jsRow.getSeq[String](2).isEmpty)
+    assert(got("utf16").get.getString(0) == plain)
+    assert(got("utf16").get.getString(0) == graft.core.Rewriter.resourceText(
+      graft.core.WebArchiveOps.parse(
+        oneResourceArchive("text/plain", "utf-16", plain.getBytes("UTF-16LE"))).main))
+    assert(got("png").isEmpty, "a non-text main nulls the struct")
   }
 
   test("extract_files manifest matches the golden extraction tree") {

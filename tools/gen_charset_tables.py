@@ -32,7 +32,8 @@ Output: src/main/resources/charsets/<enc>.tsv.gz with lines:
 """
 import gzip, os
 
-OUT = "/root/repo/src/main/resources/charsets"
+REPO = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..")
+OUT = os.path.join(REPO, "src", "main", "resources", "charsets")
 ENCS = ["shift_jis", "euc-jp", "euc-kr", "gbk", "big5"]
 
 def main():
@@ -101,9 +102,6 @@ def main():
         with gzip.open(p, "wt") as f:
             f.write("\n".join(rows) + "\n")
         print(f"{enc}: {len(rows)} rows, {len(values)} unit values, {os.path.getsize(p)} bytes")
-
-if __name__ == "__main__":
-    main()
 
 # ---- differential test corpus (committed; replayed by CharsetParitySpec) ----
 
@@ -197,10 +195,61 @@ def gen_cases():
                       "latin-1", "ascii", "koi8-r"]:
         for s in enc_texts:
             enc_case(enc, s)
-    p = "/root/repo/src/test/resources/golden/charset_cases.tsv.gz"
+    p = os.path.join(REPO, "src", "test", "resources", "golden", "charset_cases.tsv.gz")
     with gzip.open(p, "wt") as f:
         f.write("\n".join(out) + "\n")
     print(f"cases: {len(out)} -> {p} ({os.path.getsize(p)} bytes)")
 
+
+# ---- codec-name spellings (committed; replayed by CharsetParitySpec) ----
+
+# every codec the engine resolves itself, with a sample text it encodes
+SPELLING_SAMPLES = {
+    "utf_8": "h\xe9llo \u2603 \U0001F600", "utf_16": "h\xe9llo \u2603 \U0001F600",
+    "utf_32": "h\xe9llo \u2603 \U0001F600", "utf_16_le": "h\xe9llo \u2603",
+    "utf_16_be": "h\xe9llo \u2603", "utf_32_le": "h\xe9llo \u2603",
+    "utf_32_be": "h\xe9llo \u2603", "latin_1": "caf\xe9 \xff", "ascii": "plain ascii",
+    "koi8_r": "\u041f\u0440\u0438\u0432\u0435\u0442",
+    "cp1252": "\u201cquoted\u201d \u20ac", "gb2312": "\u4e2d\u6587\u7b80\u4f53",
+    "shift_jis": "\u65e5\u672c\u8a9e \uff71", "euc_jp": "\u65e5\u672c\u8a9e",
+    "euc_kr": "\ud55c\uad6d\uc5b4", "gbk": "\u4e2d\u6587\u7b80\u4f53",
+    "big5": "\u7e41\u9ad4\u5b57",
+}
+
+def gen_spellings(path=os.path.join(REPO, "src", "test", "resources", "golden",
+                                    "charset_spellings.tsv")):
+    """Spellings CPython's codecs.lookup accepts for each codec above: the
+    module name and every encodings.aliases entry, each as written, upper
+    case, and with '-' or ' ' for '_', plus hand-picked mixed spellings.
+    Row: spelling, codec, sample text (utf-8 hex), its encoding (hex)."""
+    import codecs
+    from encodings.aliases import aliases
+    extra = ["utf_8", "UTF 8", "U8", "Utf-8", "latin_1", "l1", "Latin-1",
+             "windows_1252", "Windows-1252", "us_ascii", "US-ASCII",
+             "utf_16_le", "UTF-16LE", "csShiftJIS", "Shift-JIS", "koi8_r",
+             "KOI8-R", "EUC-JP", "EUC-KR", "GB2312", "Big5", "ks_c_5601-1987"]
+    rows = []
+    for codec, sample in SPELLING_SAMPLES.items():
+        name = codecs.lookup(codec).name
+        keys = [codec] + sorted(k for k, v in aliases.items() if v == codec)
+        spellings = []
+        for k in keys:
+            spellings += [k, k.upper(), k.replace("_", "-"), k.replace("_", " ")]
+        spellings += [e for e in extra if codecs.lookup(e).name == name]
+        for sp in dict.fromkeys(spellings):
+            assert codecs.lookup(sp).name == name, (sp, codec)
+            rows.append(f"{sp}\t{codec}\t{sample.encode('utf-8').hex()}\t{sample.encode(sp).hex()}")
+    with open(path, "w", encoding="utf-8") as f:
+        f.write("\n".join(rows) + "\n")
+    print(f"spellings: {len(rows)} -> {path}")
+
 if __name__ == "__main__":
-    gen_cases()
+    # python3 tools/gen_charset_tables.py [tables] [cases] [spellings]
+    import sys
+    what = sys.argv[1:] or ["tables", "cases", "spellings"]
+    if "tables" in what:
+        main()
+    if "cases" in what:
+        gen_cases()
+    if "spellings" in what:
+        gen_spellings()
