@@ -416,19 +416,50 @@ object Rewriter {
     }
   }
 
-  /** Single-pass extraction: rewritten HTML + visible text + outlinks from
-    * ONE tokenizer run (the separate expressions parse the page 3-4x). A
-    * non-HTML main yields its text only; after the rewrite fallback, text
-    * and outlinks are empty. */
-  def extractAll(archive: WArchive): (String, String, Vector[String]) = {
-    val ctx = new ArchiveCtx(archive)
+  /** The fields of a page extraction, as bits of a field set; bit `1 << i`
+    * is field `i` of the (extracted_html, text, outlinks) result. */
+  final val HtmlField = 1
+  final val TextField = 2
+  final val OutlinksField = 4
+  final val AllFields = HtmlField | TextField | OutlinksField
+
+  /** Page extraction of the fields in the set `fields`, one rule for all:
+    *  - the main's `resourceText` decode errors propagate, whatever the set;
+    *  - extracted_html is the rewrite, NUL-padding fallback included; on a
+    *    non-HTML main it is the decoded main;
+    *  - text and outlinks are what [[PageObserver]] sees on the source's
+    *    tokenizer pass, whether or not the rewrite fell back; both are
+    *    empty when the tokenizer throws or the main is not HTML;
+    *  - a field outside the set is null (outlinks: empty).
+    * With extracted_html the observer rides the rewrite's one pass; a set
+    * without it tokenizes the source once and runs no rewrite. */
+  def extract(archive: WArchive, fields: Int): (String, String, Vector[String]) = {
     val main = archive.main
-    if (!Mime.isHtml(main.mimeType)) return (resourceText(main), "", Vector.empty)
-    val out = new StringBuilder(main.data.length) // rewrite output >= input
-    val obs = new PageObserver(main.url)
-    if (processHtmlResource(ctx, main, out, null, 0, obs)) (out.toString, "", Vector.empty)
-    else (out.toString, obs.text, obs.outlinks)
+    val linkBase = if ((fields & OutlinksField) != 0) main.url else null
+    val (html, obs) =
+      if (!Mime.isHtml(main.mimeType)) (resourceText(main), null)
+      else if ((fields & HtmlField) == 0) (null, observe(resourceText(main), linkBase))
+      else {
+        val out = new StringBuilder(main.data.length) // rewrite output >= input
+        val obs = if ((fields & (TextField | OutlinksField)) != 0) new PageObserver(linkBase) else null
+        if (processHtmlResource(new ArchiveCtx(archive), main, out, null, 0, obs) && obs != null)
+          (out.toString, observe(resourceText(main), linkBase)) // rare: rewrite fell back
+        else (out.toString, obs)
+      }
+    (if ((fields & HtmlField) != 0) html else null,
+     if ((fields & TextField) == 0) null else if (obs == null) "" else obs.text,
+     if (obs == null) Vector.empty else obs.outlinks)
   }
+
+  /** The observer after a tokenizer pass over `text` alone; null when the
+    * tokenizer throws (caught as broadly as the rewrite's fallback). */
+  private def observe(text: String, linkBase: String): PageObserver = {
+    val obs = new PageObserver(linkBase)
+    try { HtmlTok.tokenize(text, obs); obs } catch { case _: Throwable => null }
+  }
+
+  /** Every field in one tokenizer pass: [[extract]] of [[AllFields]]. */
+  def extractAll(archive: WArchive): (String, String, Vector[String]) = extract(archive, AllFields)
 
   private def toHtmlInner(ctx: ArchiveCtx, depth: Int): String = {
     // presize to the input size: output is >= input for a rewrite, and

@@ -1,14 +1,14 @@
 package graft.sql
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, BinaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GetStructField, UnaryExpression, BinaryExpression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.catalyst.InternalRow
 
-import graft.core.{WebArchiveOps, Rewriter, PyUrl, HtmlTok, Mime}
+import graft.core.{WebArchiveOps, Rewriter, PyUrl, Mime}
 import graft.model.WArchive
 
 /** Catalyst-native extraction operators (BASELINE.json north_star: "a
@@ -25,97 +25,32 @@ object ExtractionOps {
   /** Parse page body bytes into a WArchive: real webarchive plists are
     * decoded; plain HTML bytes become a single-main-resource archive (the
     * Common-Crawl-style case), so one operator serves both row shapes. */
-  def archiveOf(body: Array[Byte], url: String): WArchive = {
-    val isPlist = body.length >= 8 &&
-      (bytesStartWith(body, "bplist".getBytes) ||
-       { // xml plist sniff: "<?xml" or "<plist" within leading whitespace
-         val head = new String(body, 0, math.min(body.length, 64), "ISO-8859-1")
-         val t = head.dropWhile(_.isWhitespace)
-         t.startsWith("<?xml") || t.startsWith("<plist")
-       })
-    if (isPlist) WebArchiveOps.parse(body)
+  def archiveOf(body: Array[Byte], url: String): WArchive =
+    if (isPlist(body)) WebArchiveOps.parse(body)
     else WArchive(
       graft.model.WResource(body, "text/html", url, Some("utf-8"), None),
       Vector.empty, Vector.empty)
+
+  private def ascii(s: String) = s.getBytes(java.nio.charset.StandardCharsets.US_ASCII)
+  private val BPlist = ascii("bplist")
+  private val XmlDecl = ascii("<?xml")
+  private val PlistTag = ascii("<plist")
+
+  /** The plist sniff, run on every row: at least 8 bytes, and "bplist" at
+    * the start, or "<?xml" or "<plist" after leading whitespace within the
+    * first 64 bytes. */
+  private[graft] def isPlist(body: Array[Byte]): Boolean = body.length >= 8 && {
+    val n = math.min(body.length, 64)
+    startsAt(body, 0, n, BPlist) || {
+      var i = 0
+      while (i < n && Character.isWhitespace((body(i) & 0xff).toChar)) i += 1
+      startsAt(body, i, n, XmlDecl) || startsAt(body, i, n, PlistTag)
+    }
   }
 
-  private def bytesStartWith(b: Array[Byte], p: Array[Byte]): Boolean =
-    b.length >= p.length && java.util.Arrays.equals(java.util.Arrays.copyOf(b, p.length), p)
-
-  def extractHtml(body: Array[Byte], url: String): String =
-    Rewriter.toHtml(archiveOf(body, url))
-
-  /** Visible text of the page by [[Rewriter.PageObserver]]'s rule, over
-    * the rewritten html — the `text` output column of the pages table. */
-  def extractText(html: String): String = {
-    val obs = new Rewriter.PageObserver(null)
-    HtmlTok.tokenize(html, obs)
-    obs.text
-  }
-
-  /** Outlinks for the frontier by [[Rewriter.PageObserver]]'s rule,
-    * observed on the source page; the links found before a tokenizer
-    * error are kept. */
-  def extractOutlinks(body: Array[Byte], url: String): Vector[String] = {
-    val main = archiveOf(body, url).main
-    if (!Mime.isHtml(main.mimeType)) return Vector.empty
-    val text = try Rewriter.resourceText(main) catch { case _: Exception => return Vector.empty }
-    val obs = new Rewriter.PageObserver(main.url)
-    try HtmlTok.tokenize(text, obs) catch { case _: Exception => () }
-    obs.outlinks
-  }
-}
-
-/** extract_html(body: binary, url: string) -> string */
-case class ExtractHtmlExpr(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == BinaryType && right.dataType.isInstanceOf[StringType]) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"$prettyName expects (binary, string)")
-  override def dataType: DataType = StringType
-  override def prettyName: String = "extract_html"
-  override protected def nullSafeEval(body: Any, url: Any): Any = {
-    val out = try ExtractionOps.extractHtml(body.asInstanceOf[Array[Byte]],
-                                            url.asInstanceOf[UTF8String].toString)
-    catch { case _: Exception => null }
-    if (out == null) null else UTF8String.fromString(out)
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
-}
-
-/** extract_text(body: binary, url: string) -> string (visible text) */
-case class ExtractTextExpr(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == BinaryType && right.dataType.isInstanceOf[StringType]) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"$prettyName expects (binary, string)")
-  override def dataType: DataType = StringType
-  override def prettyName: String = "extract_text"
-  override protected def nullSafeEval(body: Any, url: Any): Any = {
-    val out = try ExtractionOps.extractText(
-      ExtractionOps.extractHtml(body.asInstanceOf[Array[Byte]],
-                                url.asInstanceOf[UTF8String].toString))
-    catch { case _: Exception => null }
-    if (out == null) null else UTF8String.fromString(out)
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
-}
-
-/** extract_outlinks(body: binary, url: string) -> array<string> */
-case class ExtractOutlinksExpr(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == BinaryType && right.dataType.isInstanceOf[StringType]) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"$prettyName expects (binary, string)")
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "extract_outlinks"
-  override protected def nullSafeEval(body: Any, url: Any): Any = {
-    val links = try ExtractionOps.extractOutlinks(
-      body.asInstanceOf[Array[Byte]], url.asInstanceOf[UTF8String].toString)
-    catch { case _: Exception => Vector.empty[String] }
-    new GenericArrayData(links.map(UTF8String.fromString).toArray[Any])
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
+  /** Whether `b(at until end)` begins with `p`. */
+  private def startsAt(b: Array[Byte], at: Int, end: Int, p: Array[Byte]): Boolean =
+    end - at >= p.length && java.util.Arrays.equals(b, at, at + p.length, p, 0, p.length)
 }
 
 /** url_canonicalize(url) -> string (null when not crawlable) */
@@ -292,11 +227,14 @@ case class IsTextMimeExpr(child: Expression)
   override protected def withNewChildInternal(c: Expression) = copy(c)
 }
 
-/** extract_all(body, url) -> struct<extracted_html, text, outlinks>:
-  * the crawl hot path — archive parse + rewrite + visible text + outlink
-  * discovery in ONE tokenizer pass (the separate expressions cost 3-4
-  * parses per page). */
-case class ExtractAllExpr(left: Expression, right: Expression)
+/** extract_all(body, url) -> struct<extracted_html, text, outlinks>: the
+  * one extraction operator. It builds the fields in `fields`, a
+  * [[Rewriter.extract]] field set fixed at construction, by that method's
+  * rule; a body that `archiveOf` or the main's decode rejects nulls the
+  * whole row. `extract_all` builds every field in one tokenizer pass;
+  * `extract_html`, `extract_text` and `extract_outlinks` read one field of
+  * a one-field extraction ([[ExtractAllExpr.field]]). */
+case class ExtractAllExpr(left: Expression, right: Expression, fields: Int = Rewriter.AllFields)
     extends BinaryExpression with CodegenFallback {
   override def checkInputDataTypes(): TypeCheckResult =
     if (left.dataType == BinaryType && right.dataType.isInstanceOf[StringType]) TypeCheckResult.TypeCheckSuccess
@@ -311,10 +249,16 @@ case class ExtractAllExpr(left: Expression, right: Expression)
     try {
       val archive = ExtractionOps.archiveOf(body.asInstanceOf[Array[Byte]],
         url.asInstanceOf[UTF8String].toString)
-      val (html, text, links) = Rewriter.extractAll(archive)
+      val (html, text, links) = Rewriter.extract(archive, fields)
       InternalRow(UTF8String.fromString(html), UTF8String.fromString(text),
         new GenericArrayData(links.map(UTF8String.fromString).toArray[Any]))
     } catch { case _: Exception => null }
   }
   override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
+}
+
+object ExtractAllExpr {
+  /** Field `ordinal` of an extraction that builds only that field. */
+  def field(body: Expression, url: Expression, ordinal: Int): Expression =
+    GetStructField(ExtractAllExpr(body, url, 1 << ordinal), ordinal)
 }

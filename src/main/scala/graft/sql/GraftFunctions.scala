@@ -69,9 +69,9 @@ object GraftFunctions {
   private def col(e: Expression): Column = GraftColumnBridge.column(e)
   private def ex(c: Column): Expression = GraftColumnBridge.expression(c)
 
-  def extract_html(body: Column, url: Column): Column = col(ExtractHtmlExpr(ex(body), ex(url)))
-  def extract_text(body: Column, url: Column): Column = col(ExtractTextExpr(ex(body), ex(url)))
-  def extract_outlinks(body: Column, url: Column): Column = col(ExtractOutlinksExpr(ex(body), ex(url)))
+  def extract_html(body: Column, url: Column): Column = col(ExtractAllExpr.field(ex(body), ex(url), 0))
+  def extract_text(body: Column, url: Column): Column = col(ExtractAllExpr.field(ex(body), ex(url), 1))
+  def extract_outlinks(body: Column, url: Column): Column = col(ExtractAllExpr.field(ex(body), ex(url), 2))
   def parse_webarchive(body: Column): Column = col(ParseWebArchiveExpr(ex(body)))
   def url_canonicalize(url: Column): Column = col(UrlCanonicalizeExpr(ex(url)))
   def url_join(base: Column, rel: Column): Column = col(UrlJoinExpr(ex(base), ex(rel)))
@@ -100,9 +100,9 @@ object GraftFunctions {
   }
 
   private[sql] val registry: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "extract_html" -> (args => ExtractHtmlExpr(args(0), args(1))),
-    "extract_text" -> (args => ExtractTextExpr(args(0), args(1))),
-    "extract_outlinks" -> (args => ExtractOutlinksExpr(args(0), args(1))),
+    "extract_html" -> (args => ExtractAllExpr.field(args(0), args(1), 0)),
+    "extract_text" -> (args => ExtractAllExpr.field(args(0), args(1), 1)),
+    "extract_outlinks" -> (args => ExtractAllExpr.field(args(0), args(1), 2)),
     "parse_webarchive" -> (args => ParseWebArchiveExpr(args(0))),
     "url_canonicalize" -> (args => UrlCanonicalizeExpr(args(0))),
     "url_join" -> (args => UrlJoinExpr(args(0), args(1))),

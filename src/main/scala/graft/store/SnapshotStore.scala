@@ -1,7 +1,6 @@
 package graft.store
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.broadcast
 import org.apache.spark.sql.types.{DataType, MetadataBuilder, StructType}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.nio.charset.StandardCharsets
@@ -227,12 +226,13 @@ final class ParquetSnapshotStore(root: String) extends FrontierStore {
         Files.readAllBytes(Paths.get(seg, SchemaFile)), StandardCharsets.UTF_8)).asInstanceOf[StructType]
       (FrontierStore.isDeletes(schema), spark.read.schema(schema).parquet(seg))
     }
-    // each data segment anti-joins the (small, broadcast) union of the
-    // delete segments listed after it: the sequence-number rule
+    // each data segment anti-joins the union of the delete segments listed
+    // after it: the sequence-number rule. No join hint: a delete segment is
+    // as large as its url list, and the planner broadcasts one by its size
     val data = segs.indices.filterNot(segs(_)._1).map { i =>
       val deletes = segs.drop(i + 1).collect { case (true, d) => d }
       if (deletes.isEmpty) segs(i)._2
-      else segs(i)._2.join(broadcast(deletes.reduce(_ unionByName _)),
+      else segs(i)._2.join(deletes.reduce(_ unionByName _),
         deletes.head.columns.toSeq, "left_anti")
     }
     require(data.nonEmpty, s"table $name has no data segment")

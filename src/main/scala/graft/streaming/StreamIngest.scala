@@ -55,7 +55,10 @@ object StreamIngest {
       .groupBy(org.apache.spark.sql.functions.window(col("warc_ts"), window), col("host"))
       .agg(count(lit(1)).as("pages"),
            sum(length(col("html"))).as("bytes"),
-           sum(size(extract_outlinks(col("html"), col("url")))).as("outlinks"))
+           // an unparseable page's outlinks are null: it adds none in either
+           // ANSI mode (with ANSI off, size(null) reads -1)
+           sum(size(coalesce(extract_outlinks(col("html"), col("url")),
+             typedLit(Seq.empty[String])))).as("outlinks"))
   }
 
   /** Per-host gate state: urls awaiting their politeness slot (FIFO). */

@@ -136,6 +136,26 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  test("archiveOf's plist sniff == the string sniff it replaced: short bodies, leading whitespace") {
+    import graft.sql.ExtractionOps.isPlist
+    // the per-row formulation before the sniff stopped allocating
+    def reference(b: Array[Byte]): Boolean = b.length >= 8 && (
+      java.util.Arrays.equals(java.util.Arrays.copyOf(b, 6), "bplist".getBytes("US-ASCII")) || {
+        val t = new String(b, 0, math.min(b.length, 64), "ISO-8859-1").dropWhile(_.isWhitespace)
+        t.startsWith("<?xml") || t.startsWith("<plist")
+      })
+    // Java whitespace in latin-1 (\u000b, \u001c) and two chars it excludes
+    val piece = Gen.oneOf("bplist", "bplis", "<?xml", "<?xm", "<plist", "<html>", "0",
+      " ", "\t", "\n", "\u000b", "\u001c", "\u00a0", "\u0085")
+    val body = for { pad <- Gen.choose(0, 70); parts <- Gen.listOf(piece) }
+      yield (" " * pad + parts.mkString).getBytes("ISO-8859-1")
+    forAll(body)(b => assert(isPlist(b) == reference(b), new String(b, "ISO-8859-1")))
+    def ascii(s: String) = s.getBytes("US-ASCII")
+    assert(isPlist(ascii("bplist00")) && !isPlist(ascii("bplist0")))
+    assert(isPlist(ascii("\n\t <?xml v")) && isPlist(ascii("\r\n<plist>")))
+    assert(!isPlist(ascii(" " * 60 + "<?xml version")), "the tag must end within 64 bytes")
+  }
+
   test("canonicalize is idempotent") {
     forAll(urlGen) { u =>
       PyUrl.canonicalize(u) match {

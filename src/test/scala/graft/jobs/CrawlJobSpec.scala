@@ -74,8 +74,7 @@ class CrawlJobSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** The outlink rule written out on its own, so the oracle does not share
     * the engine's `PageObserver`: a/area href and frame/iframe src,
     * absolutized against the page URL, http(s) only, first-seen order
-    * without duplicates; the links found before a tokenizer error are
-    * kept. */
+    * without duplicates; none when the tokenizer throws. */
   private def referenceOutlinks(body: Array[Byte], url: String): Vector[String] = {
     val archive = ExtractionOps.archiveOf(body, url)
     if (!Mime.isHtml(archive.main.mimeType)) return Vector.empty
@@ -105,7 +104,7 @@ class CrawlJobSpec extends AnyFunSuite with BeforeAndAfterAll {
         override def comment(d: String): Unit = ()
         override def decl(d: String): Unit = ()
       })
-    } catch { case _: Exception => () }
+    } catch { case _: Exception => seen.clear() }
     seen.toVector
   }
 
@@ -806,5 +805,20 @@ class CrawlJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(hints.isEmpty, s"residual frontier anti-join must not force a join strategy: $hints")
     assert(residual.queryExecution.executedPlan.toString.contains("LeftAnti"),
       "residual must stay an anti-join")
+  }
+
+  test("a masked readTable carries no broadcast hint: a delete segment is as large as its url list") {
+    import spark.implicits._
+    val store = freshStore()
+    val rows = Seq(("https://a.example/x", 1), ("https://a.example/y", 2)).toDF("url", "bucket")
+    val segs = Seq(store.writeTable("t", 0, rows), store.writeDeletes("t", 1, rows.limit(1)))
+    val masked = store.readTable(spark, Snapshot(1, Map("t" -> Snapshot.entry(segs)), Map.empty), "t")
+    val hints = masked.queryExecution.analyzed.collect {
+      case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint => h
+    }
+    assert(hints.isEmpty, s"the delete mask must not force a join strategy: $hints")
+    assert(masked.queryExecution.executedPlan.toString.contains("LeftAnti"),
+      "the mask must stay an anti-join")
+    assert(masked.select("url").as[String].collect().toSeq == Seq("https://a.example/y"))
   }
 }

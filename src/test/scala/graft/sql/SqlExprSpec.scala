@@ -95,28 +95,37 @@ class SqlExprSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(row.getSeq[String](1) == expected, "extract_all(...).outlinks")
   }
 
-  test("extract_text: script/style skipped, entities unescaped, <script/> opens a script") {
-    val html = ("""<p>a &amp; b &#65;</p><script>var s = "<b>x</b>";</script>""" +
-      """<style>p { color: red }</style>c<script/>d""").getBytes("UTF-8")
-    val df = spark.createDataFrame(Seq(("https://h.example/p.html", html))).toDF("url", "html")
+  private val scriptPage = ("""<p>a &amp; b &#65;</p><script>var s = "<b>x</b>";</script>""" +
+    """<style>p { color: red }</style>c<script/>d""").getBytes("UTF-8")
+
+  test("extract_text: script/style skipped, entities unescaped, <script/> is a start-end tag") {
+    val df = spark.createDataFrame(Seq(("https://h.example/p.html", scriptPage))).toDF("url", "html")
     val row = df.select(GraftFunctions.extract_text(col("html"), col("url")),
       GraftFunctions.extract_all(col("html"), col("url")).getField("text")).collect()(0)
-    // extract_text reads the rewritten html, where text/html re-serializes
-    // <script/> as <script>: what follows it is script content. extract_all
-    // observes the source, where <script/> is a start-end tag.
-    assert(row.getString(0) == "a & b Ac")
+    // both observe the source, where <script/> is a start-end tag (the
+    // rewrite re-serializes it as <script>, which would swallow the d)
+    assert(row.getString(0) == "a & b Acd")
     assert(row.getString(1) == "a & b Acd")
   }
 
-  /** A webarchive whose main resource is `data`, as an XML plist. */
-  private def oneResourceArchive(mime: String, encoding: String, data: Array[Byte]): Array[Byte] =
-    s"""<?xml version="1.0" encoding="UTF-8"?>
-       |<plist version="1.0"><dict><key>WebMainResource</key><dict>
-       |<key>WebResourceData</key><data>${java.util.Base64.getEncoder.encodeToString(data)}</data>
-       |<key>WebResourceMIMEType</key><string>$mime</string>
-       |<key>WebResourceTextEncodingName</key><string>$encoding</string>
-       |<key>WebResourceURL</key><string>https://x.example/r</string>
-       |</dict></dict></plist>""".stripMargin.getBytes("UTF-8")
+  private def b64(b: Array[Byte]) = java.util.Base64.getEncoder.encodeToString(b)
+
+  /** An XML-plist webarchive whose main resource is `data` at
+    * https://x.example/r, followed by the style sheets `css` as (url, text). */
+  private def xmlArchive(mime: String, encoding: String, data: Array[Byte],
+                         css: (String, String)*): Array[Byte] = {
+    def res(url: String, mime: String, encoding: String, data: Array[Byte]) =
+      s"<dict><key>WebResourceData</key><data>${b64(data)}</data>" +
+      s"<key>WebResourceMIMEType</key><string>$mime</string>" +
+      s"<key>WebResourceTextEncodingName</key><string>$encoding</string>" +
+      s"<key>WebResourceURL</key><string>$url</string></dict>"
+    ("""<?xml version="1.0" encoding="UTF-8"?>""" + "\n" +
+      "<plist version=\"1.0\"><dict><key>WebMainResource</key>" +
+      res("https://x.example/r", mime, encoding, data) +
+      "<key>WebSubresources</key><array>" +
+      css.map { case (u, t) => res(u, "text/css", "utf-8", t.getBytes("UTF-8")) }.mkString +
+      "</array></dict></plist>").getBytes("UTF-8")
+  }
 
   test("extract_all on a non-HTML main: the main's text as resourceText decodes it, else null") {
     val js = Files.readAllBytes(
@@ -125,19 +134,79 @@ class SqlExprSpec extends AnyFunSuite with BeforeAndAfterAll {
     val df = spark.createDataFrame(Seq(
       ("js", js),
       // utf-16 without a BOM reads little-endian, as CPython does
-      ("utf16", oneResourceArchive("text/plain", "utf-16", plain.getBytes("UTF-16LE"))),
-      ("png", oneResourceArchive("image/png", "utf-8", 0x89.toByte +: "PNG\r\n".getBytes("US-ASCII")))
+      ("utf16", xmlArchive("text/plain", "utf-16", plain.getBytes("UTF-16LE"))),
+      ("png", xmlArchive("image/png", "utf-8", 0x89.toByte +: "PNG\r\n".getBytes("US-ASCII")))
     )).toDF("name", "body")
-    val got = df.select(col("name"), GraftFunctions.extract_all(col("body"), lit("https://x.example/r")).as("x"))
-      .collect().map(r => r.getString(0) -> Option(r.getStruct(1))).toMap
-    val jsRow = got("js").get
-    assert(jsRow.getString(0) == "console.log('hello <b> &amp;');\n")
+    val url = lit("https://x.example/r")
+    val got = df.select(col("name"), GraftFunctions.extract_all(col("body"), url).as("x"),
+        GraftFunctions.extract_html(col("body"), url), GraftFunctions.extract_text(col("body"), url))
+      .collect().map(r => r.getString(0) -> r).toMap
+    val jsSource = "console.log('hello <b> &amp;');\n"
+    val jsRow = got("js").getStruct(1)
+    assert(jsRow.getString(0) == jsSource)
     assert(jsRow.getString(1) == "" && jsRow.getSeq[String](2).isEmpty)
-    assert(got("utf16").get.getString(0) == plain)
-    assert(got("utf16").get.getString(0) == graft.core.Rewriter.resourceText(
+    assert(got("js").getString(2) == jsSource, "extract_html reads extracted_html")
+    assert(got("js").getString(3) == "", "extract_text reads text")
+    assert(got("utf16").getStruct(1).getString(0) == plain)
+    assert(got("utf16").getStruct(1).getString(0) == graft.core.Rewriter.resourceText(
       graft.core.WebArchiveOps.parse(
-        oneResourceArchive("text/plain", "utf-16", plain.getBytes("UTF-16LE"))).main))
-    assert(got("png").isEmpty, "a non-text main nulls the struct")
+        xmlArchive("text/plain", "utf-16", plain.getBytes("UTF-16LE"))).main))
+    assert((1 to 3).forall(got("png").isNullAt), "a non-text main nulls every field")
+  }
+
+  test("an unparseable body nulls every field, extract_outlinks included") {
+    val df = spark.createDataFrame(Seq(
+      ("truncated bplist", "bplist00".getBytes("US-ASCII") ++ Array[Byte](0, 1, 2)),
+      ("invalid utf-8", Array[Byte]('<', 'p', '>', 0xff.toByte, 0xfe.toByte))
+    )).toDF("name", "body")
+    val url = lit("https://x.example/r")
+    for (r <- df.select(GraftFunctions.extract_all(col("body"), url),
+        GraftFunctions.extract_html(col("body"), url), GraftFunctions.extract_text(col("body"), url),
+        GraftFunctions.extract_outlinks(col("body"), url)).collect())
+      assert((0 to 3).forall(r.isNullAt), r)
+  }
+
+  test("every field set agrees with extract_all: goldens, plain html, <script/>, a rewrite fallback") {
+    import scala.jdk.CollectionConverters._
+    val dir = Paths.get(getClass.getResource("/golden/archives").toURI)
+    val goldens = Files.list(dir).iterator().asScala.toVector.sortBy(_.toString)
+      .map(p => p.getFileName.toString -> Files.readAllBytes(p))
+    // two style sheets whose url() values name each other: data-URI
+    // recursion passes Rewriter's depth cap and the rewrite falls back,
+    // while the source tokenizes cleanly
+    val cyclicHtml = """<html><head><link rel="stylesheet" href="a.css"></head>""" +
+      """<body><p>cyclic &amp; styled</p><a href="next.html">next</a></body></html>"""
+    val cyclic = xmlArchive("text/html", "utf-8", cyclicHtml.getBytes("UTF-8"),
+      "https://x.example/a.css" -> "body { background: url(b.css) }",
+      "https://x.example/b.css" -> "p { background: url(a.css) }")
+    val pages = goldens ++ Seq(
+      "plain" -> "<html><a href='a.html'>x</a></html>".getBytes("UTF-8"),
+      "script" -> scriptPage,
+      "cyclic" -> cyclic)
+    val url = lit("https://x.example/r")
+    val rows = spark.createDataFrame(pages).toDF("name", "body").select(col("name"),
+        GraftFunctions.extract_all(col("body"), url),
+        GraftFunctions.extract_html(col("body"), url),
+        GraftFunctions.extract_text(col("body"), url),
+        GraftFunctions.extract_outlinks(col("body"), url))
+      .collect().map(r => r.getString(0) -> r).toMap
+    assert(rows.size == goldens.size + 3)
+    for ((name, r) <- rows) {
+      val x = Option(r.getStruct(1))
+      assert(Option(r.getString(2)) == x.map(_.getString(0)), s"$name: extract_html")
+      assert(Option(r.getString(3)) == x.map(_.getString(1)), s"$name: extract_text")
+      assert(Option(r.getSeq[String](4)) == x.map(_.getSeq[String](2)), s"$name: extract_outlinks")
+    }
+    // the fallback golden's source does not tokenize: its text is empty
+    assert(rows("fallback.webarchive").getString(3) == "")
+    // the reference's rewrite of basic falls back too, but its source
+    // tokenizes: its links are the source's
+    assert(rows("basic.webarchive").getSeq[String](4).size == 3)
+    // the cyclic page's rewrite fell back; its text and links are the source's
+    val c = rows("cyclic")
+    assert(c.getString(2).startsWith("\u0000") && c.getString(2).endsWith(cyclicHtml))
+    assert(c.getString(3) == "cyclic & stylednext")
+    assert(c.getSeq[String](4) == Seq("https://x.example/next.html"))
   }
 
   test("extract_files manifest matches the golden extraction tree") {

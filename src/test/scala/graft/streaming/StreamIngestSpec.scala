@@ -71,6 +71,25 @@ class StreamIngestSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally q.stop()
   }
 
+  test("host stats: an unparseable page counts as a page and adds no outlinks") {
+    import spark.implicits._
+    val t0 = new Timestamp(1700000000000L)
+    val pages = Seq(
+      ("https://a.example/1.html", t0, "<html><a href='x.html'>x</a></html>".getBytes("UTF-8")),
+      ("https://a.example/2.html", t0, "bplist00".getBytes("US-ASCII") ++ Array[Byte](0, 1, 2)))
+      .toDF("url", "warc_ts", "html")
+    // extract_outlinks of the unparseable body is null; with ANSI off,
+    // size(null) would read -1
+    for (ansi <- Seq("true", "false")) {
+      spark.conf.set("spark.sql.ansi.enabled", ansi)
+      try {
+        val rows = StreamIngest.hostWindowStats(pages).select("host", "pages", "outlinks")
+          .as[(String, Long, Long)].collect().toSeq
+        assert(rows == Seq(("a.example", 2L, 1L)), s"ansi=$ansi")
+      } finally spark.conf.unset("spark.sql.ansi.enabled")
+    }
+  }
+
   test("per-host gate: deferred urls drain in later batches (real rows, FIFO)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
