@@ -7,17 +7,7 @@ package graft.frontier
 final case class RobotsRules(
     disallow: Vector[String],
     allow: Vector[String],
-    crawlDelay: Option[Double]) {
-
-  /** RFC 9309: most-specific (longest) matching rule wins; Allow wins ties.
-    * Empty Disallow matches nothing. */
-  def allowed(path: String): Boolean = {
-    val p = if (path.isEmpty) "/" else path
-    val d = disallow.iterator.filter(r => r.nonEmpty && p.startsWith(r)).map(_.length).maxOption.getOrElse(-1)
-    val a = allow.iterator.filter(r => r.nonEmpty && p.startsWith(r)).map(_.length).maxOption.getOrElse(-1)
-    a >= d
-  }
-}
+    crawlDelay: Option[Double])
 
 object RobotsRules {
 
@@ -25,7 +15,9 @@ object RobotsRules {
 
   /** Allocation-free gate for the per-row crawl UDF: RFC 9309 longest-match
     * directly over the pre-parsed rule arrays carried by the broadcast
-    * robots table — no per-row RobotsRules wrapping, no Vector copies. */
+    * robots table — no per-row RobotsRules wrapping, no Vector copies. The
+    * most specific (longest) matching rule wins, Allow wins ties, and an
+    * empty rule matches nothing. */
   def allowedPath(disallow: Seq[String], allow: Seq[String], path: String): Boolean = {
     val p = if (path.isEmpty) "/" else path
     var d = -1

@@ -27,9 +27,9 @@ import graft.model.Candidate
   *    instead of 8-way salted.
   * The pre-r6 shape (salted groupByKey phase 1) shuffled EVERY candidate
   * once more; this one shuffles at most partitions * budget rows per host.
-  * Both phases use bounded heaps, not sorts. Final output is the exact
-  * per-host top-k either way (flush boundaries change only which
-  * superset phase 1 emits, never the phase-2 result).
+  * Both phases use the same bounded heap (`HostHeap`), not sorts. Final
+  * output is the exact per-host top-k either way (flush boundaries change
+  * only which superset phase 1 emits, never the phase-2 result).
   */
 object Scheduler {
 
@@ -48,24 +48,16 @@ object Scheduler {
     }
   }
 
-  /** Keep the top `k` candidates of an iterator with a bounded heap. */
-  private def topK(k: Int, it: Iterator[Candidate]): Iterator[Candidate] = {
-    // max-heap on `best.reverse` head = worst kept element
-    val heap = new scala.collection.mutable.PriorityQueue[Candidate]()(best)
-    for (c <- it) {
-      if (heap.size < k) heap.enqueue(c)
-      else if (best.lt(c, heap.head)) { heap.dequeue(); heap.enqueue(c) }
-    }
-    heap.toVector.sorted(best).iterator
-  }
-
   /** Rows a phase-1 task may hold across its per-host heaps before it
     * flushes them downstream (memory bound ~O(this) per task; a flush
     * only ever FORWARDS rows, so it cannot affect the phase-2 result). */
   private val Phase1FlushRows = 1 << 17
 
+  /** The best `budget` candidates offered so far, in a bounded heap whose
+    * head is the worst one kept. */
   private final class HostHeap(val budget: Int) {
     val heap = new scala.collection.mutable.PriorityQueue[Candidate]()(best)
+    /** Whether `c` grew the heap (false when it replaced or was dropped). */
     def offer(c: Candidate): Boolean = {
       if (heap.size < budget) { heap.enqueue(c); true }
       else if (best.lt(c, heap.head)) { heap.dequeue(); heap.enqueue(c); false }
@@ -81,6 +73,7 @@ object Scheduler {
   def dequeueRanked(spark: SparkSession, candidates: Dataset[(Candidate, Int)],
                     cfg: Config): Dataset[(Candidate, Int)] = {
     import spark.implicits._
+    def hostHeap(budget: Int) = new HostHeap(math.min(cfg.perHostBudget, math.max(1, budget)))
     val partial = candidates.mapPartitions { rows =>
       val heaps = new java.util.HashMap[String, HostHeap]()
       var kept = 0
@@ -102,7 +95,7 @@ object Scheduler {
             val (c, b) = rows.next()
             var h = heaps.get(c.host)
             if (h == null) {
-              h = new HostHeap(math.min(cfg.perHostBudget, math.max(1, b)))
+              h = hostHeap(b)
               heaps.put(c.host, h)
             }
             if (h.offer(c)) kept += 1
@@ -115,8 +108,9 @@ object Scheduler {
       .groupByKey(_._1.host)
       .flatMapGroups { (_, it) =>
         val buf = it.buffered
-        val budget = math.min(cfg.perHostBudget, math.max(1, buf.head._2))
-        topK(budget, buf.map(_._1)).zipWithIndex.map { case (c, r) => (c, r) }
+        val h = hostHeap(buf.head._2)
+        buf.foreach(r => h.offer(r._1))
+        h.heap.toVector.sorted(best).iterator.zipWithIndex
       }
   }
 

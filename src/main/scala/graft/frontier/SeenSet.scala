@@ -5,21 +5,32 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import graft.model.Candidate
+import graft.store.{FrontierStore, Snapshot}
 
 /** Partitioned bloom-filter + exact-table URL-seen set (J5 in SURVEY.md §2.3).
   *
+  * The seen set is one LSM in two snapshot tables, and this object is the
+  * only code that reads, writes, compacts or deletes from them: `seen`,
+  * the exact (url, bucket) rows plus the tombstones of [[forget]], and
+  * `blooms`, per-bucket filter segments ([[BucketBloom]]); each table
+  * gains one segment per epoch until a major compaction rewrites both
+  * ([[Probe.writes]]). [[init]] writes the empty set, [[probe]] filters
+  * an epoch's candidates, and [[Probe.writes]] and [[forget]] hand the
+  * epoch and the delete their writes as tasks for the caller to run
+  * concurrently with its own.
+  *
   * Scale design for a 10^10-URL frontier:
-  *  - `bucket = pmod(murmur3_128(url), numBuckets)`; the exact seen table is
-  *    stored partitioned by bucket, one BloomFilter per bucket.
-  *  - Candidates COGROUP with blooms on bucket: each bucket's filter bytes
-  *    move to exactly one task per epoch (never broadcast, never all on the
-  *    driver or one executor). Bloom misses are DEFINITELY new (no false
-  *    negatives) and skip the exact check entirely.
-  *  - Only bloom maybe-hits (true dupes + fpp of new) anti-join the seen
+  *  - `bucket = pmod(murmur3_128(url), numBuckets)`; the compacted seen
+  *    table is stored partitioned by bucket.
+  *  - Candidates COGROUP with the filters on bucket: each bucket's filter
+  *    bytes move to exactly one task per epoch (never broadcast, never all
+  *    on the driver or one executor). Filter misses are DEFINITELY new (no
+  *    false negatives) and skip the exact check entirely.
+  *  - Only filter maybe-hits (true dupes + fpp of new) anti-join the seen
   *    table, and that read is partition-pruned to the buckets that actually
   *    contain maybe-hits.
-  *  - Blooms are incremental: newly-seen URLs merge into the per-bucket
-  *    filters each epoch; they are never rebuilt from the full table.
+  *  - Per-epoch passes are proportional to the batch, never to the crawl
+  *    history, except the amortized compaction.
   *
   * Sizing at the north-rule target: 10^10 urls / 4096 buckets ≈ 2.44M per
   * bucket ≈ 2.9 MiB of filter at 1% fpp ≈ 12 GiB total, spread bucket-per-
@@ -34,18 +45,20 @@ object SeenSet {
     * over segments, so 80x lower per-segment fpp buys long delta chains
     * between compactions). The crawl product is filter-kind invariant: a
     * filter only routes urls to the definitely-new fast path or the exact
-    * anti-join (spec-pinned). Neither kind is edited in place: a
-    * CrawlJob.recrawlWithDelete leaves forgotten urls in the filters, where
-    * they only cost an exact probe, until compaction rebuilds them. */
+    * anti-join (spec-pinned). Neither kind is edited in place: [[forget]]
+    * leaves forgotten urls in the filters, where they only cost an exact
+    * probe, until compaction rebuilds them. */
   sealed trait FilterKind extends Serializable
   case object Bloom extends FilterKind
   case object Cuckoo extends FilterKind
 
   final case class Config(numBuckets: Int = 64,
                           expectedPerBucket: Long = 1L << 20,
-                          bloomFpp: Double = 0.01,
                           maxBloomSegments: Int = 12,
                           filterKind: FilterKind = Bloom)
+
+  /** False-positive rate a bloom filter is sized for. */
+  val BloomFpp = 0.01
 
   /** (bucket, filterBytes) rows — the persisted form (bloom or cuckoo;
     * the payload is self-describing via the CKF1 magic). */
@@ -70,7 +83,7 @@ object SeenSet {
   }
 
   def createFilter(cfg: Config, expected: Long): UrlFilter = cfg.filterKind match {
-    case Bloom  => new BloomUrlFilter(BloomFilter.create(expected, cfg.bloomFpp))
+    case Bloom  => new BloomUrlFilter(BloomFilter.create(expected, BloomFpp))
     case Cuckoo => new CuckooUrlFilter(CuckooFilter.create(expected))
   }
 
@@ -153,13 +166,9 @@ object SeenSet {
     * expected capacity up front, so sizing deltas at `expectedPerBucket`
     * would make every epoch's delta write as large as a full rewrite
     * (round 1 rewrote the whole ~12 GiB bucket table per epoch at the
-    * target sizing). Delta segments append via the snapshot's `;`-segment
-    * list; the read side unions them (a url is maybe-seen if ANY segment
-    * filter contains it — no false negatives ever). Each extra segment
-    * adds its own fpp to the union check, which is why [[Config
-    * .maxBloomSegments]] bounds the list via major compaction (rebuild
-    * full-capacity filters from the bucket-partitioned seen table,
-    * amortized to 1/maxBloomSegments of a full pass per epoch). */
+    * target sizing). A url is maybe-seen if ANY segment filter contains
+    * it (no false negatives ever), so each segment adds its own fpp to the
+    * check; compaction ([[Probe.writes]]) bounds the segment list. */
   def buildDeltaBlooms(spark: SparkSession, urls: Dataset[String], cfg: Config): Dataset[BucketBloom] = {
     import spark.implicits._
     urls.groupByKey(u => bucketOfUrl(u, cfg.numBuckets))
@@ -219,7 +228,7 @@ object SeenSet {
     * the seen verdict, but their verdict is still computed: the second
     * return value is the retried urls that are provably NOT in the seen
     * set (bloom miss — no false negatives — or exact-anti-join survivor),
-    * which the caller must register as seen once scheduled (a recrawled
+    * which [[Probe]] registers as seen once scheduled (a recrawled
     * never-seen url would otherwise stay unseen forever and be re-crawled
     * by every future discovery). A fetch-miss retry is already seen and
     * never appears there. Returns (deduplicated schedulable candidates,
@@ -307,4 +316,107 @@ object SeenSet {
     if (hotBuckets.length < numBuckets)
       seen.filter(col("bucket").isin(hotBuckets.map(Integer.valueOf).toIndexedSeq: _*))
     else seen
+
+  /** The seen set's snapshot tables: the exact rows and the filters. */
+  private val Rows = "seen"
+  private val Filters = "blooms"
+
+  /** Writes an empty seen set as table versions of `epoch`; returns its
+    * manifest entries. */
+  def init(spark: SparkSession, store: FrontierStore, epoch: Long): Map[String, String] = {
+    import spark.implicits._
+    Map(Rows -> store.writeTable(Rows, epoch, spark.emptyDataset[(String, Int)].toDF("url", "bucket")),
+        Filters -> store.writeTable(Filters, epoch, spark.emptyDataset[BucketBloom].toDF()))
+  }
+
+  /** The (url, bucket) rows of `urls`: the seen table's row shape, and
+    * the key of its tombstones. */
+  private def keyed(spark: SparkSession, urls: Dataset[String], numBuckets: Int): DataFrame = {
+    import spark.implicits._
+    urls.map(u => (u, bucketOfUrl(u, numBuckets))).toDF("url", "bucket")
+  }
+
+  /** [[dedupAndFilterNew]] over the seen set of `snap`. `mayHaveRetries`
+    * is false only when the caller proved that no candidate carries a
+    * retry ticket. */
+  def probe(spark: SparkSession, store: FrontierStore, snap: Snapshot,
+            candidates: Dataset[Candidate], cfg: Config, mayHaveRetries: Boolean): Probe = {
+    import spark.implicits._
+    val (unseen, newRetried, cache) = dedupAndFilterNew(spark, candidates,
+      store.readTable(spark, snap, Rows), store.readTable(spark, snap, Filters).as[BucketBloom],
+      cfg, mayHaveRetries)
+    new Probe(spark, store, snap, cfg, mayHaveRetries, unseen, newRetried, cache)
+  }
+
+  /** One epoch's probe of a snapshot's seen set. `unseen` holds the
+    * deduplicated schedulable candidates; `cache` is the probe's persisted
+    * frame, which the caller releases once the epoch's writes are done. */
+  final class Probe private[SeenSet] (spark: SparkSession, store: FrontierStore, snap: Snapshot,
+                                      cfg: Config, mayHaveRetries: Boolean,
+                                      val unseen: Dataset[Candidate], newRetried: Dataset[String],
+                                      val cache: Dataset[_]) {
+
+    /** The urls the epoch registers as seen, from its scheduled (url,
+      * retries) rows. A url scheduled with retries=0 passed the filter, so
+      * it is new by construction. A scheduled retried url is new only when
+      * the probe proved it unseen: a recrawled never-seen url must be
+      * registered, else every future discovery re-crawls it, and a
+      * fetch-miss retry is already seen and must not be added twice. With
+      * no retry ticket (mayHaveRetries false) that branch is provably empty
+      * and stays out of the plan: the urls are a column projection of
+      * `scheduled`. */
+    private def newlySeen(scheduled: DataFrame): Dataset[String] = {
+      import spark.implicits._
+      if (!mayHaveRetries) scheduled.select("url").as[String]
+      else scheduled.filter(col("retries") === 0).select("url").as[String]
+        .union(scheduled.filter(col("retries") > 0).select("url")
+          .join(newRetried.toDF("url"), Seq("url"), "left_semi").as[String])
+    }
+
+    /** The epoch's seen-set writes as tasks that return manifest entries.
+      * `scheduled` holds the epoch's scheduled (url, retries) rows;
+      * `partitions` is the compaction's write parallelism.
+      *
+      * Between compactions the newly-seen urls append one seen segment and
+      * one filter segment, two independent tasks. When the filter list
+      * would pass `maxBloomSegments`, one task compacts instead: it
+      * rewrites the masked seen table plus the new rows as one segment
+      * partitioned by bucket (repartitioned first: about one file per
+      * bucket dir), then builds full-capacity filters from that segment as
+      * stored. This bounds the segment-union fpp, the read fan-in and the
+      * segment lists at an amortized 1/maxBloomSegments of a full seen
+      * pass per epoch, and turns the >64-bucket pruned anti-join
+      * ([[prunedSeen]]) into a parquet directory prune. */
+    def writes(epoch: Long, scheduled: DataFrame,
+               partitions: Int): Seq[() => Seq[(String, String)]] = {
+      import spark.implicits._
+      val fresh = newlySeen(scheduled)
+      val delta = keyed(spark, fresh, cfg.numBuckets)
+      if (snap.segments(Filters).length + 1 > cfg.maxBloomSegments) Seq { () =>
+        val rows = store.writeTable(Rows, epoch, store.readTable(spark, snap, Rows).unionByName(delta)
+          .repartition(partitions, col("bucket")), Seq("bucket"))
+        val filters = buildBlooms(spark, store.readTable(spark,
+          Snapshot(epoch, Map(Rows -> rows), Map.empty), Rows).select("url").as[String], cfg)
+        Seq(Rows -> rows, Filters -> store.writeTable(Filters, epoch, filters.toDF()))
+      }
+      else Seq(
+        () => Seq(Rows -> snap.append(Rows, store.writeTable(Rows, epoch, delta))),
+        () => Seq(Filters -> snap.append(Filters,
+          store.writeTable(Filters, epoch, buildDeltaBlooms(spark, fresh, cfg).toDF()))))
+    }
+  }
+
+  /** A delete's seen-set write as a task that returns the manifest entry:
+    * the urls' (url, bucket) rows as a delete segment of the seen rows
+    * ([[FrontierStore.writeDeletes]]), which masks them in every older
+    * segment. No seen row is read or rewritten; a url listed twice masks
+    * the same rows as one listed once. The next epoch's newly-seen segment
+    * lands after it, so a re-registered url reads as seen again, and the
+    * next compaction drops it. The filters are left as they are: a
+    * forgotten url's bloom bits or cuckoo fingerprint only route it to the
+    * exact anti-join, which finds it unseen, until compaction rebuilds
+    * the filters. */
+  def forget(spark: SparkSession, store: FrontierStore, snap: Snapshot, epoch: Long,
+             urls: Dataset[String], cfg: Config): () => Seq[(String, String)] =
+    () => Seq(Rows -> snap.append(Rows, store.writeDeletes(Rows, epoch, keyed(spark, urls, cfg.numBuckets))))
 }

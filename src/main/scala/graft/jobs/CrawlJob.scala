@@ -7,7 +7,7 @@ import org.apache.spark.storage.StorageLevel
 import graft.model.{Candidate, LineageRow}
 import graft.frontier.{Scheduler, SeenSet}
 import graft.sql.GraftFunctions._
-import graft.store.{FrontierStore, Snapshot}
+import graft.store.FrontierStore
 import graft.core.PyUrl
 
 /** The crawl-frontier epoch job (BASELINE.json north_rule).
@@ -15,9 +15,15 @@ import graft.core.PyUrl
   * Iterative batch: each epoch dequeues a politeness-bounded batch from the
   * frontier, "fetches" it (joins the pages table), runs the Catalyst-native
   * extraction, discovers outlinks, dedups them against the bloom+exact seen
-  * set, and re-enqueues. All state (frontier, seen, blooms, budgets) is
+  * set, and re-enqueues. All state (frontier, seen set, budgets) is
   * checkpointed through [[FrontierStore]] snapshots; a run resumes exactly
   * from the last committed manifest.
+  *
+  * [[SeenSet]] owns the seen set's tables: it filters the epoch's
+  * candidates and hands the epoch and the delete their seen-set writes as
+  * tasks. This job owns the frontier, scheduled, lineage and extracted
+  * tables, and runs the concurrent table writes of a commit through one
+  * runner, [[concurrently]].
   *
   * Determinism: the crawl order is (epoch, host ASC, seq ASC) where seq is
   * the within-host rank attached by the final per-host top-k (no global
@@ -29,8 +35,6 @@ object CrawlJob {
       seen: SeenSet.Config = SeenSet.Config(),
       sched: Scheduler.Config = Scheduler.Config(),
       maxRetries: Int = 2,
-      epochWindowSec: Double = 10.0,
-      linkPriorityDecay: Double = 0.5,
       shufflePartitions: Int = 32,
       // snapshots retained by the per-epoch expire (Iceberg
       // expire_snapshots analog); <= 0 disables GC. Resume only ever reads
@@ -39,6 +43,13 @@ object CrawlJob {
       // every epoch writes a full frontier version (the largest state
       // table) and compacted-away bloom generations are never reclaimed.
       retainSnapshots: Int = 3)
+
+  /** Seconds of crawl time one epoch stands for: a host with a robots
+    * crawl-delay gets the fetches that fit in it ([[crawlDelayBudget]]). */
+  val EpochWindowSec = 10.0
+
+  /** Factor from a page's priority to the priority of its outlinks. */
+  val LinkPriorityDecay = 0.5
 
   final case class EpochResult(
       epoch: Long,
@@ -114,10 +125,8 @@ object CrawlJob {
     val frontier: Dataset[Candidate] = seeds.flatMap { case (u, prio) =>
       PyUrl.canonicalize(u).map(c => Candidate(c, PyUrl.hostOf(c), prio, 0, 0))
     }
-    val tables = Map(
-      "frontier" -> store.writeTable("frontier", -1, frontier.toDF()),
-      "seen" -> store.writeTable("seen", -1, spark.emptyDataset[(String, Int)].toDF("url", "bucket")),
-      "blooms" -> store.writeTable("blooms", -1, spark.emptyDataset[SeenSet.BucketBloom].toDF()))
+    val tables = Map("frontier" -> store.writeTable("frontier", -1, frontier.toDF())) ++
+      SeenSet.init(spark, store, -1)
     store.commit(-1, tables,
       Map("frontierSize" -> frontier.count(), "frontierRetried" -> 0L))
   }
@@ -129,8 +138,8 @@ object CrawlJob {
     * `recrawl`: urls to fetch again even though they are in the seen set
     * (content refresh / retraction policies). They enter the epoch as
     * retries=1 candidates, which (a) bypass the seen filter in
-    * [[SeenSet.dedupAndFilterNew]] and (b) are excluded from the
-    * newly-seen delta (scheduledSeq.filter(_.retries == 0)), so the seen
+    * [[SeenSet.dedupAndFilterNew]] and (b) join the newly-seen delta only
+    * when the probe proved them unseen ([[SeenSet.Probe]]), so the seen
     * table and filters never grow duplicates — no delete segment needed
     * (contrast [[recrawlWithDelete]]) — and the epoch stays replay-exact
     * because the recrawl set is ordinary input data. Unknown/uncrawlable
@@ -171,10 +180,6 @@ object CrawlJob {
       // union suffices; no join.
       frontierBase.unionByName(rc)
     }
-    // the seen table as read: data segments masked by the delete segments
-    // recrawlWithDelete appended after them
-    val seen = store.readTable(spark, snap, "seen")
-    val blooms = store.readTable(spark, snap, "blooms").as[SeenSet.BucketBloom]
 
     // 1+2. FUSED in-batch URL dedup + seen-set filter: one shuffle by
     //    bucket serves both (url-dedup key and bloom bucket are both
@@ -185,24 +190,24 @@ object CrawlJob {
     //    induction — retryCands and carried-over residual rows are both
     //    counted at write time); the common steady-state epoch has none,
     //    which drops the retry branches (two cache scans + a union) and
-    //    the newlySeen semi-join below from the plan entirely. A pre-r6
+    //    the newly-seen semi-join from the plan entirely. A pre-r6
     //    snapshot without the counter stays on the conservative path.
     val mayHaveRetries = recrawl.isDefined ||
       snap.counters.get("frontierRetried").forall(_ > 0L)
     //    The observation counts the epoch's input rows (frontier plus
     //    recrawl requests) inside the same pass.
-    val (unseenRaw, newRetriedUrls, seenSetCache) = SeenSet.dedupAndFilterNew(spark,
+    val probe = SeenSet.probe(spark, store, snap,
       frontier.toDF().observe(obsIn, count(lit(1)).as("n")).as[Candidate],
-      seen, blooms, cfg.seen, mayHaveRetries)
+      cfg.seen, mayHaveRetries)
     // every frame the epoch persists, released in the one finally below
     // whether or not the epoch commits (a failed write must not leak them)
-    val cached = scala.collection.mutable.ArrayBuffer[Dataset[_]](seenSetCache)
+    val cached = scala.collection.mutable.ArrayBuffer[Dataset[_]](probe.cache)
     def persisted[T](d: Dataset[T]): Dataset[T] = {
       cached += d
       d.persist(StorageLevel.MEMORY_AND_DISK)
     }
     try {
-      val unseen = unseenRaw
+      val unseen = probe.unseen
         .toDF().observe(obsUnseen, count(lit(1)).as("n")).as[Candidate]
 
       // 3. robots gate: broadcast the (small) per-host rule table
@@ -232,7 +237,7 @@ object CrawlJob {
       // the epoch (tens of MB of dead cache weight per 10^6-candidate epoch)
       val gated = persisted(joined.withColumn("__allowed", allowedCol(col("url"), col("disallow"), col("allow")))
         .withColumn("__budget",
-          crawlDelayBudget(col("crawl_delay"), cfg.sched.perHostBudget, cfg.epochWindowSec))
+          crawlDelayBudget(col("crawl_delay"), cfg.sched.perHostBudget, EpochWindowSec))
         .select("url", "host", "priority", "discoveredEpoch", "retries", "__allowed", "__budget")
         .observe(obsGate, sum(when(col("__allowed"), 0L).otherwise(1L)).as("blocked")))
       // `allowed` is a plain filter+project over the persisted `gated`
@@ -277,16 +282,18 @@ object CrawlJob {
       // every Observation above)
       // First write materializes the whole epoch graph into the persisted
       // caches (extractedAll <- fetch join <- scheduledSeq <- dequeue <-
-      // gate <- fused dedup). The five remaining writes then read only
-      // cached data — they are independent, so they run CONCURRENTLY (Spark
-      // schedules concurrent jobs fine; on a cluster this overlaps commit
-      // latencies the same way). This cut the per-epoch serial write tail,
-      // the dominant fixed cost at sandbox epoch sizes.
+      // gate <- fused dedup). The remaining writes (frontier, scheduled,
+      // lineage and the seen set's) then read only cached data — they are
+      // independent, so they run CONCURRENTLY (Spark schedules concurrent
+      // jobs fine; on a cluster this overlaps commit latencies the same
+      // way). This cut the per-epoch serial write tail, the dominant fixed
+      // cost at sandbox epoch sizes.
       // scheduled/lineage/extracted are APPEND tables: the manifest carries
-      // every epoch's segment (like seen/blooms), so the crawl's
+      // every epoch's segment (like the seen set's), so the crawl's
       // full product stays referenced — and therefore alive — across
-      // snapshot expiry. Only full-rewrite state versions (frontier,
-      // compacted blooms) become unreferenced garbage for expire() to reap.
+      // snapshot expiry. Only full-rewrite state versions (frontier, the
+      // seen set's compacted-away segments) become unreferenced garbage
+      // for expire() to reap.
       val extractedEntry = "extracted" -> snap.append("extracted", store.writeTable("extracted", epoch,
         extractedAll.filter(col("__hit")).select("epoch", "seq", "url", "extracted_html", "text")))
 
@@ -315,7 +322,7 @@ object CrawlJob {
         .withColumn("curl", url_canonicalize(col("out")))
         .filter(col("curl").isNotNull)
         .select(col("curl").as("url"), url_host(col("curl")).as("host"),
-                (col("priority") * cfg.linkPriorityDecay).as("priority"),
+                (col("priority") * LinkPriorityDecay).as("priority"),
                 lit(epoch.toInt).as("discoveredEpoch"), lit(0).as("retries"))
         .observe(obsDisc, count(lit(1)).as("n")).as[Candidate]
 
@@ -341,24 +348,6 @@ object CrawlJob {
           sum(when(col("retries") > 0, 1L).otherwise(0L)).as("retried")).as[Candidate]
         .unionByName(discovered))
 
-      // fresh scheduled urls are new by construction; scheduled RETRIED urls
-      // are new only when the seen filter proved it (a recrawled never-seen
-      // url — register it, else every future discovery re-crawls it; a
-      // fetch-miss retry is already seen and must not duplicate). When no
-      // retry ticket can exist (mayHaveRetries=false) the semi-join branch
-      // is provably empty and stays out of the plan: newlySeen becomes a
-      // plain column projection of the persisted scheduledSeq cache.
-      val newlySeen: Dataset[String] =
-        if (!mayHaveRetries) scheduledSeq.select("url").as[String]
-        else scheduledSeq.toDF().filter(col("retries") === 0).select("url").as[String]
-          .union(scheduledSeq.toDF().filter(col("retries") > 0).select("url")
-            .join(newRetriedUrls.toDF("url"), Seq("url"), "left_semi").as[String])
-      // seen set is APPEND-ONLY: write just this epoch's delta; the snapshot
-      // records the segment list (rewriting a 10^10-row table per epoch is
-      // not an option)
-      val seenDelta = newlySeen
-        .map(u => (u, SeenSet.bucketOfUrl(u, cfg.seen.numBuckets))).toDF("url", "bucket")
-
       // 9. lineage: per-partition accounting of the extraction stage
       val lineage: Dataset[LineageRow] = {
         val nb = cfg.seen.numBuckets
@@ -377,74 +366,16 @@ object CrawlJob {
             }
           }
       }
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(5)
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      val tables = try {
-        val fFrontier = Future {
-          // coalesce: the union graph otherwise carries every upstream
-          // partition into the write (160 tiny files per epoch at local[32])
-          "frontier" -> store.writeTable("frontier", epoch,
-            nextFrontier.toDF().coalesce(cfg.shufflePartitions))
-        }
-        val fScheduled = Future {
-          "scheduled" -> snap.append("scheduled",
-            store.writeTable("scheduled", epoch, scheduledSeq.toDF()))
-        }
-        val fLineage = Future {
-          "lineage" -> snap.append("lineage",
-            store.writeTable("lineage", epoch, lineage.toDF()))
-        }
-        // blooms are append-only delta segments (each sized to its actual
-        // insert count); every maxBloomSegments epochs a MAJOR COMPACTION
-        // rewrites BOTH LSM structures — the whole seen table as ONE
-        // bucket-partitioned segment (read through readTable, so delete
-        // segments are applied and dropped) and full-capacity bloom filters
-        // rebuilt from it — bounding the per-bucket segment-union fpp, the read
-        // fan-in, AND the manifest's segment-list length, at an amortized
-        // 1/maxBloomSegments of a full seen pass per epoch. The bucket
-        // partitioning is what turns the >64-bucket pruned anti-join
-        // (SeenSet.prunedSeen) into a parquet DIRECTORY prune; the small
-        // inter-compaction deltas stay unpartitioned (LSM memtable shape) and
-        // are merely row-filtered. expire() reclaims the superseded delta
-        // dirs once the manifests referencing them age out.
-        val compacting = snap.segments("blooms").length + 1 > cfg.seen.maxBloomSegments
-        val fSeenBlooms: Seq[Future[Seq[(String, String)]]] =
-          if (compacting) Seq(Future {
-            // repartition by bucket: ~one file per bucket dir, not one per
-            // shuffle task per dir
-            val compacted = store.writeTable("seen", epoch,
-              store.readTable(spark, snap, "seen").unionByName(seenDelta)
-                .repartition(cfg.shufflePartitions, col("bucket")), Seq("bucket"))
-            // the filters are built from the compacted table as it is stored
-            val full = SeenSet.buildBlooms(spark, store.readTable(spark,
-              Snapshot(epoch, Map("seen" -> compacted), Map.empty), "seen").select("url").as[String],
-              cfg.seen)
-            Seq("seen" -> compacted,
-                "blooms" -> store.writeTable("blooms", epoch, full.toDF()))
-          })
-          else Seq(
-            // the delta branch's two writes are independent (both read the
-            // persisted scheduledSeq projection) — run them concurrently
-            // like the other state writes
-            Future {
-              Seq("seen" -> snap.append("seen", store.writeTable("seen", epoch, seenDelta)))
-            },
-            Future {
-              val delta = SeenSet.buildDeltaBlooms(spark, newlySeen, cfg.seen)
-              Seq("blooms" -> snap.append("blooms", store.writeTable("blooms", epoch, delta.toDF())))
-            })
-        (Seq(extractedEntry, Await.result(fFrontier, Duration.Inf),
-          Await.result(fScheduled, Duration.Inf), Await.result(fLineage, Duration.Inf)) ++
-          fSeenBlooms.flatMap(Await.result(_, Duration.Inf))).toMap
-      } finally {
-        // a failed write propagates only once every other write is done:
-        // the caches they read are released on the way out
-        pool.shutdown()
-        pool.awaitTermination(Long.MaxValue, java.util.concurrent.TimeUnit.NANOSECONDS)
-      }
+      val tables = concurrently(Seq(
+        // coalesce: the union graph otherwise carries every upstream
+        // partition into the write (160 tiny files per epoch at local[32])
+        () => Seq("frontier" -> store.writeTable("frontier", epoch,
+          nextFrontier.toDF().coalesce(cfg.shufflePartitions))),
+        () => Seq("scheduled" -> snap.append("scheduled",
+          store.writeTable("scheduled", epoch, scheduledSeq.toDF()))),
+        () => Seq("lineage" -> snap.append("lineage",
+          store.writeTable("lineage", epoch, lineage.toDF())))) ++
+        probe.writes(epoch, scheduledSeq.toDF(), cfg.shufflePartitions)).flatten.toMap + extractedEntry
 
       def metric(o: org.apache.spark.sql.Observation, k: String): Long =
         o.get.get(k).map(v => if (v == null) 0L else v.asInstanceOf[Long]).getOrElse(0L)
@@ -484,30 +415,17 @@ object CrawlJob {
     * `priority` so the refetch happens next epoch instead of waiting for
     * rediscovery. `requested` counts the distinct canonical urls.
     *
-    * The delete is merge-on-read: it appends the urls' (url, bucket) rows
-    * to `seen` as a delete segment ([[FrontierStore.writeDeletes]]), which
-    * masks them in every older seen segment. No seen row is read or
-    * rewritten, so the delete costs the same whatever the seen table's
-    * size. The next epoch's exact anti-join reads the masked table; its
-    * newly-seen delta is appended after the delete segment, so a
-    * re-registered url reads as seen again; the next compaction rewrites
-    * seen from the masked read and so drops the delete segment.
-    *
-    * Filters are left as they are, under either filter kind: a forgotten
-    * url keeps its bloom bits or cuckoo fingerprint until the next major
-    * compaction rebuilds the filters from the seen table. That is correct
-    * because a filter never decides membership — a hit only routes the url
-    * to the exact anti-join of [[SeenSet.dedupAndFilterNew]], which finds
-    * it unseen. The stale entry costs one exact-probe row per forgotten url
-    * until then, and the snapshot's `blooms` entry passes through unchanged.
+    * The delete is merge-on-read ([[SeenSet.forget]]): it appends the
+    * urls' tombstones to the seen set, reading and rewriting no seen row,
+    * and leaves the filters as they are.
     *
     * Commits one snapshot (an Iceberg-style delete commit) after two
     * concurrent writes, three Spark jobs in all: the canonical distinct
     * urls as a frontier delta segment (`frontier` gains one segment:
     * readTable unions the segments and the next runEpoch writes one full
-    * frontier again), and the canonical urls' (url, bucket) rows as the
-    * seen delete segment. `urls` is evaluated once per write, so it should
-    * be cheap to recompute and deterministic. */
+    * frontier again), and the canonical urls' tombstones. `urls` is
+    * evaluated once per write, so it should be cheap to recompute and
+    * deterministic. */
   def recrawlWithDelete(spark: SparkSession, store: FrontierStore,
                         urls: Dataset[String], cfg: Config,
                         priority: Double = 1.0): RecrawlDeleteResult = {
@@ -515,7 +433,6 @@ object CrawlJob {
     import org.apache.spark.sql.Observation
     val snap = store.latest().getOrElse(sys.error("no snapshot — call init() first"))
     val epoch = snap.epoch + 1
-    val nb = cfg.seen.numBuckets
     val canonical = urls.flatMap(u => PyUrl.canonicalize(u))
     // enqueue the urls as PLAIN candidates: they pass the seen filter like
     // any discovery — the normal path, no retry ticket
@@ -523,29 +440,35 @@ object CrawlJob {
     val newCands = canonical.distinct()
       .map(u => Candidate(u, PyUrl.hostOf(u), priority, epoch.toInt, 0))
       .toDF().observe(obs, count(lit(1)).as("n"))
-    // the two writes are independent, so they run concurrently; the
-    // tombstones skip the distinct's shuffle, as a key listed twice masks
-    // the same rows as a key listed once
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(1)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    val (frontierDelta, tombstones) = try {
-      val fTombstones = Future(store.writeDeletes("seen", epoch,
-        canonical.map(u => (u, SeenSet.bucketOfUrl(u, nb))).toDF("url", "bucket")))
-      (store.writeTable("frontier-d", epoch, newCands.coalesce(cfg.shufflePartitions)),
-       Await.result(fTombstones, Duration.Inf))
-    } finally pool.shutdown()
+    // the tombstones skip the distinct's shuffle
+    val written = concurrently(Seq(
+      () => Seq("frontier" -> snap.append("frontier",
+        store.writeTable("frontier-d", epoch, newCands.coalesce(cfg.shufflePartitions)))),
+      SeenSet.forget(spark, store, snap, epoch, canonical, cfg.seen)))
     val requested = obs.get("n").asInstanceOf[Long]
-    val tables = snap.tables ++ Map(
-      "frontier" -> snap.append("frontier", frontierDelta),
-      "seen" -> snap.append("seen", tombstones))
     val counters = snap.counters +
       ("frontierSize" -> (snap.counters.getOrElse("frontierSize", 0L) + requested))
-    store.commit(epoch, tables, counters)
+    store.commit(epoch, snap.tables ++ written.flatten, counters)
     if (cfg.retainSnapshots > 0) store.expire(cfg.retainSnapshots)
     RecrawlDeleteResult(requested, epoch)
+  }
+
+  /** Runs independent table writes concurrently, one thread each, and
+    * returns their results in order. A failure is rethrown only once every
+    * write has ended: the caller releases the frames the writes read on
+    * the way out, and a write still running must not lose them. */
+  private def concurrently[T](writes: Seq[() => T]): Seq[T] = {
+    import java.util.concurrent.{Callable, ExecutionException, Executors}
+    import scala.util.{Failure, Success, Try}
+    val pool = Executors.newFixedThreadPool(writes.length)
+    try {
+      val running = writes.map(w => pool.submit(new Callable[T] { def call(): T = w() }))
+      running.map(f => Try(f.get())).map {
+        case Success(v) => v
+        case Failure(e: ExecutionException) => throw e.getCause
+        case Failure(e) => throw e
+      }
+    } finally pool.shutdown()
   }
 
   /** Run epochs until the frontier drains or maxEpochs is hit. */

@@ -99,8 +99,10 @@ object Multimodal {
     * than the payload delivers — a partial crawl download) is detected
     * when the stream ends early and re-decoded against the ACTUAL frame
     * count, so windows stay exact over the real audio and duration
-    * reports delivered — not phantom — frames (pre-r4 behavior). Streams
-    * that declare no frame length fall back to a capped buffered read. */
+    * reports delivered — not phantom — frames (pre-r4 behavior). A stream
+    * that declares no frame length is read as if it declared the cap: the
+    * same short-read re-decode measures its real frame count, which is
+    * also its duration. */
   def decodeAudio(bytes: Array[Byte], maxBytes: Long = 256L << 20): Option[AudioInfo] =
     if (bytes == null || bytes.isEmpty) None
     else
@@ -113,31 +115,22 @@ object Multimodal {
           return Some(AudioInfo(f.getSampleRate.toInt, ch, 0L, new Array[Float](16)))
         val declared = pcm.getFrameLength // container frame count; may be -1
         val capFrames = math.max(1L, maxBytes / frameSize)
-        if (declared < 0) {
-          // no declared length: capped buffered read (rare path), then
-          // frame count from what arrived
-          val data = pcm.readNBytes(math.min(maxBytes, (Int.MaxValue - 8).toLong).toInt)
-          val n = data.length / frameSize
-          if (n == 0)
-            return Some(AudioInfo(f.getSampleRate.toInt, ch, 0L, new Array[Float](16)))
-          return Some(rmsWindows(data, n, n, f))
-        }
         // window geometry needs the processed frame count up front
-        val nFrames = math.min(declared, capFrames)
+        val nFrames = if (declared < 0) capFrames else math.min(declared, capFrames)
         if (nFrames == 0)
           return Some(AudioInfo(f.getSampleRate.toInt, ch, 0L, new Array[Float](16)))
         val (feats, framesRead) = streamWindows(pcm, nFrames, f)
         if (framesRead < nFrames) {
-          // truncated payload: geometry was wrong (trailing windows empty,
-          // real audio squeezed into the early ones) — one extra decode
-          // against the ACTUAL count, only for corrupt inputs
+          // short read (a truncated payload, or no declared length):
+          // geometry was wrong (trailing windows empty, real audio squeezed
+          // into the early ones) — one extra decode against the ACTUAL count
           if (framesRead == 0)
             return Some(AudioInfo(f.getSampleRate.toInt, ch, 0L, new Array[Float](16)))
           val (feats2, _) = streamWindows(openPcm(bytes), framesRead, f)
           val durMs = math.round(framesRead * 1000.0 / f.getSampleRate)
           return Some(AudioInfo(f.getSampleRate.toInt, ch, durMs, feats2))
         }
-        val durMs = math.round(declared * 1000.0 / f.getSampleRate)
+        val durMs = math.round((if (declared < 0) framesRead else declared) * 1000.0 / f.getSampleRate)
         Some(AudioInfo(f.getSampleRate.toInt, ch, durMs, feats))
       } catch { case _: Exception => None }
 
@@ -202,37 +195,6 @@ object Multimodal {
       if (n > 0) off += n
     }
     off
-  }
-
-  /** The buffered-fallback feature pass (no declared frame length). */
-  private def rmsWindows(data: Array[Byte], nFrames: Int, totalFrames: Long,
-                         f: AudioFormat): AudioInfo = {
-    val ch = f.getChannels
-    val frameSize = f.getFrameSize
-    val big = f.isBigEndian
-    val sumSq = new Array[Double](16)
-    val cnt = new Array[Long](16)
-    var fr = 0
-    while (fr < nFrames) {
-      val w = (fr * 16L / nFrames).toInt
-      var mix = 0.0
-      var c = 0
-      while (c < ch) {
-        val o = fr * frameSize + c * 2
-        val s =
-          if (big) ((data(o) << 8) | (data(o + 1) & 0xff)).toShort
-          else ((data(o + 1) << 8) | (data(o) & 0xff)).toShort
-        mix += s / 32768.0
-        c += 1
-      }
-      mix /= ch
-      sumSq(w) += mix * mix
-      cnt(w) += 1
-      fr += 1
-    }
-    val feats = Array.tabulate(16)(w =>
-      if (cnt(w) == 0) 0.0f else math.sqrt(sumSq(w) / cnt(w)).toFloat)
-    AudioInfo(f.getSampleRate.toInt, ch, math.round(totalFrames * 1000.0 / f.getSampleRate), feats)
   }
 
   /** STUB decode for video: a real implementation would decode /

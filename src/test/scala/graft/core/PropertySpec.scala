@@ -285,14 +285,18 @@ class PropertySpec extends AnyFunSuite {
     assert(Rewriter.resourceText(ok) == "" + 0x201c.toChar + 0x201d.toChar)
   }
 
+  /** The crawl's robots gate over a parsed rule set. */
+  private def allowed(r: graft.frontier.RobotsRules, path: String): Boolean =
+    graft.frontier.RobotsRules.allowedPath(r.disallow, r.allow, path)
+
   test("robots longest-match semantics") {
     import graft.frontier.RobotsRules
     val r = RobotsRules(Vector("/private", "/tmp"), Vector("/private/ok"), None)
-    assert(!r.allowed("/private/x"))
-    assert(r.allowed("/private/ok/page.html"))
-    assert(r.allowed("/public"))
-    assert(!r.allowed("/tmp"))
-    assert(RobotsRules(Vector(""), Vector.empty, None).allowed("/anything"))
+    assert(!allowed(r, "/private/x"))
+    assert(allowed(r, "/private/ok/page.html"))
+    assert(allowed(r, "/public"))
+    assert(!allowed(r, "/tmp"))
+    assert(allowed(RobotsRules(Vector(""), Vector.empty, None), "/anything"))
   }
 
   test("robots.txt parsing: groups, agents, crawl-delay") {
@@ -310,9 +314,9 @@ class PropertySpec extends AnyFunSuite {
     assert(r.disallow == Vector("/cgi-bin/"))
     assert(r.allow == Vector("/cgi-bin/public"))
     assert(r.crawlDelay.contains(2.5))
-    assert(!r.allowed("/cgi-bin/secret"))
-    assert(r.allowed("/cgi-bin/public/x"))
+    assert(!allowed(r, "/cgi-bin/secret"))
+    assert(allowed(r, "/cgi-bin/public/x"))
     val evil = graft.frontier.RobotsRules.parse(body, "evilbot")
-    assert(!evil.allowed("/anything"))
+    assert(!allowed(evil, "/anything"))
   }
 }

@@ -284,6 +284,6 @@ class SeenSetSpec extends AnyFunSuite with BeforeAndAfterAll {
     val alw = Vector("/private/ok", "/a")
     val rules = RobotsRules(dis, alw, None)
     for (p <- Seq("/", "/private", "/private/ok/x", "/a/b/c", "/a/c", "/tmp/x", "", "/x"))
-      assert(RobotsRules.allowedPath(dis, alw, p) == rules.allowed(p), s"path $p")
+      assert(RobotsRules.allowedPath(dis, alw, p) == RobotsReference.allowed(rules, p), s"path $p")
   }
 }

@@ -7,7 +7,7 @@ import java.nio.file.Files
 
 import graft.data.SyntheticCorpus
 import graft.store.{FrontierStore, ParquetSnapshotStore, Snapshot}
-import graft.frontier.{RobotsRules, Scheduler, SeenSet}
+import graft.frontier.{RobotsReference, RobotsRules, Scheduler, SeenSet}
 import graft.model.Candidate
 import graft.core.{HtmlTok, Mime, PyUrl, Rewriter}
 import graft.sql.ExtractionOps
@@ -177,14 +177,14 @@ class CrawlJobSpec extends AnyFunSuite with BeforeAndAfterAll {
       val unseen = cands.filter(c => c.retries > 0 || !seen.contains(c.url))
       val gated = unseen.filter { c =>
         robots.get(c.host) match {
-          case Some((dis, _)) => RobotsRules(dis, Vector.empty, None).allowed(pathOf(c.url))
+          case Some((dis, _)) => RobotsReference.allowed(RobotsRules(dis, Vector.empty, None), pathOf(c.url))
           case None => true
         }
       }
       val blocked = unseen.filterNot(gated.contains)
       val scheduled = gated.groupBy(_.host).toVector.flatMap { case (h, cs) =>
         val budget = robots.get(h).flatMap(_._2) match {
-          case Some(d) => math.max(1, math.min(cfg.sched.perHostBudget, (cfg.epochWindowSec / d).toInt))
+          case Some(d) => math.max(1, math.min(cfg.sched.perHostBudget, (CrawlJob.EpochWindowSec / d).toInt))
           case None    => cfg.sched.perHostBudget
         }
         cs.sortBy(c => (-c.priority, c.url)).take(budget)
@@ -202,7 +202,7 @@ class CrawlJobSpec extends AnyFunSuite with BeforeAndAfterAll {
         val html = pages(c.url)
         for (link <- referenceOutlinks(html, c.url);
              cu <- PyUrl.canonicalize(link)) {
-          addCand(Candidate(cu, hostOf(cu), c.priority * cfg.linkPriorityDecay, epoch, 0))
+          addCand(Candidate(cu, hostOf(cu), c.priority * CrawlJob.LinkPriorityDecay, epoch, 0))
         }
       }
       // drop anything scheduled this epoch from frontier (just added links may collide)
@@ -716,6 +716,57 @@ class CrawlJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(versions() == before, "a delete must not write a seen data segment")
     val seenNow = store.readTable(spark, store.latest().get, "seen").select("url").as[String].collect()
     assert(victims.forall(v => !seenNow.contains(v)), "the victims must read as unseen")
+  }
+
+  test("a failed delete write surfaces only once the tombstone write has finished") {
+    import spark.implicits._
+    val (store, _, _, victims) = deleteFixture()
+    val epochBefore = store.latest().get.epoch
+    // the real store, except that the frontier delta write fails at once
+    // and the tombstone write, slowed down, records that it finished
+    val tombstonesWritten = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val failing = new FrontierStore {
+      def writeTable(name: String, epoch: Long, df: DataFrame, partitionBy: Seq[String]): String =
+        if (name == "frontier-d") throw new java.io.IOException("frontier delta write failed")
+        else if (name != "seen-del") store.writeTable(name, epoch, df, partitionBy)
+        else {
+          Thread.sleep(500)
+          val path = store.writeTable(name, epoch, df, partitionBy)
+          tombstonesWritten.set(true)
+          path
+        }
+      def commit(epoch: Long, tables: Map[String, String], counters: Map[String, Long]): Unit =
+        store.commit(epoch, tables, counters)
+      def latest(): Option[Snapshot] = store.latest()
+      def readTable(spark: SparkSession, snap: Snapshot, name: String): DataFrame =
+        store.readTable(spark, snap, name)
+      def expire(retain: Int): (Int, Int) = store.expire(retain)
+    }
+    val err = intercept[java.io.IOException](
+      CrawlJob.recrawlWithDelete(spark, failing, victims.toDS(), deleteCfg))
+    assert(err.getMessage == "frontier delta write failed")
+    assert(tombstonesWritten.get, "the failure surfaced while the tombstone write was still running")
+    assert(store.latest().get.epoch == epochBefore, "the failed delete must not commit")
+  }
+
+  test("lineage accounts for every fetch: per epoch, its fetched sum is the manifest counter") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{coalesce, col, lit, sum}
+    val store = freshStore()
+    val pages = CrawlJob.preparePages(SyntheticCorpus.pages(spark, seed, N, 8).toDF())
+    val robots = SyntheticCorpus.robots(spark, seed).toDF()
+    CrawlJob.init(spark, store, SyntheticCorpus.seeds(spark, seed, N, 20), cfg)
+    // the second epoch also asks for urls no page has: fetch misses
+    val misses = Seq("https://nohost-a.example/x.html", "https://nohost-b.example/y.html").toDS()
+    for (recrawl <- Seq(None, Some(misses), None)) {
+      val r = CrawlJob.runEpoch(spark, store, pages, robots, cfg, recrawl)
+      val snap = store.latest().get
+      val lineageFetched = store.readTable(spark, snap, "lineage").filter(col("epoch") === snap.epoch)
+        .select(coalesce(sum(col("fetched")), lit(0L))).as[Long].head()
+      assert(snap.counters("fetched") > 0 && snap.counters("fetched") == r.fetched)
+      assert(lineageFetched == snap.counters("fetched"),
+        s"epoch ${snap.epoch}: lineage fetched $lineageFetched, manifest ${snap.counters("fetched")}")
+    }
   }
 
   test("recrawlWithDelete then a non-compacting epoch: resume over the delete segment is exact") {
